@@ -2,11 +2,13 @@
 
 - ``QueryOracle``: each query's ``__spark_entry__.oracle_sql()`` entry,
   run by DuckDB over the same parquet files; results are cached per
-  input digest and SQL text. Cells are compared bit-exactly: floats by their IEEE
-  bytes, decimals as exact digits, no rounding.
+  input digest and SQL text. Cells are compared bit-exactly by the cell
+  rule of ``tools/strict_parity.py``: floats by their IEEE bytes, decimals
+  as exact digits, no rounding.
 - ``DailyOracle``: the fixture CTEs of ``__spark_entry__`` with the
-  processing date pinned, run by DuckDB, against the partitions one
-  daily cycle wrote, plus the properties the daily output must have.
+  processing date pinned, run by DuckDB (cached per input digest, SQL
+  text and day), against the partitions one daily cycle wrote, plus the
+  properties the daily output must have.
 - ``check_curation``: the curation ledger and curated shards against
   the document count and the pipeline's own observed counts.
 
@@ -16,44 +18,24 @@ Every check raises ``CheckFailed`` with a one-line reason.
 from __future__ import annotations
 
 import datetime as dt
-import decimal
 import glob
 import hashlib
-import math
 import os
 import pickle
-import struct
 
 import duckdb
+
+from tools.strict_parity import _rows
 
 
 class CheckFailed(Exception):
     pass
 
 
-def _cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return ("b", v)
-    if isinstance(v, float):
-        return ("f", "nan") if math.isnan(v) else ("f", struct.pack("<d", v))
-    if isinstance(v, decimal.Decimal):
-        return ("d", str(v.normalize()) if v != 0 else "0")
-    if isinstance(v, (dt.datetime, dt.date)):
-        return ("t", v.isoformat())
-    if isinstance(v, (list, tuple)):
-        return tuple(_cell(x) for x in v)
-    if isinstance(v, (bytes, bytearray)):
-        return ("y", bytes(v))
-    return v
-
-
 def canonical(cols: list[str], rows) -> tuple[list[str], list[tuple]]:
-    """Columns sorted by name; rows as sorted tuples of exact cells."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_cell(r[i]) for i in order) for r in rows]
-    return sorted(cols), sorted(out, key=lambda t: tuple(repr(x) for x in t))
+    """Columns sorted by name; rows as sorted tuples of exact cells, as
+    ``tools/strict_parity.py`` compares them."""
+    return sorted(cols), _rows(cols, rows)
 
 
 def compare(got: tuple[list[str], list[tuple]], want: tuple[list[str], list[tuple]]) -> None:
@@ -82,31 +64,43 @@ def _connect(sf_dir: str, tables: list[str]) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def _cached(connect, sql: str, path: str):
+    """DuckDB's canonical rows for ``sql``, kept in the pickle ``path``
+    (named by the input digest and the SQL text) once computed."""
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            return pickle.load(f)
+    rel = connect().sql(sql)
+    want = canonical(rel.columns, rel.fetchall())
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        pickle.dump(want, f)
+    os.replace(tmp, path)
+    return want
+
+
+def _key(sql: str) -> str:
+    return hashlib.sha256(sql.encode()).hexdigest()[:16]
+
+
 class QueryOracle:
     def __init__(self, sf_dir: str, tables: list[str], cache_dir: str, oracle_sql: dict):
         self.sf_dir, self.tables, self.cache_dir = sf_dir, tables, cache_dir
         self.sql = oracle_sql
         self._con = None
 
+    def _connect(self):
+        if self._con is None:
+            self._con = _connect(self.sf_dir, self.tables)
+        return self._con
+
     def expected(self, name: str):
         """DuckDB's rows for ``name``, cached per input digest and SQL text."""
         if name not in self.sql:
             raise CheckFailed(f"no oracle_sql entry for {name}")
-        key = hashlib.sha256(self.sql[name].encode()).hexdigest()[:16]
-        path = os.path.join(self.cache_dir, f"{name}-{key}.pkl")
-        if os.path.exists(path):
-            with open(path, "rb") as f:
-                return pickle.load(f)
-        if self._con is None:
-            self._con = _connect(self.sf_dir, self.tables)
-        rel = self._con.sql(self.sql[name])
-        want = canonical(rel.columns, rel.fetchall())
-        os.makedirs(self.cache_dir, exist_ok=True)
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "wb") as f:
-            pickle.dump(want, f)
-        os.replace(tmp, path)
-        return want
+        sql = self.sql[name]
+        return _cached(self._connect, sql, os.path.join(self.cache_dir, f"{name}-{_key(sql)}.pkl"))
 
 
 _PARAMS = "params AS (SELECT MAX(sale_date) AS d FROM sales)"
@@ -116,8 +110,9 @@ class DailyOracle:
     """DuckDB's answer for one processing day of the daily DAG, compared
     with the partitions that day wrote under ``out_root``."""
 
-    def __init__(self, sf_dir: str, oracle_sql: dict):
+    def __init__(self, sf_dir: str, cache_dir: str, oracle_sql: dict):
         self.con = _connect(sf_dir, ["lineitem", "part"])
+        self.cache_dir = cache_dir
         self.alert_expected = None
         self.sql = {k: oracle_sql[k] for k in ("stage_sales", "dim_products", "reconcile")}
         for k, q in self.sql.items():
@@ -129,8 +124,11 @@ class DailyOracle:
         return canonical(rel.columns, rel.fetchall())
 
     def _oracle(self, name: str, day: dt.date, drop_date: bool = True):
+        """DuckDB's rows for one day, cached per input digest, SQL text
+        and day: the seeds' day windows overlap from run to run."""
         q = self.sql[name].replace(_PARAMS, f"params AS (SELECT DATE '{day.isoformat()}' AS d)")
-        return self._rows(f"SELECT * EXCLUDE (date_key) FROM ({q})" if drop_date else q)
+        sql = f"SELECT * EXCLUDE (date_key) FROM ({q})" if drop_date else q
+        return _cached(lambda: self.con, sql, os.path.join(self.cache_dir, f"{name}-{day}-{_key(sql)}.pkl"))
 
     def _files(self, path: str, want):
         """The rows of the parquet files in ``path``; a partition that was

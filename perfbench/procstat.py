@@ -9,6 +9,9 @@ import threading
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+#: PeakRss samples every SAMPLE_S seconds and re-lists the tree every TREE_S
+SAMPLE_S = 0.2
+TREE_S = 2.0
 
 
 def _stat(pid: int) -> list[str] | None:
@@ -61,23 +64,22 @@ def rss_bytes(pids: list[int]) -> int:
 
 
 class PeakRss:
-    """Samples the tree's summed RSS every ``interval`` seconds on a
+    """Samples the tree's summed RSS every ``SAMPLE_S`` seconds on a
     daemon thread; ``peak`` is the largest sum seen."""
 
-    def __init__(self, interval: float = 0.2, refresh: float = 2.0):
+    def __init__(self) -> None:
         self.peak = 0
-        self._interval, self._refresh = interval, refresh
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         pids, age = tree(), 0.0
         while not self._stop.is_set():
-            if age >= self._refresh:
+            if age >= TREE_S:
                 pids, age = tree(), 0.0
             self.peak = max(self.peak, rss_bytes(pids))
-            self._stop.wait(self._interval)
-            age += self._interval
+            self._stop.wait(SAMPLE_S)
+            age += SAMPLE_S
 
     def __enter__(self) -> "PeakRss":
         self._thread.start()

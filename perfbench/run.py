@@ -1,6 +1,6 @@
 """Closed-loop benchmark of the engine, one client in one fresh process.
 
-    python3 perfbench/run.py --workload daily_reconcile --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload daily_reconcile --seed 1 --seconds 15 --trace 0
 
 Each run builds a Spark session on ``local[nproc]``, warms up, then runs
 whole **cycles** -- one pass over the workload's fixed list of
@@ -37,6 +37,22 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 sys.path.insert(1, ROOT)
 
+
+def log(*a) -> None:
+    print(*a, file=sys.stderr, flush=True)
+
+
+def require_program() -> None:
+    """Fail fast, before any build, when the engine is not beside us."""
+    for name in ("__spark_entry__.py", "tools/strict_parity.py",
+                 "retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark/__init__.py"):
+        if not os.path.exists(os.path.join(ROOT, name)):
+            log(f"perfbench: {name} not found under {ROOT}; nothing to measure")
+            sys.exit(3)
+
+
+require_program()
+
 import checks  # noqa: E402
 import datagen  # noqa: E402
 import procstat  # noqa: E402
@@ -45,11 +61,17 @@ import tracing  # noqa: E402
 DRIVER_MEM = "1g"
 DAY_WINDOW = 64  # the processing days are drawn from the input's last 64
 
-QUERY_OPS = ["text_stats", "pricing_summary", "copurchase_triangles"]
+#: one query per layer: functions.text, the star schema, operators.similarity
+#: (the LSH broadcast) and operators.graph's checkpointed loop
+QUERY_OPS = ["text_stats", "pricing_summary", "embed_neardup_lsh", "pagerank"]
+#: operations that fail their check on every run because of a known fault
+#: in the engine (README.md, "Known failing operation"); any other failed
+#: operation makes the run incorrect
+KNOWN_FAILING = {"text_stats"}
 #: workload -> (operations in a cycle, warm-up cycles)
 WORKLOADS = {
-    "daily_reconcile": (["stage", "dims", "reconcile", "alert"], 4),
-    "query_mix": (["curation", *QUERY_OPS], 4),
+    "daily_reconcile": (["stage", "dims", "reconcile", "alert"], 5),
+    "query_mix": (["curation", *QUERY_OPS], 3),
 }
 
 END_TO_END = {"setup_s": "s", "cycle_s": "s", "cpu_s_per_cycle": "s", "peak_rss_mb": "MB",
@@ -64,10 +86,6 @@ PER_LAYER = (
     | {f"spark.{k}": u for k, u in tracing.SPARK_METRICS.items()}
     | {"trace.cycle_s": "s", "trace.untraced_cycle_s": "s", "trace.overhead_s": "s"}
 )
-
-
-def log(*a) -> None:
-    print(*a, file=sys.stderr, flush=True)
 
 
 def data_files(root: str) -> dict[str, int]:
@@ -121,7 +139,9 @@ class Run:
         )
 
         self.sf = os.path.join(self.data, "kcopies")
-        self.oracle = checks.DailyOracle(self.sf, self.entry.oracle_sql())
+        digest = self.manifest["digests"]["kcopies"][:16]
+        self.oracle = checks.DailyOracle(self.sf, os.path.join(self.data, f"oracle-{digest}"),
+                                         self.entry.oracle_sql())
         self.pipeline = run_daily_pipeline
         last = dt.date.fromisoformat(self.manifest["last_sale_date"])
         off = self.rng.randrange(DAY_WINDOW)
@@ -249,7 +269,7 @@ class Run:
         return wall, cpu, bad, layer, time.perf_counter() - t
 
 
-def parse_args(argv=None):
+def parse_args():
     ap = argparse.ArgumentParser(description="Closed-loop engine benchmark; see README.md.")
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, required=True)
@@ -257,25 +277,15 @@ def parse_args(argv=None):
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, default=0.01,
                     help="input scale; the benchmark's figures are for the default")
-    return ap.parse_args(argv)
-
-
-def require_program() -> None:
-    """Fail fast, before any build, when the engine is not beside us."""
-    for name in ("__spark_entry__.py",
-                 "retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark/__init__.py"):
-        if not os.path.exists(os.path.join(ROOT, name)):
-            log(f"perfbench: {name} not found under {ROOT}; nothing to measure")
-            sys.exit(3)
+    return ap.parse_args()
 
 
 def median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
-def main(argv=None) -> int:
-    args = parse_args(argv)
-    require_program()
+def main() -> int:
+    args = parse_args()
     work = os.path.join(HERE, ".work", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     for sub in ("local", "tmp", "out"):
@@ -295,21 +305,22 @@ def main(argv=None) -> int:
                 wall, _, bad, _, c = run.cycle(k, traced=False)
                 run.failed_ops |= bad
                 check_s += c
-                log(f"warm-up cycle {k}: {wall:.3f} s, failed {sorted(bad)}")
+                log(f"warm-up cycle {k}: {wall:.3f} s, checks {c:.2f} s, failed {sorted(bad)}")
             setup_s = time.time() - T0 - run.build_s - check_s
             walls, cpus, bads, layers = [], [], [], []
             k = run.n_warm
             while not walls or sum(walls) < args.seconds:
                 on = bool(args.trace) and (k - run.n_warm) % 2 == 0
-                wall, cpu, bad, layer, _ = run.cycle(k, traced=on)
+                wall, cpu, bad, layer, c = run.cycle(k, traced=on)
                 walls.append(wall)
                 cpus.append(cpu)
                 bads.append(bad)
                 layers.append((k, on, wall, layer))
-                log(f"cycle {k}: {wall:.3f} s, cpu {cpu:.2f} s, failed {sorted(bad)}")
+                log(f"cycle {k}: {wall:.3f} s, cpu {cpu:.2f} s, checks {c:.2f} s, failed {sorted(bad)}")
                 k += 1
         run.check_collected()
         n_cycles = len(walls)
+        failed_ops = run.failed_ops.union(*bads)
         failed = sum(len(bad | run.failed_ops) for bad in bads)
         attempted = len(run.ops) * n_cycles
         if args.trace:
@@ -324,9 +335,9 @@ def main(argv=None) -> int:
                 "files_per_cycle": median([lay["sources.files_written"] for *_, lay in layers]),
             }
             metrics = {m: {"value": v, "unit": END_TO_END[m]} for m, v in metrics.items()}
-        log(f"{args.workload}: {n_cycles} cycles, failed ops {sorted(run.failed_ops)}")
-        print(json.dumps({"correct": True, "attempted": attempted, "failed": failed,
-                          "metrics": metrics}))
+        log(f"{args.workload}: {n_cycles} cycles, failed ops {sorted(failed_ops)}")
+        print(json.dumps({"correct": failed_ops <= KNOWN_FAILING, "attempted": attempted,
+                          "failed": failed, "metrics": metrics}))
         return 0
     finally:
         if run is not None:

@@ -7,8 +7,9 @@ times per set with seeds 1..N (set A) and 101..100+N (set B), one run at
 a time. For each end-to-end metric and workload it prints the median and
 quartiles of each set, the spread (interquartile range over median) of
 each set, and whether the medians and the spreads keep within the
-metric's bound. It also checks that the share of failed operations is
-the same in every run. Exits 1 if anything disagrees.
+metric's bound (``setup_s`` only on its medians, see README.md). It also
+checks that the share of failed operations is the same in every run.
+Exits 1 if anything disagrees.
 """
 
 from __future__ import annotations
@@ -43,14 +44,13 @@ def main() -> int:
         bench = json.load(f)
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--sets", type=int, choices=(1, 2), default=2)
     ap.add_argument("--workloads", nargs="*", default=[w["name"] for w in bench["workloads"]])
     args = ap.parse_args()
 
     ok = True
     for w in args.workloads:
         sets = []
-        for base in (1, 101)[: args.sets]:
+        for base in (1, 101):
             runs = []
             for seed in range(base, base + args.runs):
                 r = one_run(w, seed, bench["run_seconds"], bench["command"])
@@ -72,16 +72,18 @@ def main() -> int:
                 q1, med, q3 = quartiles([r["metrics"][name]["value"] for r in runs])
                 spread = (q3 - q1) / med
                 meds.append(med)
+                # setup_s is held to its bound only between the two medians:
+                # one set-up per run is a single sample, and its spread is
+                # printed but not gated
                 flag = "" if name == "setup_s" or spread <= bound else "  <-- spread above bound"
                 ok &= not flag
                 print(f"{name:18s} {'AB'[i]:3s} {q1:10.4f} {med:10.4f} {q3:10.4f} {spread:7.3f}  {bound}{flag}")
-            if len(meds) == 2:
-                worse = (meds[1] - meds[0]) / meds[0]
-                if m["better"] == "higher":
-                    worse = -worse
-                agree = worse <= bound
-                ok &= agree
-                print(f"{'':18s} B vs A: {worse:+.3f} of median -> {'agree' if agree else 'DISAGREE'}")
+            worse = (meds[1] - meds[0]) / meds[0]
+            if m["better"] == "higher":
+                worse = -worse
+            agree = worse <= bound
+            ok &= agree
+            print(f"{'':18s} B vs A: {worse:+.3f} of median -> {'agree' if agree else 'DISAGREE'}")
         print()
     return 0 if ok else 1
 
