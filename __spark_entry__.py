@@ -41,87 +41,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Ordered so the LEAST-RECENTLY driver-attested entries come FIRST.
 
     The driver's CORRECTNESS artifact records only the first 50
-    entries, so ordering is part of the contract. Round-15 rotation:
-    CORRECTNESS_r14 came back 50/50 green and the never-attested
-    backlog hit ZERO, so this is the first PURE staleness rotation --
-    the window holds the 50 least-recently-attested oracle-paired
-    entries (the 7 whose standing attestation is r5, then the stalest
-    43 of the 56-entry r6 cohort in their existing relative order; the
-    remaining r6 rows sit just past the boundary and mechanically lead
-    the round-16 queue). Behind the window, every previously-attested
-    paired entry in staleness order (freshest last), then the
-    rows-only entries whose one-time driver evidence is already on
-    file. All post-window entries stay pinned value-level by
-    tests/test_oracle_parity.py and bit-exactly by
-    tools/strict_parity.py.
+    entries, so ordering is part of the contract. Rotation after
+    CORRECTNESS_r15 (50/50 green, never-attested backlog still ZERO):
+    a pure staleness rotation -- the window holds the 50
+    least-recently-attested oracle-paired entries (the 6 whose
+    standing attestation is r6, then the stalest 44 of the 49-entry
+    r7 cohort in their existing relative order; the remaining 5 r7
+    rows sit just past the boundary and mechanically lead the next
+    queue). Behind the window, every previously-attested paired entry
+    in staleness order (freshest last), then the rows-only entries
+    whose one-time driver evidence is already on file. The order is a
+    stable sort of the paired entries by their last green round from
+    ``tools/rotation_check.last_attested()``. All post-window entries
+    stay pinned value-level by tests/test_oracle_parity.py and
+    bit-exactly by tools/strict_parity.py.
     """
     return {
-        # --- round-15 window (50 slots): the never-attested backlog
-        # hit ZERO in r14, so this is the first PURE staleness
-        # rotation -- the 50 least-recently-attested oracle-paired
-        # entries lead (7 last green in r5, then the stalest 43 of
-        # the 56-entry r6 cohort in their standing order; the
-        # remaining r6 rows slip just past the boundary and lead the
-        # next round's queue). Behind the window: every other paired
-        # entry in staleness order (freshest last), then the 8
-        # rows-only entries whose one-time driver evidence is on
-        # file. Recomputed by tools/rotation_check.py from the
-        # CORRECTNESS_r*.json artifacts; pinned by
-        # tests/test_rotation_contract.py. ------------------------------
-        # last green: r5
-        "dedup_exact": Q.q_dedup_exact,
-        "doc_chunks": Q.q_doc_chunks,
-        "simhash": Q.q_simhash,
-        "simhash_neardup": Q.q_simhash_neardup,
-        "jaccard_pairs": Q.q_jaccard_pairs,
-        "dedup_groups": Q.q_dedup_groups,
-        "multimodal_features": Q.q_multimodal_features,
+        # --- attestation window (50 slots): the 6 entries last green
+        # in r6, then the stalest 44 of the 49-entry r7 cohort; the
+        # remaining 5 r7 rows lead the next queue (see the docstring;
+        # pinned by tests/test_rotation_contract.py) -------------------
         # last green: r6
-        "lm_score": Q.q_lm_score,
-        "top_tokens": Q.q_top_tokens,
-        "corpus_filter": Q.q_corpus_filter,
-        "doclen_histogram": Q.q_doclen_histogram,
-        "sim_topk": Q.q_sim_topk,
-        "label_centroid_sim": Q.q_label_centroid_sim,
-        "embed_neardup": Q.q_embed_neardup,
-        "rolling_fingerprint": Q.q_rolling_fingerprint,
-        "sku_moving_avg": Q.q_sku_moving_avg,
-        "token_budget": Q.q_token_budget,
-        "copurchase_pairs": Q.q_copurchase_pairs,
-        "name_match_candidates": Q.q_name_match_candidates,
-        "stock_twa": Q.q_stock_twa,
-        "brand_trend": Q.q_brand_trend,
-        "winsorized_stats": Q.q_winsorized_stats,
-        "dau_bitmap_merge": Q.q_dau_bitmap_merge,
-        "repeated_spans": Q.q_repeated_spans,
-        "token_dist_drift": Q.q_token_dist_drift,
-        "tfidf_keywords": Q.q_tfidf_keywords,
-        "epoch_shuffle": Q.q_epoch_shuffle,
-        "k_anonymity": Q.q_k_anonymity,
-        "curation_summary": Q.q_curation_summary,
-        "events_sliding": Q.q_events_sliding,
-        "funnel_latency": Q.q_funnel_latency,
-        "events_variant": Q.q_events_variant,
-        "audio_meta": Q.q_audio_meta,
-        "frame_meta": Q.q_frame_meta,
-        "join_view_merge": Q.q_join_view_merge,
-        "dedup_incremental": Q.q_dedup_incremental,
-        "table_time_travel": Q.q_table_time_travel,
-        "table_cdf": Q.q_table_cdf,
-        "table_history": Q.q_table_history,
-        "abc_classification": Q.q_abc_classification,
-        "reorder_points": Q.q_reorder_points,
-        "user_state_history": Q.q_user_state_history,
-        "abc_xyz_matrix": Q.q_abc_xyz_matrix,
-        "zorder_curve": Q.q_zorder_curve,
-        "part_hierarchy_rollup": Q.q_part_hierarchy_rollup,
-        "stock_gap_fill": Q.q_stock_gap_fill,
-        "table_after_dml": Q.q_table_after_dml,
-        "key_skew_profile": Q.q_key_skew_profile,
-        "incremental_hourly_merge": Q.q_incremental_hourly_merge,
-        "embed_contamination": Q.q_embed_contamination,
-        # --- past the attestation boundary: previously-attested
-        # paired entries, staleness order (freshest last) ---------
         "contamination_hashed": Q.q_contamination_hashed,
         "pii_scan": Q.q_pii_scan,
         "mixture_weights": Q.q_mixture_weights,
@@ -173,6 +113,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dim_scd2": Q.q_dim_scd2,
         "sales_rollup": Q.q_sales_rollup,
         "sales_cube": Q.q_sales_cube,
+        # --- past the attestation boundary: previously-attested
+        # paired entries, staleness order (freshest last) ---------
         "cust_no_orders": Q.q_cust_no_orders,
         "parts_ordered_semi": Q.q_parts_ordered_semi,
         "customer_setops": Q.q_customer_setops,
@@ -229,6 +171,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "evolving_schema": Q.q_evolving_schema,
         "stock_asof_forward": Q.q_stock_asof_forward,
         "stage_sales": Q.q_stage_sales,
+        # last green: r9
         "price_change_events": Q.q_price_change_events,
         "single_source_risk": Q.q_single_source_risk,
         "seasonal_naive_backtest": Q.q_seasonal_naive_backtest,
@@ -279,6 +222,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weekly_zchart": Q.q_weekly_zchart,
         "nation_segment_grid": Q.q_nation_segment_grid,
         "type_discount_profile": Q.q_type_discount_profile,
+        # last green: r10
         "purchases_in_promo_windows": Q.q_purchases_in_promo_windows,
         "cross_region_trade_share": Q.q_cross_region_trade_share,
         "referential_integrity_audit": Q.q_referential_integrity_audit,
@@ -329,6 +273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "brand_volume_value_mix": Q.q_brand_volume_value_mix,
         "customer_priority_breadth": Q.q_customer_priority_breadth,
         "brand_copurchase_pairs": Q.q_brand_copurchase_pairs,
+        # last green: r11
         "image_dims_jpeg": Q.q_image_dims_jpeg,
         "copurchase_degree_hist": Q.q_copurchase_degree_hist,
         "copurchase_component_sizes": Q.q_copurchase_component_sizes,
@@ -364,6 +309,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kmeans_iteration": Q.q_kmeans_iteration,
         "embedding_outliers": Q.q_embedding_outliers,
         "pagerank": Q.q_pagerank,
+        # last green: r12
         "nation_discount_gap": Q.q_nation_discount_gap,
         "cohort_retention_triangle": Q.q_cohort_retention_triangle,
         "click_to_purchase_latency": Q.q_click_to_purchase_latency,
@@ -414,6 +360,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "copurchase_kcore_hist": Q.q_copurchase_kcore_hist,
         "pq_adc_topk": Q.q_pq_adc_topk,
         "int8_cosine_topk": Q.q_int8_cosine_topk,
+        # last green: r13
         "supplier_cosupply_pairs": Q.q_supplier_cosupply_pairs,
         "brand_quantity_mode": Q.q_brand_quantity_mode,
         "sku_seasonality_strength": Q.q_sku_seasonality_strength,
@@ -464,6 +411,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repeated_part_lines_audit": Q.q_repeated_part_lines_audit,
         "hourly_value_profile": Q.q_hourly_value_profile,
         "priority_value_profile": Q.q_priority_value_profile,
+        # last green: r14
         "brand_demand_acf": Q.q_brand_demand_acf,
         "customer_entry_brand_loyalty": Q.q_customer_entry_brand_loyalty,
         "minhash_pairs": Q.q_minhash_pairs,
@@ -514,6 +462,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_stats": Q.q_text_stats,
         "lang_rollup": Q.q_lang_rollup,
         "langid": Q.q_langid,
+        # last green: r15
+        "dedup_exact": Q.q_dedup_exact,
+        "doc_chunks": Q.q_doc_chunks,
+        "simhash": Q.q_simhash,
+        "simhash_neardup": Q.q_simhash_neardup,
+        "jaccard_pairs": Q.q_jaccard_pairs,
+        "dedup_groups": Q.q_dedup_groups,
+        "multimodal_features": Q.q_multimodal_features,
+        "lm_score": Q.q_lm_score,
+        "top_tokens": Q.q_top_tokens,
+        "corpus_filter": Q.q_corpus_filter,
+        "doclen_histogram": Q.q_doclen_histogram,
+        "sim_topk": Q.q_sim_topk,
+        "label_centroid_sim": Q.q_label_centroid_sim,
+        "embed_neardup": Q.q_embed_neardup,
+        "rolling_fingerprint": Q.q_rolling_fingerprint,
+        "sku_moving_avg": Q.q_sku_moving_avg,
+        "token_budget": Q.q_token_budget,
+        "copurchase_pairs": Q.q_copurchase_pairs,
+        "name_match_candidates": Q.q_name_match_candidates,
+        "stock_twa": Q.q_stock_twa,
+        "brand_trend": Q.q_brand_trend,
+        "winsorized_stats": Q.q_winsorized_stats,
+        "dau_bitmap_merge": Q.q_dau_bitmap_merge,
+        "repeated_spans": Q.q_repeated_spans,
+        "token_dist_drift": Q.q_token_dist_drift,
+        "tfidf_keywords": Q.q_tfidf_keywords,
+        "epoch_shuffle": Q.q_epoch_shuffle,
+        "k_anonymity": Q.q_k_anonymity,
+        "curation_summary": Q.q_curation_summary,
+        "events_sliding": Q.q_events_sliding,
+        "funnel_latency": Q.q_funnel_latency,
+        "events_variant": Q.q_events_variant,
+        "audio_meta": Q.q_audio_meta,
+        "frame_meta": Q.q_frame_meta,
+        "join_view_merge": Q.q_join_view_merge,
+        "dedup_incremental": Q.q_dedup_incremental,
+        "table_time_travel": Q.q_table_time_travel,
+        "table_cdf": Q.q_table_cdf,
+        "table_history": Q.q_table_history,
+        "abc_classification": Q.q_abc_classification,
+        "reorder_points": Q.q_reorder_points,
+        "user_state_history": Q.q_user_state_history,
+        "abc_xyz_matrix": Q.q_abc_xyz_matrix,
+        "zorder_curve": Q.q_zorder_curve,
+        "part_hierarchy_rollup": Q.q_part_hierarchy_rollup,
+        "stock_gap_fill": Q.q_stock_gap_fill,
+        "table_after_dml": Q.q_table_after_dml,
+        "key_skew_profile": Q.q_key_skew_profile,
+        "incremental_hourly_merge": Q.q_incremental_hourly_merge,
+        "embed_contamination": Q.q_embed_contamination,
         # --- rows-only entries (driver evidence already on file;
         # value-level parity pinned by tests/test_oracle_parity.py,
         # bit-exact by tools/strict_parity.py) ---------------------

@@ -21,6 +21,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The heap never grows past this, however large the machine.
+MAX_DRIVER_MEM_BYTES = 64 << 30
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for this machine: ``SPARK_GRAFT_DRIVER_MEM``
+    when set, else half the physical memory, capped at 64g.
+
+    In local mode the driver JVM is the whole engine: a heap larger
+    than the box lets it grow until the kernel kills it mid-run. Half
+    leaves room for the JVM's off-heap memory and the Python workers.
+    """
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(physical // 2, MAX_DRIVER_MEM_BYTES) >> 20}m"
+
 
 def build_session(
     app_name: str = "retail_reconciliation_engine",
@@ -33,7 +51,8 @@ def build_session(
     ``master``/``shuffle_partitions`` default from ``SPARK_GRAFT_CPUS``
     so the same entry points serve local tests and a real cluster
     (where ``master`` is supplied by spark-submit and
-    ``shuffle_partitions`` should be ~2-3x total cores).
+    ``shuffle_partitions`` should be ~2-3x total cores); the heap
+    defaults from the machine's memory (``driver_memory``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -41,12 +60,11 @@ def build_session(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         # local mode: one JVM -- driver memory is the only heap knob
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
