@@ -3,8 +3,8 @@
 The reference counts discrepancy rows, collects 5 examples, formats a
 message, and publishes to SNS via boto3. That is driver-side control
 logic, not a distributed operator -- here it is a pluggable protocol
-(stdout/list sinks built in; an SNS/webhook adapter slots in without
-touching the jobs).
+(an in-memory test sink is built in; an SNS/webhook adapter slots in
+without touching the jobs).
 
 Fixes the reference's triple-recompute flaw (actions at ref :113, :119,
 :125 with no cache): callers pass an already-persisted frame, and
@@ -15,7 +15,7 @@ materialization.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Protocol
+from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,11 +44,6 @@ class AlertSink(Protocol):
     def publish(self, alert: Alert) -> None: ...
 
 
-class StdoutSink:
-    def publish(self, alert: Alert) -> None:
-        print(alert.format())
-
-
 class CollectingSink:
     """Test double: keeps alerts in memory."""
 
@@ -57,17 +52,6 @@ class CollectingSink:
 
     def publish(self, alert: Alert) -> None:
         self.alerts.append(alert)
-
-
-class CallbackSink:
-    """Adapter for external publishers (SNS, webhook, ...): any callable
-    taking the formatted message."""
-
-    def __init__(self, fn: Callable[[str], None]) -> None:
-        self.fn = fn
-
-    def publish(self, alert: Alert) -> None:
-        self.fn(alert.format())
 
 
 def build_alert(reconciled: DataFrame, k: int = 5) -> Alert | None:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .numeric import round_half
+
 #: Tiny function-word list used for quality scoring and language ID.
 #: Deliberately small + hard-coded: the oracle SQL must embed the same list.
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "is", "in", "it"]
@@ -67,7 +69,7 @@ def quality_score(col: Column | str) -> Column:
 
         0.5*least(1, n_tokens/50) + 0.3*least(1, 4*stop_ratio)
         + 0.2*(1 if 3 <= avg_token_len <= 10 else 0)
-    rounded to 4dp.
+    rounded to 4dp as DuckDB's ``round`` does (``round_half``).
     """
     n_tok = token_count(col).cast("double")
     n_stop = stopword_count(col).cast("double")
@@ -85,7 +87,7 @@ def quality_score(col: Column | str) -> Column:
         + F.lit(0.2)
         * F.when((avg_len >= 3.0) & (avg_len <= 10.0), F.lit(1.0)).otherwise(F.lit(0.0))
     )
-    return F.round(score, 4)
+    return round_half(score, 4)
 
 
 def _contains_any(arr: Column):

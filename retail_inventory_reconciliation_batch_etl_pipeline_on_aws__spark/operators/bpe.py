@@ -18,9 +18,8 @@ Per iteration:
      ``F.aggregate`` fold (greedy non-overlapping, the published
      application order), guarded by an ``array_contains`` pre-filter so
      words without both symbols skip the fold,
-  4. the rewritten vocabulary eagerly ``localCheckpoint``s -- lineage
-     would otherwise grow by one fold per merge (the ``pagerank`` /
-     ``label_propagation`` iterative-operator contract).
+  4. the rewritten vocabulary is the state ``iterate`` checkpoints
+     round by round.
 
 Pair counts follow the reference implementation's naive adjacent count
 ('aaa' contributes (a,a) twice even though only one merge can apply) --
@@ -29,8 +28,12 @@ the property the hypothesis test pins against an exact Python model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import functools
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .iterate import checkpoint, iterate
 
 #: end-of-word marker, per the published recipe: merges never cross a
 #: word boundary, and word-final subwords stay distinct from prefixes.
@@ -113,104 +116,98 @@ def learn_bpe_merges(
     the pair as COLUMNS. The merge table is the union of the argmax
     frames -- never driver literals.
 
-    r15 refinements (r14 ADVICE item): each round's argmax frame is
-    itself eagerly ``localCheckpoint``-ed, so (a) the terminal
-    merge-table union reads 1-row in-memory frames instead of
-    RE-EXECUTING every round's pair aggregation a second time, and
-    (b) the vocabulary rewrite's broadcast build reads the same
-    materialized row. An Observation rides the argmax checkpoint
-    (zero extra actions) and reports emptiness: an exhausted
-    vocabulary now BREAKS the loop again instead of paying
-    ``n_merges - rank`` empty checkpoint rounds -- later ranks emit no
-    row either way, so the output table is unchanged. Identical
-    output: same argmax, same tie-break, same exhaustion rows; pinned
-    by the hypothesis exact-Python-model test and the classic worked
-    example."""
+    r15 refinements (r14 ADVICE item): each round's argmax frame is a
+    one-shot ``checkpoint``, so (a) the terminal merge-table union
+    reads 1-row in-memory frames instead of RE-EXECUTING every round's
+    pair aggregation a second time, and (b) the vocabulary rewrite's
+    broadcast build reads the same materialized row. Its row count
+    rides that checkpoint job (zero extra actions) and reports
+    emptiness: an exhausted vocabulary stops the loop instead of
+    paying ``n_merges - rank`` empty rounds -- later ranks emit no row
+    either way, so the output table is unchanged. The argmax frames
+    are never released (the merge table unions them); the vocabulary
+    rewrites are ``iterate``'s rounds, released as they are
+    superseded. Pinned by the hypothesis exact-Python-model test and
+    the classic worked example."""
     if n_merges <= 0:
-        return docs.sparkSession.createDataFrame(
-            [],
-            "rank int, left string, right string, merged string,"
-            " pair_freq long",
+        return _empty_merges(docs)
+    words, _ = checkpoint(
+        word_freq_table(docs, text_col).select(
+            "freq", _initial_symbols(F.col("word")).alias("syms")
         )
-    words = (
-        word_freq_table(docs, text_col)
-        .select("freq", _initial_symbols(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
     )
-    merge_frames = []
-    for rank in range(n_merges):
-        pairs = (
-            words.select(
-                "freq",
-                F.explode(
-                    F.zip_with(
-                        F.slice(
-                            F.col("syms"),
-                            1,
-                            F.greatest(F.lit(0), F.size("syms") - 1),
-                        ),
-                        F.slice(
-                            F.col("syms"),
-                            2,
-                            F.greatest(F.lit(0), F.size("syms") - 1),
-                        ),
-                        lambda x, y: F.struct(
-                            x.alias("left"), y.alias("right")
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
-            .agg(F.sum("freq").alias("n"))
-        )
-        # 1-row argmax frame; never collected to the driver. Eagerly
-        # checkpointed (r15): the terminal union and the rewrite's
-        # broadcast both read this materialized row instead of each
-        # re-running the pair aggregation. The emptiness probe rides
-        # the checkpoint job as an observed metric -- no extra action.
-        seen = Observation()
-        best = (
-            pairs.orderBy(
-                F.col("n").desc(), F.col("left").asc(), F.col("right").asc()
-            )
-            .limit(1)
-            .observe(seen, F.count(F.lit(1)).alias("n_rows"))
-            .localCheckpoint(eager=True)
-        )
-        if seen.get["n_rows"] == 0:
-            break  # exhausted: no adjacent pairs left anywhere
-        merge_frames.append(
-            best.select(
-                F.lit(rank).cast("int").alias("rank"),
-                "left",
-                "right",
-                F.concat("left", "right").alias("merged"),
-                F.col("n").cast("long").alias("pair_freq"),
-            )
-        )
-        if rank == n_merges - 1:
-            break  # nothing consumes the final vocabulary rewrite
-        words = (
-            words.crossJoin(F.broadcast(best))
-            .select(
-                "freq",
-                _apply_merge(
-                    F.col("syms"), F.col("left"), F.col("right")
-                ).alias("syms"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    if not merge_frames:
+    best = [_bpe_argmax(words)]
+    if best[0] is None:
         # exhausted before the first merge: empty table, same schema
-        return docs.sparkSession.createDataFrame(
-            [],
-            "rank int, left string, right string, merged string,"
-            " pair_freq long",
+        return _empty_merges(docs)
+
+    def next_argmax(_prev, new, _was, _now) -> bool:
+        best.append(_bpe_argmax(new))
+        return best[-1] is None
+
+    # rewrite i folds merge i into every word; nothing consumes the
+    # rewrite after the final merge, so there are n_merges - 1 rounds
+    iterate(
+        words,
+        lambda w, i: w.crossJoin(F.broadcast(best[i])).select(
+            "freq",
+            _apply_merge(F.col("syms"), F.col("left"), F.col("right")).alias(
+                "syms"
+            ),
+        ),
+        n_merges - 1,
+        until=next_argmax,
+    )
+    ranked = [
+        b.select(
+            F.lit(rank).cast("int").alias("rank"),
+            "left",
+            "right",
+            F.concat("left", "right").alias("merged"),
+            F.col("n").cast("long").alias("pair_freq"),
         )
-    out = merge_frames[0]
-    for mf in merge_frames[1:]:
-        out = out.unionByName(mf)
-    return out
+        for rank, b in enumerate(best)
+        if b is not None
+    ]
+    return functools.reduce(DataFrame.unionByName, ranked)
+
+
+def _empty_merges(docs: DataFrame) -> DataFrame:
+    return docs.sparkSession.createDataFrame(
+        [],
+        "rank int, left string, right string, merged string, pair_freq long",
+    )
+
+
+def _bpe_argmax(words: DataFrame) -> DataFrame | None:
+    """The round's 1-row ``(left, right, n)`` argmax frame (count desc,
+    pair asc), checkpointed once and never collected to the driver; None
+    when no word has an adjacent pair left."""
+    pairs = (
+        words.select(
+            "freq",
+            F.explode(
+                F.zip_with(
+                    F.slice(
+                        F.col("syms"), 1, F.greatest(F.lit(0), F.size("syms") - 1)
+                    ),
+                    F.slice(
+                        F.col("syms"), 2, F.greatest(F.lit(0), F.size("syms") - 1)
+                    ),
+                    lambda x, y: F.struct(x.alias("left"), y.alias("right")),
+                )
+            ).alias("p"),
+        )
+        .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
+        .agg(F.sum("freq").alias("n"))
+    )
+    best, seen = checkpoint(
+        pairs.orderBy(
+            F.col("n").desc(), F.col("left").asc(), F.col("right").asc()
+        ).limit(1),
+        n_rows=F.count(F.lit(1)),
+    )
+    return best if seen["n_rows"] else None
 
 
 def apply_bpe_merges(
@@ -221,12 +218,12 @@ def apply_bpe_merges(
 ) -> DataFrame:
     """Tokenize a corpus with a learned merge list (in rank order).
 
-    The folds run over the DISTINCT word table, one merge at a time
-    with an eager ``localCheckpoint`` between steps, and the corpus
-    then joins word -> symbol-array: (a) each unique word tokenizes
-    exactly once no matter how often it occurs -- the same
-    train-on-the-vocabulary economics as :func:`learn_bpe_merges` --
-    and (b) the per-step materialization caps the expression tree.
+    The folds run over the DISTINCT word table, one merge per
+    ``iterate`` round, and the corpus then joins word -> symbol-array:
+    (a) each unique word tokenizes exactly once no matter how often it
+    occurs -- the same train-on-the-vocabulary economics as
+    :func:`learn_bpe_merges` -- and (b) the per-round checkpoint caps
+    the expression tree.
     Chaining the k folds into ONE projection is wrong twice over: the
     tree grows ~6x per merge (each step references its input five
     times), so compile time explodes exponentially -- measured: 8
@@ -235,15 +232,17 @@ def apply_bpe_merges(
     occurrence) with the word's subword array in ``out_col``."""
     from ..functions.text import tokens
 
-    vocab = (
+    vocab, _ = checkpoint(
         docs.select(F.explode(tokens(text_col)).alias("word"))
         .distinct()
         .select("word", _initial_symbols(F.col("word")).alias(out_col))
-        .localCheckpoint(eager=True)
     )
-    for a, b in merges:
-        vocab = vocab.select(
-            "word", _apply_merge(F.col(out_col), a, b).alias(out_col)
-        ).localCheckpoint(eager=True)
+    vocab, _ = iterate(
+        vocab,
+        lambda v, i: v.select(
+            "word", _apply_merge(F.col(out_col), *merges[i]).alias(out_col)
+        ),
+        len(merges),
+    )
     word = docs.select("*", F.explode(tokens(text_col)).alias("word"))
     return word.join(vocab, "word").drop("word")

@@ -14,10 +14,18 @@ so the same loop runs on a billion-edge graph.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint, iterate
 from .skew import salted_join
+
+#: broadcast-router ceiling of the per-round |V|-row tables (ranks,
+#: labels, H-index values; ~100 MB hashed): a checkpointed frame
+#: carries no size stats, so left alone AQE sort-merge-joins it against
+#: the edge list EVERY round. Each router reads the node count as an
+#: observed metric of the seed checkpoint that materializes the table.
+BROADCAST_MAX_NODES = 4_000_000
 
 
 def _attach_mins(neigh: DataFrame, mins: DataFrame, skew_salt: int) -> DataFrame:
@@ -116,64 +124,48 @@ def connected_components(
     # are a collect_set + pair-expand over the whole fact table), and
     # the old shape ran it TWICE -- once for the eager selfloop frame,
     # once for the eager e checkpoint. Canonicalize + distinct keeping
-    # self-loop rows, checkpoint that single frame, and derive both
-    # consumers lazily from the in-memory checkpoint.
-    base = (
+    # self-loop rows, checkpoint that single frame (its real-edge count
+    # rides the same job), and derive both consumers lazily from it.
+    base, seen = checkpoint(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .distinct()
-        # eager localCheckpoint, not persist: each round's plan references
-        # e ~6 times (symmetrize + two star joins), so without lineage
-        # truncation the logical plan grows ~6^rounds and Catalyst
-        # analysis itself becomes the bottleneck long before execution.
-        # Checkpointing also guarantees the input lineage (often an
-        # expensive similarity join) never re-executes.
-        .localCheckpoint(eager=True)
+        ).distinct(),
+        n_edges=F.count_if(F.col("u") != F.col("v")),
     )
     # nodes whose every edge is a self-loop would otherwise vanish when
     # the u != v filter strips their edges (narrow scans of the checkpoint)
     selfloop_nodes = base.where(F.col("u") == F.col("v")).select(
         F.col("u").alias("node")
     )
-    e = base.where(F.col("u") != F.col("v"))
-    prev_count = e.count()
-    for _ in range(max_iter):
-        # fixpoint test as two driver scalars: equal cardinality AND
-        # empty one-sided difference (both sides distinct by
-        # construction). The cardinality rides the checkpoint job as an
-        # observed metric (r14, guide §2.4: one action per round,
-        # not two -- the count is collected DURING materialization)
-        obs = Observation()
-        new_e = (
-            _small_star(_large_star(e, skew_salt), skew_salt)
-            .observe(obs, F.count(F.lit(1)).alias("n_edges"))
-            .localCheckpoint(eager=True)
+    e, converged = iterate(
+        (base.where(F.col("u") != F.col("v")), seen),
+        lambda e, _: _small_star(_large_star(e, skew_salt), skew_salt),
+        max_iter,
+        metrics={"n_edges": F.count(F.lit(1))},
+        # fixpoint test as two driver scalars: equal cardinality (both
+        # observed) AND, only on a tie, an empty one-sided difference
+        # (both sides distinct by construction)
+        until=lambda prev, new, was, now: was["n_edges"] == now["n_edges"]
+        and new.subtract(prev).limit(1).count() == 0,
+    )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} iterations"
         )
-        new_count = obs.get["n_edges"]
-        changed = (
-            new_count != prev_count or new_e.subtract(e).limit(1).count() > 0
-        )
-        e = new_e
-        prev_count = new_count
-        if not changed:
-            # star graph: every edge is (node, component_min); roots
-            # appear only on the v side and label themselves
-            labeled = e.select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            ).unionByName(
-                e.select(F.col("v").alias("node"), F.col("v").alias("component"))
-                .distinct()
-            ).distinct()
-            # self-loop-only nodes: singleton components (nodes with any
-            # real edge are already labeled; anti-join filters those out)
-            orphans = selfloop_nodes.join(labeled, "node", "left_anti")
-            return labeled.unionByName(
-                orphans.select("node", F.col("node").alias("component"))
-            )
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations"
+    # star graph: every edge is (node, component_min); roots appear only
+    # on the v side and label themselves
+    labeled = e.select(
+        F.col("u").alias("node"), F.col("v").alias("component")
+    ).unionByName(
+        e.select(F.col("v").alias("node"), F.col("v").alias("component"))
+        .distinct()
+    ).distinct()
+    # self-loop-only nodes: singleton components (nodes with any real
+    # edge are already labeled; anti-join filters those out)
+    orphans = selfloop_nodes.join(labeled, "node", "left_anti")
+    return labeled.unionByName(
+        orphans.select("node", F.col("node").alias("component"))
     )
 
 
@@ -201,7 +193,7 @@ def pagerank(
     iterations: int = 8,
     damping_pct: int = 85,
     scale: int = 10**12,
-    broadcast_max_nodes: int = 4_000_000,
+    broadcast_max_nodes: int = BROADCAST_MAX_NODES,
     undirected_canonical: bool = False,
 ) -> DataFrame:
     """Fixed-point PageRank: the canonical iterative link-analysis
@@ -249,11 +241,8 @@ def pagerank(
 
     Scale shape: per round, ONE shuffle-join of edges to the
     ids-only rank frame on src (hot hubs salt-able exactly like
-    ``_attach_mins``) and one map-side-combined sum on dst. Ranks are
-    eagerly localCheckpoint-ed each round: lineage would otherwise
-    deepen by a join+agg per iteration and Catalyst re-analysis, not
-    execution, becomes the bottleneck (same rationale as
-    ``connected_components``). Driver sees no data at all.
+    ``_attach_mins``) and one map-side-combined sum on dst; rounds run
+    through ``iterate``. Driver sees no data at all.
     """
     # Materialize the edge list ONCE before anything iterates: deg,
     # nodes, and every loop round re-read it, and a caller-supplied
@@ -298,19 +287,14 @@ def pagerank(
         # free as an observed metric riding the checkpoint job we
         # already pay (guide §1.5); true duplicate rows would need a
         # grouping pass and stay the caller's contract.
-        cert = Observation()
-        ec = (
-            edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
-            .observe(
-                cert,
-                F.count_if(F.col(src) >= F.col(dst)).alias("n_noncanon"),
-            )
-            .localCheckpoint(eager=True)
+        ec, seen = checkpoint(
+            edges.select(F.col(src).alias(src), F.col(dst).alias(dst)),
+            n_noncanon=F.count_if(F.col(src) >= F.col(dst)),
         )
-        if cert.get["n_noncanon"] > 0:
+        if seen["n_noncanon"] > 0:
             raise ValueError(
                 "undirected_canonical=True requires src < dst on every "
-                f"row; found {cert.get['n_noncanon']} violating rows "
+                f"row; found {seen['n_noncanon']} violating rows "
                 "(self-loops or non-canonical orientation). Drop the "
                 "flag to use the general multi-edge path."
             )
@@ -319,24 +303,27 @@ def pagerank(
             .groupBy("node")
             .agg(F.count("*").cast("long").alias("outdeg"))
         )
-        state = deg.select(
-            "node", "outdeg", F.lit(scale).cast("long").alias("rank")
-        ).localCheckpoint(eager=True)
-        small = state.count() <= broadcast_max_nodes
-        if small:
-            for _ in range(iterations):
-                state = _pagerank_canonical_round(
-                    ec, state, src, dst, damping_pct, scale
-                ).localCheckpoint(eager=True)
+        state, seen = checkpoint(
+            deg.select("node", "outdeg", F.lit(scale).cast("long").alias("rank")),
+            n_nodes=F.count(F.lit(1)),
+        )
+        if seen["n_nodes"] <= broadcast_max_nodes:
+            state, _ = iterate(
+                state,
+                lambda s, _: _pagerank_canonical_round(
+                    ec, s, src, dst, damping_pct, scale
+                ),
+                iterations,
+            )
             return state.select("node", "rank")
         # too many nodes to broadcast ranks: symmetrize off the
         # checkpoint and fall through to the general loop below
         edges = ec.unionByName(
             ec.select(F.col(dst).alias(src), F.col(src).alias(dst))
         )
-    edges = edges.select(
-        F.col(src).alias(src), F.col(dst).alias(dst)
-    ).localCheckpoint(eager=True)
+    edges, _ = checkpoint(
+        edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
+    )
     deg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count("*").cast("long").alias("outdeg")
     )
@@ -346,57 +333,58 @@ def pagerank(
         .distinct()
     )
     # outdeg joined once up front; dangling nodes keep outdeg NULL and
-    # contribute nothing (their rank row survives via the left join)
-    state = (
-        nodes.join(deg, "node", "left")
-        .select("node", "outdeg", F.lit(scale).cast("long").alias("rank"))
-        .localCheckpoint(eager=True)
+    # contribute nothing (their rank row survives via the left join).
+    # DF-aware join router (same discipline as the containment router):
+    # under BROADCAST_MAX_NODES the per-round joins broadcast the rank
+    # side and the edge list never shuffles for the join at all (a full
+    # sort of the edges per round was the dominant cost at sf0.1); above
+    # it, the honest shuffle join stands (a billion-node rank table must
+    # partition). The node count rides the seed checkpoint job.
+    state, seen = checkpoint(
+        nodes.join(deg, "node", "left").select(
+            "node", "outdeg", F.lit(scale).cast("long").alias("rank")
+        ),
+        n_nodes=F.count(F.lit(1)),
     )
-    base = (100 - damping_pct) * scale // 100
+    small = seen["n_nodes"] <= broadcast_max_nodes
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("_dst"))
-    # DF-aware join router (same discipline as the containment
-    # router): the rank table is |nodes| rows of three longs, and the
-    # checkpointed LogicalRDD carries no size stats, so left alone AQE
-    # sort-merge-joins it against the edge list EVERY round -- a full
-    # sort of the edges per iteration (measured: the dominant cost at
-    # sf0.1). One bounded count() decides: under ~4M nodes (~100 MB
-    # hashed) the per-round joins broadcast the rank side and the edge
-    # list never shuffles for the join at all; above it, the honest
-    # shuffle join stands (a billion-node rank table must partition).
-    small = state.count() <= broadcast_max_nodes
-    hint = F.broadcast if small else (lambda d: d)
-    for _ in range(iterations):
-        contribs = (
-            e.join(
-                hint(
-                    state.where(F.col("outdeg").isNotNull()).select(
-                        # `div` = exact BIGINT floor division on the
-                        # JVM -- never a double detour, so no 2^53
-                        # mantissa ceiling
-                        "node",
-                        F.expr("rank div outdeg").alias("_c"),
-                    )
-                ),
-                "node",
-            )
-            .groupBy(F.col("_dst").alias("node"))
-            .agg(F.sum("_c").alias("_in"))
-        )
-        state = (
-            state.join(hint(contribs), "node", "left")
-            .select(
-                "node",
-                "outdeg",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"({damping_pct}L * coalesce(_in, 0L)) div 100"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    state, _ = iterate(
+        state,
+        lambda s, _: _pagerank_round(e, s, small, damping_pct, scale),
+        iterations,
+    )
     return state.select("node", "rank")
+
+
+def _pagerank_round(
+    e: DataFrame, state: DataFrame, small: bool, damping_pct: int, scale: int
+) -> DataFrame:
+    """One un-checkpointed round of the general (directed) PageRank
+    loop over the ``(node, _dst)`` edge projection."""
+    hint = F.broadcast if small else (lambda d: d)
+    contribs = (
+        e.join(
+            hint(
+                state.where(F.col("outdeg").isNotNull()).select(
+                    # `div` = exact BIGINT floor division on the JVM --
+                    # never a double detour, so no 2^53 mantissa ceiling
+                    "node",
+                    F.expr("rank div outdeg").alias("_c"),
+                )
+            ),
+            "node",
+        )
+        .groupBy(F.col("_dst").alias("node"))
+        .agg(F.sum("_c").alias("_in"))
+    )
+    return state.join(hint(contribs), "node", "left").select(
+        "node",
+        "outdeg",
+        (
+            F.lit((100 - damping_pct) * scale // 100).cast("long")
+            + F.expr(f"({damping_pct}L * coalesce(_in, 0L)) div 100")
+        ).alias("rank"),
+    )
 
 
 def _pagerank_canonical_round(
@@ -526,8 +514,8 @@ def label_propagation(
     co-supply graph is actually mined for.
 
     Scale shape per round (r14 optimization round, guide §2.4/§3.1):
-    the label table is |V| ids-only rows, so under the same 4M-node
-    broadcast router as ``pagerank``/``_hindex_step`` the edge join is
+    the label table is |V| ids-only rows, so under the same
+    ``BROADCAST_MAX_NODES`` router as ``pagerank`` the edge join is
     map-side -- the checkpointed edge list never re-exchanges (a
     checkpointed LogicalRDD carries no stats, so Catalyst would
     otherwise sort-merge-join it EVERY round); neighbor labels
@@ -538,9 +526,8 @@ def label_propagation(
     aggregate instead of a per-node sort (measured: identical labels,
     rounds 2.8 s -> 2.3 s at sf0.1; the win is structural at scale --
     no per-round sort of the neighbor-label frame). Above the router
-    ceiling the honest shuffle join stands. Each round eagerly
-    ``localCheckpoint``s -- lineage would otherwise double per
-    iteration. Fixed ``iters`` rounds (LPA converges in a handful on
+    ceiling the honest shuffle join stands. Rounds run through
+    ``iterate``. Fixed ``iters`` rounds (LPA converges in a handful on
     community-structured graphs; a fixed budget keeps the job plannable
     at 100 TB -- the same contract as ``pagerank``).
 
@@ -564,18 +551,15 @@ def label_propagation(
     # plurality agg map-side combines before its exchange, so the
     # per-round shuffle is already small and the trick cost 2x
     # (7.8s vs 3.6s at sf0.1)
-    und = und.distinct().localCheckpoint(eager=True)
-    labels = (
+    und, _ = checkpoint(und.distinct())
+    labels, seen = checkpoint(
         und.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        n_nodes=F.count(F.lit(1)),
     )
-    # explicit broadcast router: |V| ids-only rows, same ceiling as
-    # pagerank's rank-side router (checkpointed frames carry no stats)
-    small = labels.count() <= 4_000_000
-    for _ in range(iters):
-        labels = _lpa_round(und, labels, small).localCheckpoint(eager=True)
+    small = seen["n_nodes"] <= BROADCAST_MAX_NODES
+    labels, _ = iterate(labels, lambda lab, _: _lpa_round(und, lab, small), iters)
     return labels
 
 
@@ -610,10 +594,16 @@ def _lpa_round(und: DataFrame, labels: DataFrame, small: bool) -> DataFrame:
 
 
 def _hindex_init(edges: DataFrame, a: str, b: str):
-    """(adj, vals): the deduped undirected graph as ADJACENCY LISTS
-    (one (node, nbrs) row per node, self-loops dropped -- the standard
-    k-core convention) and the degree table that seeds the H-index
-    sequence.
+    """``(adj, vals)`` of ``_hindex_seed`` -- the pair the plan-shape
+    tests and ``tools/dump_round_plans.py`` build round frames on."""
+    return _hindex_seed(edges, a, b)[:2]
+
+
+def _hindex_seed(edges: DataFrame, a: str, b: str):
+    """(adj, vals, n_nodes): the deduped undirected graph as ADJACENCY
+    LISTS (one (node, nbrs) row per node, self-loops dropped -- the
+    standard k-core convention), the degree table that seeds the
+    H-index sequence, and its row count for the broadcast router.
 
     Shape rationale (r15 optimization round, guide §1.2/§2.3/§2.4):
 
@@ -642,9 +632,10 @@ def _hindex_init(edges: DataFrame, a: str, b: str):
     the documented extension (the non-broadcast round below is the only
     consumer there and reads it exploded).
 
-    ``vals`` is eagerly checkpointed -- ITS lineage is the iterated
-    one; materializing it also materializes the adjacency cache. Cache
-    lifetime follows the harness clearCache contract (see
+    ``vals`` is checkpointed -- ITS lineage is the iterated one;
+    materializing it also materializes the adjacency cache (so round
+    plans see the cache's partitioning), and ``n_nodes`` rides that
+    job. Cache lifetime follows the harness clearCache contract (see
     ``queries._labeled_quantized_dims``)."""
     adj = (
         edges.select(
@@ -663,26 +654,24 @@ def _hindex_init(edges: DataFrame, a: str, b: str):
         .agg(F.collect_list("dst").alias("nbrs"))
         .persist()
     )
-    vals = adj.select(
-        "node", F.size("nbrs").cast("long").alias("c")
-    ).localCheckpoint(eager=True)
-    return adj, vals
+    vals, seen = checkpoint(
+        adj.select("node", F.size("nbrs").cast("long").alias("c")),
+        n_nodes=F.count(F.lit(1)),
+    )
+    return adj, vals, seen["n_nodes"]
 
 
-def _hindex_step(
-    adj: DataFrame,
-    vals: DataFrame,
-    small: bool = True,
-    gate: Observation | None = None,
+def _hindex_step_frame(
+    adj: DataFrame, vals: DataFrame, small: bool = True
 ) -> DataFrame:
-    """ONE synchronous H-index round over the cached ADJACENCY table:
-    each node's value becomes the H-index of its neighbors' values,
-    computed in HISTOGRAM form -- per-(node, value) neighbor counts, a
-    cumulative count over values desc, and ``max(least(cum, value))``
-    -- which equals the per-rank ``max(least(rank, value))`` fold (for
-    each distinct value v, cum(v) is the largest rank among neighbors
-    valued >= v). Eagerly checkpointed so iterated lineage never
-    doubles.
+    """ONE un-checkpointed synchronous H-index round over the cached
+    ADJACENCY table (the ``step`` ``_hindex_fixpoint`` iterates, and the
+    frame the plan-shape tests pin): each node's value becomes the
+    H-index of its neighbors' values, computed in HISTOGRAM form --
+    per-(node, value) neighbor counts, a cumulative count over values
+    desc, and ``max(least(cum, value))`` -- which equals the per-rank
+    ``max(least(rank, value))`` fold (for each distinct value v, cum(v)
+    is the largest rank among neighbors valued >= v).
 
     The edge stream is re-derived per round by EXPLODING the cached
     neighbor lists (r15: in-row codegen Generate, no shuffle, and the
@@ -701,10 +690,10 @@ def _hindex_step(
     broadcasts; above the ceiling the honest shuffle join stands (a
     billion-node value table must partition).
 
-    The checkpointed output CARRIES ``c_old`` (the node's own previous
-    value, attached by a second join against the same value projection
-    -- on the broadcast path the second build is a ``ReusedExchange``),
-    and the caller's convergence gate rides the checkpoint job as an
+    The output CARRIES ``c_old`` (the node's own previous value,
+    attached by a second join against the same value projection -- on
+    the broadcast path the second build is a ``ReusedExchange``), so
+    the convergence gate rides the round's checkpoint job as an
     OBSERVED METRIC: zero extra actions per round (r14, guide
     §1.5/§2.4).
 
@@ -738,24 +727,6 @@ def _hindex_step(
       higher-order functions are CodegenFallback -- interpreted
       per-element -- while the window runs in whole-stage codegen.
     """
-    stepped = _hindex_step_frame(adj, vals, small)
-    if gate is not None:
-        stepped = stepped.observe(
-            gate,
-            F.count_if(F.col("c") != F.col("c_old")).alias("n_changed"),
-        )
-    return stepped.localCheckpoint(eager=True)
-
-
-def _hindex_step_frame(
-    adj: DataFrame, vals: DataFrame, small: bool = True
-) -> DataFrame:
-    """The un-checkpointed ROUND PLAN of ``_hindex_step`` -- factored
-    out so the plan-shape tests can pin the round's physical claims
-    (one BroadcastExchange + one ReusedExchange for the two value
-    reads, no shuffle Exchange above the cached adjacency) on the
-    exact frame the loop materializes; ``_hindex_step`` is this plus
-    the observed gate and the eager checkpoint."""
     hint = F.broadcast if small else (lambda d: d)
     w = (
         Window.partitionBy("node")
@@ -786,6 +757,25 @@ def _hindex_step_frame(
     )
 
 
+def _hindex_fixpoint(
+    edges: DataFrame, a: str, b: str, rounds: int
+) -> tuple[DataFrame, bool]:
+    """Up to ``rounds`` synchronous H-index rounds from the degree
+    table, exiting at the first round that changes no value; returns
+    ``(vals, converged)``. Every round observes its changed-node count
+    -- no-change between two consecutive rounds IS the fixpoint, and
+    the gate costs no action."""
+    adj, vals, n_nodes = _hindex_seed(edges, a, b)
+    small = n_nodes <= BROADCAST_MAX_NODES
+    return iterate(
+        vals,
+        lambda v, _: _hindex_step_frame(adj, v, small),
+        rounds,
+        metrics={"n_changed": F.count_if(F.col("c") != F.col("c_old"))},
+        until=lambda _prev, _new, _was, now: now["n_changed"] == 0,
+    )
+
+
 def hindex_rounds(
     edges: DataFrame,
     a: str = "pa",
@@ -805,14 +795,11 @@ def hindex_rounds(
     later round returns the same table), so early exit is a pure
     wall-clock optimization, never a semantic one. The convergence
     gate is FREE (r13 verdict item #3 made it a narrow scan; the r14
-    optimization round folds it away entirely): ``_hindex_step``
-    carries each node's previous value as ``c_old`` and collects the
-    any-change count as an OBSERVED METRIC during the checkpoint's own
-    materialization job -- zero extra actions per round. The gate is
-    skipped on the final round, where the budget ends the loop
-    regardless. (A uniform every-k amortization was tried and
-    reverted -- see ``_hindex_step``.) Wherever the
-    monotone non-increasing sequence has converged within ``rounds``,
+    optimization round folds it away entirely): ``_hindex_step_frame``
+    carries each node's previous value as ``c_old`` and the any-change
+    count is an OBSERVED METRIC of the round's own checkpoint job --
+    zero extra actions per round (see ``_hindex_fixpoint``). Wherever
+    the monotone non-increasing sequence has converged within ``rounds``,
     the returned value IS the k-core number; on a graph whose
     effective diameter exceeds ``rounds`` it is kcore's documented
     over-estimate, which is exactly what the fixed-round contract
@@ -822,15 +809,7 @@ def hindex_rounds(
 
     Returns (node, h) for every non-isolated node.
     """
-    adj, vals = _hindex_init(edges, a, b)
-    # explicit broadcast router (checkpointed frames carry no stats):
-    # |V| rows, same 4M ceiling as pagerank's rank-side router
-    small = vals.count() <= 4_000_000
-    for i in range(rounds):
-        gate = Observation() if i < rounds - 1 else None
-        vals = _hindex_step(adj, vals, small, gate)
-        if gate is not None and gate.get["n_changed"] == 0:
-            break  # fixpoint: remaining rounds are identity
+    vals, _ = _hindex_fixpoint(edges, a, b, rounds)
     return vals.select("node", F.col("c").alias("h"))
 
 
@@ -855,17 +834,14 @@ def kcore_numbers(
     (node, value) neighbor-count aggregate, then the per-node H-index
     in histogram form -- a cumulative count over values desc folded
     with ``max(least(cum, value))``, so the window sorts
-    |node x distinct values| rows, not |E| (see ``_hindex_step``;
+    |node x distinct values| rows, not |E| (see ``_hindex_step_frame``;
     hub nodes contribute their value range, not their degree). Rounds
-    eagerly ``localCheckpoint`` (the iterative-operator lineage
-    contract shared with ``pagerank`` / ``label_propagation``), and
-    the loop EXITS EARLY through an any-change gate that costs ZERO
-    extra actions (r13 verdict item #3; r14 optimization round):
-    ``_hindex_step`` carries ``c_old`` in its checkpointed output and
-    reports the changed-node count as an observed metric of the
-    checkpoint job itself, so gating EVERY round is free and no
-    overshoot rounds are ever run. The H-index iteration typically
-    converges in O(log n)-ish rounds on real graphs; ``max_iters`` is
+    run through ``iterate``, and the loop EXITS EARLY through an
+    any-change gate that costs ZERO extra actions (r13 verdict item #3;
+    r14 optimization round): the changed-node count is an observed
+    metric of each round's checkpoint job, so gating EVERY round is
+    free and no overshoot rounds are ever run. The H-index iteration
+    typically converges in O(log n)-ish rounds on real graphs; ``max_iters`` is
     the plannability backstop, and because every round gates,
     exhaustion is detected exactly.
 
@@ -876,18 +852,7 @@ def kcore_numbers(
     nodes therefore never appear, and every returned node has
     coreness >= 1.
     """
-    adj, vals = _hindex_init(edges, a, b)
-    small = vals.count() <= 4_000_000  # same router as hindex_rounds
-    converged = False
-    for _ in range(max_iters):
-        # free every-round gate: the any-change count rides the step's
-        # checkpoint job as an observed metric (no extra action) --
-        # no-change between two consecutive rounds IS the fixpoint
-        gate = Observation()
-        vals = _hindex_step(adj, vals, small, gate)
-        if gate.get["n_changed"] == 0:
-            converged = True
-            break
+    vals, converged = _hindex_fixpoint(edges, a, b, max_iters)
     if not converged:
         # The loop exhausted max_iters with the last round still
         # changing: the H-sequence is monotone NON-INCREASING, so the

@@ -4523,33 +4523,36 @@ def q_part_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark side is the iterative transitive-closure loop: the
     (part, current-ancestor) frame advances one level per round until
     every chain hits a root -- O(max_depth) rounds (= digits of the
-    largest key, ~7 at any SF), localCheckpoint-ed per round like
+    largest key, ~7 at any SF), run through ``operators.iterate`` like
     ``connected_components``/``pagerank`` so lineage stays flat. With
     this synthetic hierarchy the parent is COMPUTABLE (``cur div 10``),
     so each round is a narrow projection; against a stored parent-
     pointer edge table the same loop shape becomes one broadcast-able
-    integer-key join per round, which is what the localCheckpoint
+    integer-key join per round, which is what the checkpointed-round
     discipline is budgeted for. The oracle is DuckDB's native
     recursive CTE -- the declarative spelling of the same fixpoint,
     pinning the loop value-exact. All arithmetic integer/DECIMAL until
     the terminal revenue cast.
     """
+    from .operators.iterate import iterate
+
     part = fixtures.load(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("long").alias("p")
     )
-    state = part.select("p", F.col("p").alias("cur"))
     # fixpoint: advance every non-root chain one level per round (the
     # ancestor is the loop state; depth falls out of the digit length
     # exactly -- integer, engine-agnostic, no float log10)
-    for _ in range(8):  # 8 decimal digits covers p_partkey at any SF
-        nxt = state.withColumn(
+    state, _ = iterate(
+        part.select("p", F.col("p").alias("cur")),
+        lambda s, _: s.withColumn(
             "cur",
             F.when(
                 # `div` = exact BIGINT floor division (no double detour)
                 F.col("cur") >= 10, F.expr("cur div 10")
             ).otherwise(F.col("cur")),
-        )
-        state = nxt.localCheckpoint(eager=True)
+        ),
+        8,  # 8 decimal digits covers p_partkey at any SF
+    )
     roots = state.select(
         "p",
         F.col("cur").alias("root"),

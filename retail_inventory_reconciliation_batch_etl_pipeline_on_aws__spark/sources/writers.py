@@ -195,41 +195,6 @@ def write_zordered(
     )
 
 
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    options: dict[str, str] | None = None,
-    batchsize: int = 10_000,
-) -> None:
-    """Optional JDBC warehouse adapter (SURVEY.md SS2.2 K3: the
-    Redshift-COPY path kept behind an interface).
-
-    The primary warehouse contract in this engine is partitioned parquet
-    (delete+copy == dynamic partition overwrite); this adapter covers
-    deployments that still load a JDBC warehouse directly. Executors
-    write in parallel -- one connection per partition, ``batchsize``
-    rows per round trip; ``df.repartition(n)`` upstream controls the
-    connection count. Idempotent per-date replace must be handled by the
-    caller (e.g. DELETE WHERE date_key = d first, matching
-    dags/retail_pipeline_dag.py:19-41), since plain JDBC has no
-    partition-overwrite semantic. Requires the JDBC driver jar on the
-    classpath; untestable in this environment, so kept deliberately
-    thin.
-    """
-    writer = (
-        df.write.format("jdbc")
-        .mode(mode)
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-    )
-    for key, value in (options or {}).items():
-        writer = writer.option(key, value)
-    writer.save()
-
-
 def compact_partition(
     spark,
     path: str,

@@ -1,6 +1,8 @@
 import datetime as dt
 import math
 import os
+import re
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -115,6 +117,7 @@ def compare_query(spark, duck, qfn, sql, sf_dir):
 # test_oracle_parity) -- still gates every release: run it with
 #   SPARK_GRAFT_FULL_SUITE=1 python -m pytest tests/        (everything)
 #   python -m pytest tests/ -m slow                          (slow tier only)
+# and a slow test named by node id (tests/f.py::test_x) always runs.
 # Times from two instrumented full runs (2026-08-18, idle box,
 # --durations); the >=8s bar cuts the default run from ~2355s to
 # ~1185s measured.
@@ -202,15 +205,32 @@ def pytest_configure(config):
     )
 
 
+def _named_on_command_line(config, item) -> bool:
+    """True when a `path::test` argument selects ``item`` directly (a
+    bare test name selects all its parametrizations)."""
+    for arg in config.args:
+        path, sep, name = arg.partition("::")
+        if not sep:
+            continue
+        target = Path(config.invocation_params.dir, path).resolve()
+        item_name = item.nodeid.partition("::")[2]
+        if target == item.path.resolve() and (
+            item_name == name or item_name.startswith(name + "[")
+        ):
+            return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
-    full = os.environ.get("SPARK_GRAFT_FULL_SUITE", "")
+    full = os.environ.get("SPARK_GRAFT_FULL_SUITE", "").strip().lower()
     markexpr = getattr(config.option, "markexpr", "") or ""
+    # the full suite on request, or an explicit -m expression naming the
+    # `slow` mark: the caller is steering tiers themselves -- don't skip
+    steered = full not in ("", "0", "false") or re.search(r"\bslow\b", markexpr)
     for item in items:
         if _is_slow(item.nodeid):
             item.add_marker(pytest.mark.slow)
-            # an explicit -m expression mentioning `slow` means the
-            # caller is steering tiers themselves -- don't skip
-            if not full and "slow" not in markexpr:
+            if not steered and not _named_on_command_line(config, item):
                 item.add_marker(
                     pytest.mark.skip(
                         reason="slow tier: SPARK_GRAFT_FULL_SUITE=1 or -m slow"

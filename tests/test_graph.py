@@ -421,6 +421,18 @@ def test_kcore_deterministic_and_early_exit(spark):
     assert a == b == [(1, 2), (2, 2), (3, 2), (4, 1)]
 
 
+def test_kcore_nonconvergence_raises(spark):
+    """A path needs ~length/2 H-index rounds; a smaller budget must
+    raise rather than return over-estimated coreness."""
+    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
+        kcore_numbers,
+    )
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(12)], "pa long, pb long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kcore_numbers(df, max_iters=2)
+
+
 def test_kcore_ignores_self_loops(spark):
     """Standard k-core convention: a self-loop is not a neighbor. A
     triangle keeps coreness 2; a self-loop-only node disappears from
