@@ -7,9 +7,8 @@ logic, not a distributed operator -- here it is a pluggable protocol
 without touching the jobs).
 
 Fixes the reference's triple-recompute flaw (actions at ref :113, :119,
-:125 with no cache): callers pass an already-persisted frame, and
-``build_alert`` runs the count and the deterministic top-k off that one
-materialization.
+:125 with no cache): ``build_alert`` runs ONE action, the deterministic
+top-k, and the discrepancy count rides it as an observed metric.
 """
 
 from __future__ import annotations
@@ -17,10 +16,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .plans.reconcile import discrepancies, top_discrepancies
+from .plans.reconcile import top_discrepancies
 
 
 @dataclass
@@ -57,15 +56,21 @@ class CollectingSink:
 def build_alert(reconciled: DataFrame, k: int = 5) -> Alert | None:
     """Count + deterministic top-k examples; None when fully reconciled.
 
-    ``reconciled`` should be persisted (or re-read from the written
-    output) by the caller -- the pipeline does this -- so the two actions
-    here do not recompute the join DAG (fixes SURVEY.md SS4.3.1).
+    One Spark job: the count is an ``Observation`` on ``reconciled``
+    that rides the top-k ``collect()``. The top-k
+    (TakeOrderedAndProject) consumes every row of its input, so the
+    observed count is exact. ``reconciled`` should be re-read from the
+    written output (the pipeline does this) or persisted, so the action
+    does not recompute the join DAG (fixes SURVEY.md SS4.3.1).
     """
-    disc = discrepancies(reconciled)
-    n = disc.count()
+    obs = Observation("alert")
+    observed = reconciled.observe(
+        obs, F.count(F.when(F.col("discrepancy_amount") != 0, 1)).alias("n")
+    )
+    examples = [r.asDict() for r in top_discrepancies(observed, k).collect()]
+    n = obs.get["n"]
     if n == 0:
         return None
-    examples = [r.asDict() for r in top_discrepancies(reconciled, k).collect()]
     return Alert(count=n, examples=examples)
 
 

@@ -6,10 +6,15 @@ Mirrors dags/retail_pipeline_dag.py:95-100 --
 
 -- with the warehouse loads' DELETE-then-COPY idempotency collapsed into
 dynamic-partition-overwrite writes (sources/writers.py), and the alert
-actions running off the *written* reconciliation output instead of
-recomputing the join DAG (fixes the reference's triple recompute,
-SURVEY.md SS4.3.1: actions at glue_job_2_reconcile.py:113,119,125 with
-no cache).
+running off the *written* reconciliation output instead of recomputing
+the join DAG (fixes the reference's triple recompute, SURVEY.md
+SS4.3.1: actions at glue_job_2_reconcile.py:113,119,125 with no cache).
+
+``Pipeline.run`` starts every task whose dependencies are done, so
+``stage_sales`` and ``build_dims`` overlap as they do in the reference.
+A day costs one pass over the fact table for the inventory (the
+ledger) plus the staging scan, and every zone read declares its
+``schemas`` contract, so no job is spent inferring a schema.
 """
 
 from __future__ import annotations
@@ -19,13 +24,14 @@ import datetime as dt
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..alerts import Alert, AlertSink, build_alert
 from ..pipeline import Pipeline
 from ..sources.writers import write_partitioned, write_single_file
 from . import fixtures
 from .audit import lint_plan
 from .build_dims import build_dim_products
-from .reconcile import reconcile
+from .reconcile import reconcile_from_ledger
 from .stage_sales import stage_sales
 
 
@@ -94,18 +100,20 @@ def run_daily_pipeline(
         # upstream jobs wrote (ref glue_job_2_reconcile.py:50,74), not
         # from in-memory frames -- the jobs stay independently runnable
         staged = (
-            spark.read.parquet(stage)
+            spark.read.schema(schemas.STAGED_SALES)
+            .parquet(stage)
             .where(F.col("date_key") == F.lit(d))
             .select("sku", "total_quantity_sold")
         )
-        dim = spark.read.parquet(dims)
-        opening = fixtures.inventory_snapshot(
-            spark, sf_dir, d - dt.timedelta(days=1), inject_shrinkage=False
-        ).select("sku", F.col("stock_on_hand").alias("opening_stock"))
-        closing = fixtures.inventory_snapshot(
-            spark, sf_dir, d, inject_shrinkage=True
-        ).select("sku", F.col("stock_on_hand").alias("actual_closing_stock"))
-        out = reconcile(opening, closing, staged, dim, d)
+        dim = spark.read.schema(schemas.DIM_PRODUCTS).parquet(dims)
+        # opening and closing stock from one fact pass: closing holds
+        # every sku opening does, so the ledger's rows are the full
+        # outer join of the two snapshots (J1), opening NULL where the
+        # sku first ships on d
+        stock = fixtures.inventory_ledger(spark, sf_dir, d).select(
+            "sku", "opening_stock", "actual_closing_stock"
+        )
+        out = reconcile_from_ledger(stock.join(staged, "sku", "left"), dim, d)
         if lint:
             lint_plan(out)
         obs = Observation("reconcile_audit")
@@ -121,9 +129,13 @@ def run_daily_pipeline(
         return recon_path
 
     def alert(reconcile: str) -> Alert | None:
-        # two actions (count + top-k) off the written parquet: one scan
-        # of a day partition each, zero join recomputation
-        recon = spark.read.parquet(reconcile).where(F.col("date_key") == F.lit(d))
+        # one action off the written parquet: a scan of the day
+        # partition, zero join recomputation
+        recon = (
+            spark.read.schema(schemas.RECONCILED_INVENTORY)
+            .parquet(reconcile)
+            .where(F.col("date_key") == F.lit(d))
+        )
         a = build_alert(recon, top_k)
         if a is not None and alert_sink is not None:
             alert_sink.publish(a)

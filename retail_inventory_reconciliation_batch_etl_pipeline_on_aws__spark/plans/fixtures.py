@@ -30,6 +30,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TRACKED_MOD = 10  # p_partkey % 10 == 3 -> warehouse does not track this sku
 UNTRACKED_REMAINDER = 3
@@ -62,9 +63,22 @@ def ensure_session_conf(spark: SparkSession) -> None:
     _CONF_APPLIED.add(id(spark))
 
 
+_SCHEMA_CACHE: dict[str, StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Read one input table.
+
+    The schema is inferred once per path and then declared on every
+    later read: inference reads a parquet footer in a Spark job of its
+    own, which would otherwise run on each read of each table. Memoized
+    on the premise of ``_PROCESSING_DATE_CACHE``: the testdata does not
+    change."""
     ensure_session_conf(spark)
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    path = f"{sf_dir}/{table}.parquet"
+    if path not in _SCHEMA_CACHE:
+        _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMA_CACHE[path]).parquet(path)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -20,7 +20,8 @@ Scale notes:
   and AQE skew-split handles zipfian hot SKUs.
 - The reference recomputes this whole plan up to 3x (write at :113,
   alert count at :119, alert sample at :125 -- no cache). The engine's
-  pipeline persists the result before fan-out (see alerts.build_alert).
+  pipeline writes the result once and alerts off the written day with
+  one action (see alerts.build_alert).
 """
 
 from __future__ import annotations

@@ -20,6 +20,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _cols(cols: str | list[str] | None) -> list[str]:
+    if not cols:
+        return []
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def _sorted_at_rest(
+    df: DataFrame,
+    partition_by: str | list[str] | None,
+    sort_within: str | list[str] | None,
+) -> DataFrame:
+    """Order each task's rows by the partition columns, then by
+    ``sort_within``.
+
+    A partitioned file write requires its input ordered by the
+    partition columns and adds that sort itself when the child does not
+    already provide it; the optimizer then drops a user sort that sits
+    below it (``EliminateSorts``), so ``sortWithinPartitions(sku)``
+    alone leaves the files unsorted. Leading with the partition columns
+    satisfies the write's required ordering, so the one sort is ours."""
+    sort_cols = _cols(sort_within)
+    if not sort_cols:
+        return df
+    return df.sortWithinPartitions(*_cols(partition_by), *sort_cols)
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -32,11 +58,8 @@ def write_partitioned(
     once (README.md:114's replayability contract); other days' partitions
     are untouched.
     """
-    cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    if sort_within:
-        sort_cols = [sort_within] if isinstance(sort_within, str) else list(sort_within)
-        df = df.sortWithinPartitions(*sort_cols)
-    df.write.mode("overwrite").partitionBy(*cols).parquet(path)
+    df = _sorted_at_rest(df, partition_by, sort_within)
+    df.write.mode("overwrite").partitionBy(*_cols(partition_by)).parquet(path)
 
 
 def write_bucketed(
@@ -59,11 +82,9 @@ def write_bucketed(
     sort. Bucketing requires the table catalog (``saveAsTable``), not a
     bare path write.
     """
-    bcols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bcols)
+    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *_cols(bucket_by))
     if sort_by:
-        scols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-        writer = writer.sortBy(*scols)
+        writer = writer.sortBy(*_cols(sort_by))
     writer.saveAsTable(table)
 
 
@@ -91,17 +112,13 @@ def write_range_sorted(
     one-directory-per-value is unusable. ``sort_extra`` appends
     secondary sort columns inside each file (minor SORTKEY columns).
     """
-    cols = [range_by] if isinstance(range_by, str) else list(range_by)
+    cols = _cols(range_by)
     ranged = (
         df.repartitionByRange(num_files, *cols)
         if num_files is not None
         else df.repartitionByRange(*cols)
     )
-    scols = cols + (
-        [sort_extra]
-        if isinstance(sort_extra, str)
-        else list(sort_extra or [])
-    )
+    scols = cols + _cols(sort_extra)
     ranged.sortWithinPartitions(*scols).write.mode(mode).parquet(path)
 
 
@@ -241,13 +258,9 @@ def write_orc(
     the same idempotent dynamic-partition-overwrite + sorted-at-rest
     contract as the parquet writer; ``readers.read_orc`` is the
     consuming side."""
-    if sort_within:
-        sort_cols = [sort_within] if isinstance(sort_within, str) else list(sort_within)
-        df = df.sortWithinPartitions(*sort_cols)
-    writer = df.write.mode("overwrite")
+    writer = _sorted_at_rest(df, partition_by, sort_within).write.mode("overwrite")
     if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        writer = writer.partitionBy(*cols)
+        writer = writer.partitionBy(*_cols(partition_by))
     writer.orc(path)
 
 
@@ -315,7 +328,7 @@ def merge_upsert(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    keys = _cols(key_cols)
     if version_col is not None:
         w = Window.partitionBy(*keys).orderBy(F.col(version_col).desc())
         updates = (
@@ -411,13 +424,9 @@ def write_avro(
             "spark-avro connector not on the classpath; add "
             "org.apache.spark:spark-avro_2.13 to spark.jars.packages"
         )
-    if sort_within:
-        sort_cols = [sort_within] if isinstance(sort_within, str) else list(sort_within)
-        df = df.sortWithinPartitions(*sort_cols)
-    writer = df.write.mode("overwrite").format("avro")
+    writer = _sorted_at_rest(df, partition_by, sort_within).write.mode("overwrite").format("avro")
     if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        writer = writer.partitionBy(*cols)
+        writer = writer.partitionBy(*_cols(partition_by))
     writer.save(path)
 
 
@@ -439,7 +448,7 @@ def small_file_report(
     """
     from pyspark.sql import functions as F
 
-    group = ([by] if isinstance(by, str) else list(by)) if by else []
+    group = _cols(by)
     files = (
         spark.read.parquet(path)
         .select(

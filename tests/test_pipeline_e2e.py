@@ -84,6 +84,49 @@ def test_daily_pipeline_end_to_end(spark, tmp_path):
     assert before == after
 
 
+def test_daily_pipeline_one_fact_pass_and_job_budget(spark, tmp_path, monkeypatch):
+    """Shape pins of the daily DAG.
+
+    - The reconcile frame's optimized plan holds ONE lineitem relation:
+      opening and closing stock come from one ledger aggregation (the
+      two snapshot aggregations it replaced held two).
+    - A warm day infers no schema: every zone read declares its contract
+      and ``fixtures.load`` memoizes the input schemas, so no 1-task
+      ``parquet at`` footer-reading job runs (there were 9 per day).
+    - The whole warm day runs at most JOB_BUDGET Spark jobs; the DAG it
+      replaced ran 22 on the benchmark's input."""
+    import re
+
+    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans import daily
+
+    JOB_BUDGET = 10  # was 22: 9 inference, 6 reconcile, 3 alert jobs among them
+    linted = []
+    monkeypatch.setattr(daily, "lint_plan", linted.append)
+    out = str(tmp_path / "lake")
+    run_daily_pipeline(spark, TESTDATA, out)
+    (recon,) = [df for df in linted if "discrepancy_amount" in df.columns]
+    plan = recon._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \[[^\]]*\bl_shipdate\b", plan)) == 1, plan
+
+    sc = spark.sparkContext
+    group = "daily-shape-probe"
+    sc.setJobGroup(group, "warm daily run")
+    try:
+        run_daily_pipeline(spark, TESTDATA, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in jobs
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert not [s.name for s in stages if s.name.startswith("parquet at")]
+    assert 0 < len(jobs) <= JOB_BUDGET, [s.name for s in stages]
+
+
 def test_streaming_parquet_sink_idempotent(spark, tmp_path):
     # stage events as two time-ordered files so the watermark advances
     # and append mode finalizes the early windows
