@@ -81,11 +81,10 @@ def throttle_alerts(
     order_col: str = "event_id",
     cooldown_s: int = 600,
 ) -> DataFrame:
-    """Alert-storm suppression (batch twin of
-    ``streaming.events.streaming_alert_throttle``): per key, keep an
-    alert iff it fires at least ``cooldown_s`` AFTER the last KEPT
-    alert -- the greedy selection that turns a 10k-row error burst into
-    one page per cooldown.
+    """Alert-storm suppression: per key, keep an alert iff it fires at
+    least ``cooldown_s`` AFTER the last KEPT alert -- the greedy
+    selection that turns a 10k-row error burst into one page per
+    cooldown.
 
     This is genuinely NOT window-expressible: the decision chains off
     the last *kept* row, not the previous row (``lag`` spells the

@@ -143,105 +143,3 @@ def column_profile(
         ]
     )
     return wide.select(F.explode(entries).alias("e")).select("e.*")
-
-
-def referential_report(
-    fact: DataFrame,
-    refs: dict[str, tuple[DataFrame, str]],
-) -> DataFrame:
-    """Foreign-key orphan counts in ``quality_report``'s (check,
-    n_violations) shape -- the cross-table contract the single-frame
-    checks can't express (the DDL's unenforced REFERENCES intent:
-    warehouse engines parse FK clauses but do not police them, so the
-    pipeline must).
-
-    ``refs`` maps a fact column to (dim_frame, dim_column). Each check
-    is a LEFT ANTI join counting fact rows whose non-null key has no
-    dim match; dims are broadcast when small (Catalyst decides), the
-    fact is scanned once per declared key. NULL keys are not orphans --
-    declare the column in ``quality_report(not_null=...)`` to forbid
-    them separately.
-    """
-    parts = []
-    for col, (dim, dim_col) in refs.items():
-        orphans = (
-            fact.where(F.col(col).isNotNull())
-            .join(
-                dim.select(F.col(dim_col).alias(col)).distinct(),
-                col,
-                "left_anti",
-            )
-            .agg(F.count("*").cast("long").alias("n_violations"))
-            .select(
-                F.lit(f"fk:{col}->{dim_col}").alias("check"), "n_violations"
-            )
-        )
-        parts.append(orphans)
-    if not parts:
-        raise ValueError("no foreign keys declared")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def range_checksums(
-    df: DataFrame,
-    key: str,
-    n_buckets: int = 64,
-    cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Anti-entropy range digests (the Merkle-tree idea Dynamo/Cassandra
-    replicas use, flattened to one level): bucket rows by key hash and
-    aggregate a COMMUTATIVE per-bucket digest -- sum of row hashes mod
-    2^63 -- so two replicas of a table can be compared with
-    ``n_buckets`` rows instead of a full-row join, and a divergence is
-    localized to its bucket before any row-level repair query runs.
-
-    Order-independence matters: sums commute, so partitioning, file
-    order, and shuffle nondeterminism cannot change the digest; only
-    row CONTENT can. One map-side-combined aggregate; nothing but
-    (bucket, count, digest) crosses the shuffle.
-    """
-    use = list(cols or df.columns)
-    row_hash = F.xxhash64(*[F.col(c) for c in use])
-    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    return (
-        df.select(bucket.alias("bucket"), row_hash.alias("_h"))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            # accumulate in DECIMAL(38,0) (ANSI-safe -- a long sum of
-            # 2^62-sized terms overflows), fold back to a long digest
-            F.pmod(
-                F.sum(F.pmod(F.col("_h"), F.lit(2**62)).cast("decimal(38,0)")),
-                F.lit(2**62).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("digest"),
-        )
-        .orderBy("bucket")
-    )
-
-
-def diff_ranges(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Buckets where two ``range_checksums`` outputs disagree -- the
-    repair worklist. Full-outer on bucket so a bucket present in only
-    one replica (missing rows hash-side) also surfaces."""
-    aa = a.select(
-        "bucket",
-        F.col("n_rows").alias("n_rows_a"),
-        F.col("digest").alias("digest_a"),
-    )
-    bb = b.select(
-        "bucket",
-        F.col("n_rows").alias("n_rows_b"),
-        F.col("digest").alias("digest_b"),
-    )
-    j = aa.join(bb, "bucket", "full_outer")
-    return j.where(
-        ~(
-            F.col("n_rows_a").eqNullSafe(F.col("n_rows_b"))
-            & F.col("digest_a").eqNullSafe(F.col("digest_b"))
-        )
-    ).orderBy("bucket")

@@ -194,45 +194,16 @@ def rolling_fingerprint(col: Column | str, base: int = 31, mod: int = 2147483647
     )
 
 
-def simhash32(col: Column | str) -> Column:
-    """32-bit SimHash over whitespace tokens -- single-pass, shuffle-free.
-
-    Classic simhash: per bit position i, sum +-1 over token hashes' bit i;
-    final bit i = 1 iff the sum > 0. Implemented entirely with SQL
-    higher-order functions (transform/aggregate) so the whole thing is
-    one projection -- no explode, no shuffle, no UDF. (SQL-expr form
-    because ``shiftright(h, i)`` with a *column* shift count is SQL-only;
-    the Python wrapper requires a literal.) The DuckDB oracle computes
-    the same thing via explode + group-by (see __spark_entry__.py).
-
-    Kept as the compact legacy variant; ``simhash64`` is the banding /
-    near-dup signature (256 buckets/band at 32-bit is quadratic-in-n
-    candidate volume at corpus scale).
-    """
-    name = col if isinstance(col, str) else col._jc.toString()
-    toks = f"filter(split({name}, '\\\\s+'), t -> t != '')"
-    hashes = f"transform({toks}, t -> cast(conv(substring(md5(t), 1, 8), 16, 10) as long))"
-    bit_counts = (
-        f"aggregate({hashes}, array_repeat(0L, 32), "
-        "(acc, h) -> zip_with(acc, "
-        "transform(sequence(0, 31), i -> (shiftright(h, i) & 1) * 2 - 1), "
-        "(a, b) -> a + cast(b as long)))"
-    )
-    final = (
-        f"aggregate(zip_with({bit_counts}, sequence(0, 31), "
-        "(cnt, i) -> if(cnt > 0, shiftleft(cast(1 as long), i), cast(0 as long))), "
-        "cast(0 as long), (acc, x) -> acc + x)"
-    )
-    return F.expr(final)
-
-
 def simhash64(col: Column | str) -> Column:
     """64-bit SimHash over whitespace tokens -- single-pass, shuffle-free.
 
-    Same construction as :func:`simhash32` but over a 64-bit token hash
-    (first 16 hex chars of md5). The token hash is assembled from two
-    32-bit halves -- ``shiftleft(hi, 32) + lo`` -- because ``conv`` of 16
-    hex chars can exceed signed-long range; the two-halves form lands on
+    Classic simhash: per bit position i, sum +-1 over token hashes' bit
+    i; final bit i = 1 iff the sum > 0, all in SQL higher-order
+    functions, so the whole thing is one projection -- no explode, no
+    shuffle, no UDF. The token hash is the first 16 hex chars of md5,
+    assembled from two 32-bit halves -- ``shiftleft(hi, 32) + lo`` --
+    because ``conv`` of 16 hex chars can exceed signed-long range; the
+    two-halves form lands on
     the exact two's-complement bit pattern instead. Bit extraction
     ``(shiftright(h, i) & 1)`` is correct for all 64 positions (the
     trailing ``& 1`` masks off arithmetic-shift sign extension), and the

@@ -4,7 +4,7 @@ Ladder, cheapest-first -- the strategy an LLM-data pipeline runs at
 100TB:
 
 1. ``exact_dedup``   -- sha256 content hash, one shuffle on the hash.
-2. ``simhash`` (functions.text.simhash32) -- shuffle-free signature;
+2. ``simhash`` (functions.text.simhash64) -- shuffle-free signature;
    grouping equal signatures finds aggressive near-dups.
 3. ``shingle_jaccard_pairs`` -- exact n-gram Jaccard on candidate pairs
    generated by a shingle equi-join (selective: only docs sharing a full
@@ -46,10 +46,11 @@ def _min_accepted_decimal(threshold: float) -> int:
     return r
 
 
-def rounded_prefix_alpha(m: int, threshold: float) -> int:
-    """Python twin of the in-plan alpha expression: the minimum
-    overlap the ROUNDED acceptance rule can admit for a document of
-    ``m`` shingles, derived in exact integer arithmetic.
+def _rounded_prefix_alpha_expr(threshold: float) -> F.Column:
+    """The minimum overlap the ROUNDED acceptance rule can admit for a
+    document of ``m = n_shingles`` shingles, as an in-plan expression
+    (BIGINT-widened so m * c never overflows), in exact integer
+    arithmetic.
 
     ``round(k/m, 4) >= t``  (exact rationals, HALF_UP)
       <=>  floor((20000k + m) / 2m) >= r0        [r0 = min accepted
@@ -60,18 +61,9 @@ def rounded_prefix_alpha(m: int, threshold: float) -> int:
     decimals), which can flip acceptance only when k/m sits within
     ~1 ulp of a decimal half-boundary -- moving k by 1 moves k/m by
     1/m >> ulp, so the double-regime boundary is within ONE unit of
-    the rational one. The returned alpha therefore subtracts a
-    1-shingle cushion (clamped to >= 1): one extra prefix token per
-    document buys completeness under every rounding regime.
-    """
-    r0 = _min_accepted_decimal(threshold)
-    k_rational = (m * (2 * r0 - 1) + 19_999) // 20_000
-    return max(1, k_rational - 1)
-
-
-def _rounded_prefix_alpha_expr(threshold: float) -> F.Column:
-    """Spark expression form of :func:`rounded_prefix_alpha` over the
-    ``n_shingles`` column (BIGINT-widened so m * c never overflows)."""
+    the rational one. The alpha therefore subtracts a 1-shingle
+    cushion (clamped to >= 1): one extra prefix token per document
+    buys completeness under every rounding regime."""
     c = 2 * _min_accepted_decimal(threshold) - 1
     return F.expr(
         f"greatest(1, ((CAST(n_shingles AS BIGINT) * {c} + 19999) "
@@ -227,7 +219,7 @@ def prefix_jaccard_pairs(
     full join's DF^2 fan-out dominates everything.
 
     The prefix length derives from the ROUNDED acceptance rule via
-    :func:`rounded_prefix_alpha` (the accept filter is
+    :func:`_rounded_prefix_alpha_expr` (the accept filter is
     ``round(J, 4) >= t``, which admits Jaccard values half a decimal
     quantum below t on large documents), so any binary-double
     threshold is safe; the default matches ``shingle_jaccard_pairs``.
@@ -428,64 +420,34 @@ def _containment_shingles(
     return exploded, sizes
 
 
-def prefix_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-) -> DataFrame:
-    """Directional containment pairs (|A n B| / |A| >= num/den) with
-    the PPJoin+ OVERLAP-threshold prefix filter (Xiao et al. 2008's
-    containment variant of the Chaudhuri/Bayardo prefix principle):
-    identical output contract to the raw shared-shingle spelling
-    (doc_a contained in doc_b, both orientations, self-pairs
-    excluded), provably-lossless candidate pruning.
-
-    The theorem, per direction: containment A->B at threshold t needs
-    overlap alpha(A) = ceil(t*|A|); if |A n B| >= alpha then among
-    A's first ``|A| - alpha + 1`` shingles under ANY global total
-    order at least one is in B (otherwise the whole overlap would fit
-    in A's last ``alpha - 1`` shingles). So joining A's PREFIX
-    against B's FULL shingle set loses no true directed pair, and
-    normalizing directed candidates to unordered pairs before the
-    symmetric-overlap verify covers both orientations. Recall is 1.0
-    by construction -- strict-parity shares the raw-join oracle.
-
-    Why it matters at 100 TB: the raw shared-shingle self-join fans
-    out DF^2 on every shingle, so one boilerplate shingle shared by k
-    docs contributes k^2/2 candidate rows. Here the join is
-    prefix x full = DF_pref * DF, and under the rarest-first global
-    order (ascending document frequency) a hot shingle is in almost
-    nobody's prefix: DF_pref ~ 0 exactly where DF explodes. The
-    contained side cannot be prefix-filtered harder than this without
-    a size lower bound (a 1-shingle doc's alpha is 1), which is why
-    the container side joins FULL -- completeness over symmetry.
-
-    alpha is EXACT integer arithmetic derived from the ROUNDED
-    acceptance rule (``round(k/m, 4) >= t`` admits overlaps half a
-    decimal quantum below ``ceil(t*m)`` for m >= ~20k shingles --
-    see :func:`rounded_prefix_alpha`), never ``ceil(t * m)`` in
-    doubles: 0.8*5 rounds up to 4.0000000000000002 and a float ceil
-    would inflate alpha, shorten the prefix, and silently lose true
-    pairs.
-    """
-    exploded, sizes = _containment_shingles(df, text_col, id_col, n)
-    return _prefix_containment_from_shingles(
-        exploded, sizes, threshold_num, threshold_den
-    )
-
-
 def _prefix_containment_from_shingles(
     exploded: DataFrame,
     sizes: DataFrame,
     threshold_num: int,
     threshold_den: int,
 ) -> DataFrame:
-    """PPJoin+ prefix route over a pre-shingled frame (see
-    :func:`prefix_containment_pairs` for the theorem and
-    :func:`containment_pairs` for when this route wins)."""
+    """PPJoin+ OVERLAP-threshold prefix route over a pre-shingled
+    frame (Xiao et al. 2008's containment variant of the
+    Chaudhuri/Bayardo prefix principle); see :func:`containment_pairs`
+    for when this route wins.
+
+    The theorem, per direction: containment A->B at threshold t needs
+    overlap alpha(A); if |A n B| >= alpha then among A's first
+    ``|A| - alpha + 1`` shingles under ANY global total order at least
+    one is in B (otherwise the whole overlap would fit in A's last
+    ``alpha - 1`` shingles). So joining A's PREFIX against B's FULL
+    shingle set loses no true directed pair, and normalizing directed
+    candidates to unordered pairs before the symmetric-overlap verify
+    covers both orientations. Recall is 1.0 by construction.
+
+    Under the rarest-first global order (ascending document frequency)
+    a hot shingle is in almost nobody's prefix, so the join is
+    prefix x full = DF_pref * DF instead of the raw self-join's DF^2.
+    alpha is EXACT integer arithmetic from the ROUNDED acceptance rule
+    (:func:`_rounded_prefix_alpha_expr`), never ``ceil(t * m)`` in
+    doubles: 0.8*5 rounds up to 4.0000000000000002 and a float ceil
+    would inflate alpha, shorten the prefix, and silently lose true
+    pairs."""
     dfreq = exploded.groupBy("shingle").agg(F.count("*").alias("_df"))
     w = Window.partitionBy("_id").orderBy("_df", "shingle")
     alpha = _rounded_prefix_alpha_expr(threshold_num / threshold_den)
@@ -521,113 +483,6 @@ def _prefix_containment_from_shingles(
     return _containment_finish(shared_lt, sizes, threshold_num / threshold_den)
 
 
-def minhash_banded_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Banded MinHash LSH with exact-Jaccard verification -- the 100TB
-    near-dup path, built from pure DataFrame ops.
-
-    Each document is reduced ONCE to hashed shingles ``hs: array<long>``
-    (``xxhash64`` of each distinct word n-gram); every downstream step --
-    the per-function min-hash signature, the band buckets, and the exact
-    verification Jaccard -- operates on those 8-byte longs, so the string
-    shingles are never re-materialized or shuffled (3x faster than
-    hashing shingle strings per function at sf0.1). ``sig[i] =
-    min over hs of xxhash64(h, i)`` is deterministic (xxhash64 is
-    seed-fixed, no RNG). Banding ANDs ``num_hashes/bands`` signature rows
-    per band, so two docs become candidates with probability
-    ``1 - (1 - j^r)^b`` -- for r=2 a j=0.05 background pair collides with
-    p~1e-2 *per band*, while j>=0.7 pairs are caught with p~0.9.
-    Candidates then get exact ``array_intersect`` Jaccard verification on
-    the hashed shingles (64-bit collisions are negligible), so banding
-    affects recall only, never precision. Everything shuffles on narrow
-    (band, key) tuples or long arrays -- document text never moves.
-    """
-    # hash TOKENS once, then combine token hashes into shingle hashes
-    # with long-to-long xxhash64 folds -- the n-gram strings themselves
-    # are never materialized (string concat + long-string hashing was
-    # ~40% of the operator's time at sf0.1)
-    toks = tokens(text_col)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    acc = th
-    for k in range(1, n):
-        shifted = F.slice(th, k + 1, F.greatest(F.size(th) - k, F.lit(0)))
-        # zip_with pads the shorter side with nulls; propagate them (a
-        # raw xxhash64(x, null) would fabricate tail shingles) and let
-        # the final filter drop the incomplete positions
-        acc = F.zip_with(
-            acc,
-            shifted,
-            lambda x, y: F.when(
-                x.isNull() | y.isNull(), F.lit(None).cast("long")
-            ).otherwise(F.xxhash64(x, y)),
-        )
-    shingled = df.where(F.size(toks) >= n).select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(F.filter(acc, lambda x: x.isNotNull())).alias("hs"),
-    )
-    # the hashed-shingle frame feeds three plan branches (signature,
-    # verify-left, verify-right); persisting turns 3 tokenize+shingle
-    # passes over the corpus into 1 (it is also tiny: 8 bytes/shingle)
-    shingled = shingled.persist()
-    sig = shingled.withColumn(
-        "sig",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("hs"), lambda h, idx=i: F.xxhash64(h, idx))
-            ),
-        ),
-    )
-    rows_per_band = num_hashes // bands
-    # band key collapsed to ONE scalar hash: an equality join on a scalar
-    # is a shuffle-hash equi-join; joining on an array column degrades to
-    # a nested-loop cross product (measured 10x slower at sf0.1)
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    b, F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("bucket"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b"))
-        .distinct()
-    )
-    sh_a = shingled.select(F.col("_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sh_b = shingled.select(F.col("_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    return (
-        candidates.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
-                / F.size(F.array_union("hs_a", "hs_b")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 #: Pinned universal-hash permutations for the PORTABLE banded-MinHash
 #: family: ``h_i(x) = (A_i * x + B_i) mod P`` with P = 2^31 - 1
 #: (Mersenne prime). Derived once from the repo's md5 hex-fold idiom
@@ -659,12 +514,10 @@ def minhash_banded_pairs_portable(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Banded MinHash LSH with exact-Jaccard verification, built ONLY
-    from cross-engine arithmetic -- the oracle-paired twin of
-    ``minhash_banded_pairs`` (r12 verdict item #3: the rows-only ->
+    from cross-engine arithmetic (r12 verdict item #3: the rows-only ->
     paired conversion playbook applied to the LSH hash family itself).
 
-    Same algorithm, different hash family: where the production path
-    hashes with ``xxhash64`` (JVM-only), this one reduces each n-gram
+    Instead of ``xxhash64`` (JVM-only), it reduces each n-gram
     shingle to a BIGINT via the portable md5 hex-fold (first 8 hex
     digits -- the ``dataset_split`` / winnowing idiom) and drives the
     signature with the classic universal family ``(A*x + B) mod P``

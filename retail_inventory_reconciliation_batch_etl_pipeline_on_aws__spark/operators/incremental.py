@@ -19,16 +19,15 @@ each of those lives in exactly one of {old, delta}), so the union is a
 plain append -- no dedup pass needed.
 
 Scale posture: a refresh scans ONLY the deltas plus key-lookups into
-the stored sides. With the stored sides bucketed by the join key (see
-``sources.writers``' bucketed marts), the two mixed terms are
-shuffle-free on the stored side, and dA |><| dB is a join of two small
-batches (typically broadcast). A full A |><| B recompute -- what the
-oracle does -- is the verification path, never the production path.
+the stored sides. With the stored sides bucketed by the join key, the
+two mixed terms are shuffle-free on the stored side, and dA |><| dB is
+a join of two small batches (typically broadcast). A full A |><| B
+recompute -- what the oracle does -- is the verification path, never
+the production path.
 
 Inner joins only: outer-join deltas need retractions (a B-side match
-arriving late must RETRACT an earlier null-extended row), which is the
-streaming state-store's job (``streaming/``), not an append-only batch
-merge.
+arriving late must RETRACT an earlier null-extended row), which is a
+state store's job, not an append-only batch merge.
 
 Reference anchor: the reference's per-day partition replace
 (`dags/retail_pipeline_dag.py:19-41`) refreshes facts a partition at a

@@ -1,27 +1,14 @@
-"""Z-order layout helpers COMPLEMENTING the canonical Morton writer.
+"""Z-order layout helper on top of the canonical Morton writer.
 
-The engine's one Morton implementation lives in
-``sources/writers.py`` (``zorder_key``: generic n-column interleave,
-``write_zordered``: auto min/max-scaled z-ordered parquet) -- r5 code,
-already measured and tested. This module adds the pieces the
-versioned-table OPTIMIZE ZORDER path and the layout diagnostics need
-WITHOUT duplicating the curve math:
-
-- ``zvalue16``: the 2-dimension/16-bit special case, delegating to
-  ``zorder_key`` (bit i of column k lands at 2i+k: x in the even
-  bits, y in the odd -- the classic interleave, pinned value-exact
-  against an independent SQL spelling by the ``zorder_curve`` oracle);
-- ``scale16``: fixed-point bucketing from EXPLICIT bounds, for
-  callers that already hold min/max as collected scalars (the
-  versioned ``compact(..., zorder=...)`` path) instead of the
-  broadcast-join scaling ``write_zordered`` does inline. Scaling to a
-  common width is REQUIRED before interleaving dimensions of unequal
-  width: raw bits from an 11-bit key and a 6-bit quantity leave the
-  Morton key's high bits owned entirely by the wide column,
-  degenerating the curve to a single-column sort (measured: 0% file
-  pruning on the narrow dimension without scaling);
-- ``file_prune_fraction``: footer-stats skip measurement, so layout
-  claims are numbers, not prose.
+The engine's one Morton implementation is ``sources/writers.zorder_key``
+(generic n-column interleave). ``zvalue16`` is its 2-dimension/16-bit
+special case (bit i of column k lands at 2i+k: x in the even bits, y in
+the odd -- the classic interleave, pinned value-exact against an
+independent SQL spelling by the ``zorder_curve`` oracle). Scaling to a
+common width is REQUIRED before interleaving dimensions of unequal
+width: raw bits from an 11-bit key and a 6-bit quantity leave the
+Morton key's high bits owned entirely by the wide column, degenerating
+the curve to a single-column sort.
 """
 
 from __future__ import annotations
@@ -32,97 +19,13 @@ from pyspark.sql import functions as F
 from ..sources.writers import zorder_key
 
 
-def scale16(col: Column, lo, hi) -> Column:
-    """Fixed-point scale ``col`` from [lo, hi] onto the full 16-bit
-    range [0, 65535] (clamped). lo/hi are domain constants or cheaply
-    collected min/max scalars -- exact integer arithmetic,
-    deterministic.
-
-    The value is clamped into [lo, hi] BEFORE scaling, and the
-    (diff * 65535) DIV span quotient runs entirely in DECIMAL(38,0)
-    IntegralDivide: in long arithmetic a span above ~1.4e14 wraps the
-    multiply (non-ANSI), silently scrambling the z-key -- data stays
-    correct but the clustering/pruning the key exists for degrades
-    arbitrarily. Decimal `/` is no fix either: precision-loss scale
-    reduction makes the quotient ROUND (half-up at the reduced scale)
-    before the floor, which crosses integer boundaries at large
-    spans. Clamped-diff * 65535 is at most ~2.4e24, well inside
-    DECIMAL(38,0), and `div` truncates exactly. The clamp,
-    subtraction, and span literal are ALL decimal: bounds like
-    (-2^62, 2^62) are each valid int64 yet their span 2^63 exceeds
-    Long.MAX, so a long literal or long subtraction anywhere would
-    overflow before the decimal cast could save it.
-
-    Raises ``ValueError`` when ``hi <= lo``: a degenerate domain would
-    make the span divisor zero (decimal ``div`` by zero is non-ANSI
-    NULL, silently nulling the z-key for every row) or negative;
-    collapsed min==max stats mean the dimension carries no information
-    and the caller should drop it rather than z-order on it."""
-    if int(hi) <= int(lo):
-        raise ValueError(
-            f"scale16: degenerate domain [lo={lo}, hi={hi}] -- hi must "
-            "exceed lo (a zero span would NULL the key via non-ANSI "
-            "decimal div-by-zero; drop the constant dimension instead)"
-        )
-    dec = "decimal(38,0)"
-
-    def dlit(v) -> Column:
-        # route big python ints through a string literal: F.lit() on an
-        # int past Long.MAX raises NumberFormatException
-        return F.lit(str(int(v))).cast(dec)
-
-    clamped = F.least(
-        F.greatest(col.cast("long").cast(dec), dlit(lo)), dlit(hi)
-    )
-    return F.call_function(
-        "div",
-        (clamped - dlit(lo)) * F.lit(65535),
-        dlit(hi - lo),
-    )
-
-
 def zvalue16(x: Column, y: Column) -> Column:
     """32-bit Morton key of two 16-bit dimensions (x in the even bits,
     y in the odd) -- ``zorder_key`` at n=2. Callers pre-scale each
-    dimension into [0, 2^16) (``scale16``); values beyond 16 bits are
+    dimension into [0, 2^16); values beyond 16 bits are
     masked, not errors, so the key is total on any input."""
     mask = F.lit(0xFFFF)
     return zorder_key(
         [x.cast("long").bitwiseAND(mask), y.cast("long").bitwiseAND(mask)],
         bits=16,
     )
-
-
-def file_prune_fraction(path, col: str, lo, hi) -> float:
-    """Fraction of data files a min/max-stats reader SKIPS for the
-    predicate ``lo <= col <= hi`` -- measured from real parquet footers
-    (pyarrow), the same statistics any engine's scan pruning uses.
-    ``path`` is a directory of ``part-*.parquet`` or an explicit list
-    of parquet file paths (e.g. a versioned snapshot's live file set).
-    Diagnostic helper for layout tests/reports; runs driver-side over
-    footers only (no data pages are read)."""
-    import glob as _glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(path)
-        if isinstance(path, (list, tuple))
-        else sorted(_glob.glob(os.path.join(path, "part-*.parquet")))
-    )
-    skipped = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
-        fmin, fmax = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                fmin = None
-                break
-            fmin = st.min if fmin is None else min(fmin, st.min)
-            fmax = st.max if fmax is None else max(fmax, st.max)
-        if fmin is not None and (fmax < lo or fmin > hi):
-            skipped += 1
-    return skipped / len(files) if files else 0.0

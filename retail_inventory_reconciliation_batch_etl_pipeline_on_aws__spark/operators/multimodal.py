@@ -5,11 +5,9 @@ with typed metadata; per-item decode/feature-extraction runs as
 Arrow-batched ``mapInPandas`` so payload bytes never cross a row-at-a-time
 Python boundary. ``decode_image`` is a REAL pure-Python header decoder
 for PNG and BMP, and ``decode_audio`` a REAL RIFF/WAVE chunk-walker
-(no media libs needed), ``extract_gif_frames`` does REAL
-container-level keyframe sampling (each sampled frame re-wrapped as a
-standalone valid GIF), ``decode_gray_pixels``/``resize_gray_pixels``/
-``encode_png_gray_pixels`` do REAL pixel-level decode -> integer box
-resample -> re-encode for the module's PNG/BMP containers; only model
+(no media libs needed), ``decode_frames`` a REAL GIF block walk, and
+``decode_gray_pixels``/``encode_png_gray_pixels`` do REAL pixel-level
+decode and re-encode for the module's PNG/BMP containers; only model
 inference (``extract_binary_features``'s byte-level stand-ins) remains
 a deterministic fake pending a real model runtime.
 """
@@ -271,119 +269,6 @@ def extract_binary_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
 
     return df.select(id_col, "payload").mapInPandas(batches, FEATURE_SCHEMA)
-
-
-#: resize output: payload bytes + the metadata struct a real decoder
-#: would parse from the image header
-RESIZED_SCHEMA = (
-    "doc_id bigint, resized binary, width int, height int, channels int"
-)
-
-
-def resize_gray_pixels(
-    pixels: list[list[int]], out_w: int, out_h: int
-) -> list[list[int]]:
-    """REAL integer box resample of a grayscale matrix: output pixel
-    (x, y) is the floor-mean of its source box
-    ``[y*h//out_h, max(+1, (y+1)*h//out_h)) x [x*w//out_w, ...)`` --
-    box mean when downscaling, nearest-neighbor when upscaling (the
-    box degenerates to one pixel), ALL-INTEGER so the result is
-    platform/engine-exact. The same partition-of-the-source-grid rule
-    ``ahash64`` uses for its 8x8 blocks."""
-    h, w = len(pixels), len(pixels[0])
-    out = []
-    for y in range(out_h):
-        y0, y1 = y * h // out_h, max(y * h // out_h + 1, (y + 1) * h // out_h)
-        row_out = []
-        for x in range(out_w):
-            x0, x1 = x * w // out_w, max(x * w // out_w + 1, (x + 1) * w // out_w)
-            acc = 0
-            for yy in range(y0, y1):
-                src = pixels[yy]
-                for xx in range(x0, x1):
-                    acc += src[xx]
-            row_out.append(acc // ((y1 - y0) * (x1 - x0)))
-        out.append(row_out)
-    return out
-
-#: frame sampling output: one row per sampled frame, ordered by index
-FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame binary, frame_bytes bigint"
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow-batched REAL image resize over binary payloads: pixel
-    decode (``decode_gray_pixels``: zlib/filter-0 PNG inflate or
-    bottom-up BMP walk with integer luma) -> integer box resample
-    (``resize_gray_pixels``) -> re-encode as a VALID 8-bit grayscale
-    PNG (``encode_png_gray_pixels``). No media libs: the whole path is
-    the module's own pure-Python codecs, deterministic to the byte.
-
-    Plan shape unchanged from the pre-r8 stub: binary-in/binary-out
-    through Arrow batches, typed metadata columns, per-batch (never
-    per-row) Python dispatch; pixels exist only inside the scan-side
-    stage -- downstream sees payloads and typed dims. Output channels
-    is 1 (grayscale): BMP color inputs pass through the same integer
-    luma the aHash path uses, so resized payloads feed ``image_ahash``
-    directly.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = [
-                encode_png_gray_pixels(
-                    resize_gray_pixels(decode_gray_pixels(p), width, height)
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "resized": resized,
-                    "width": width,
-                    "height": height,
-                    "channels": 1,
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, RESIZED_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Video frame sampling as a one-to-many Arrow-batched transform
-    (decode STUBBED): each payload yields ``n_frames`` evenly-spaced
-    'frames' (deterministic byte slices standing in for ffmpeg keyframe
-    extraction). The exploded output shape -- one row per (doc, frame),
-    stable frame_idx ordering -- is exactly what a downstream embedding
-    stage partitions on.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                n = max(len(payload), 1)
-                step = max(n // n_frames, 1)
-                for i in range(n_frames):
-                    lo = min(i * step, n - 1)
-                    frames.append(bytes(payload[lo : lo + step]))
-                    ids.append(doc_id)
-                    idxs.append(i)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                    "frame_bytes": pd.Series(
-                        [len(f) for f in frames], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, FRAME_SCHEMA)
 
 
 #: image header decode output
@@ -737,81 +622,6 @@ def frame_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
 
     return df.select(id_col, "payload").mapInPandas(batches, FRAMES_SCHEMA)
-
-
-def extract_gif_frames(payload: bytes, every: int = 1) -> list[bytes]:
-    """REAL frame extraction at the container level: walk the GIF and
-    re-wrap every ``every``-th frame (its Graphic Control Extension +
-    image descriptor + LZW data, bytes UNTOUCHED) with the original
-    header/palette into a standalone single-frame GIF. This is the
-    keyframe-sampling step of a video pipeline done honestly -- each
-    output is a VALID GIF any decoder renders; only pixel-level work
-    (re-encoding, model input tensors) still needs a media lib."""
-    if payload[:6] not in (b"GIF89a", b"GIF87a"):
-        raise ValueError("unsupported animation format (expect GIF)")
-    packed = payload[10]
-    hdr_end = 13 + (3 * (2 << (packed & 0x07)) if packed & 0x80 else 0)
-    header = payload[:hdr_end]
-    pos, frames, pending_ext = hdr_end, [], b""
-
-    def skip_subblocks(p: int) -> int:
-        while payload[p]:
-            p += payload[p] + 1
-        return p + 1
-
-    try:
-        while pos < len(payload):
-            tag = payload[pos]
-            if tag == 0x3B:
-                break
-            if tag == 0x21:
-                end = skip_subblocks(pos + 2)
-                # carry the graphic control extension with its frame
-                pending_ext = payload[pos:end] if payload[pos + 1] == 0xF9 else b""
-                pos = end
-            elif tag == 0x2C:
-                start = pos
-                ipacked = payload[pos + 9]
-                pos += 10 + (3 * (2 << (ipacked & 0x07)) if ipacked & 0x80 else 0)
-                pos += 1
-                pos = skip_subblocks(pos)
-                frames.append(pending_ext + payload[start:pos])
-                pending_ext = b""
-            else:
-                raise ValueError(f"corrupt GIF: unknown block 0x{tag:02x}")
-    except (IndexError, struct.error) as e:
-        raise ValueError("corrupt GIF: truncated") from e
-    return [header + f + b"\x3b" for f in frames[::every]]
-
-
-def sample_animation_frames(
-    df: DataFrame, every: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """The REAL sibling of ``sample_frames``: one row per sampled frame,
-    each a standalone VALID single-frame GIF sliced from the container
-    (``extract_gif_frames``). Output partitions on (doc, frame_idx) --
-    the shape a downstream embedding stage consumes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for i, payload in zip(pdf[id_col].astype("int64"), pdf["payload"]):
-                for k, fb in enumerate(extract_gif_frames(payload, every)):
-                    ids.append(int(i))
-                    idxs.append(k)
-                    frames.append(fb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                    "frame_bytes": pd.Series(
-                        [len(f) for f in frames], dtype="int64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, FRAME_SCHEMA)
 
 
 def decode_gray_pixels(payload: bytes) -> list[list[int]]:

@@ -112,13 +112,3 @@ def scd2_apply(
         *key_cols, *[F.col(f"_v.{c}") for c in (*attr_cols, *SCD2_COLS)]
     )
     return merged.unionByName(closed_rows)
-
-
-def scd2_as_of(history: DataFrame, as_of: dt.date | str) -> DataFrame:
-    """The dimension as it was on ``as_of`` (half-open interval
-    ``[valid_from, valid_to)``): the point-in-time slice fact joins use."""
-    d = F.lit(as_of).cast("date")
-    return history.where(
-        (F.col("valid_from") <= d)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > d))
-    ).drop(*SCD2_COLS)

@@ -1,9 +1,7 @@
 """Event-stream batch operators: windowed rollups and sessionization.
 
-The reference has no streaming surface (SURVEY.md SS2.9) -- these are
-the batch forms of the natural upgrade path; ``streaming/events.py``
-runs the same aggregation as a Structured Streaming query with a
-watermark.
+The reference has no streaming surface (SURVEY.md SS2.9); these are
+batch operators over the events table.
 """
 
 from __future__ import annotations
@@ -71,9 +69,8 @@ def sliding_rollup(
 
     ``F.window(ts, duration, slide)`` is the native Spark form --
     internally an Expand of duration/slide rows per event followed by
-    the same tumbling aggregation, exactly what the streaming twin
-    does with a watermark. Map-side combinable; the shuffle carries
-    (window, type) partials only.
+    the same tumbling aggregation. Map-side combinable; the shuffle
+    carries (window, type) partials only.
     """
     return (
         events.groupBy(

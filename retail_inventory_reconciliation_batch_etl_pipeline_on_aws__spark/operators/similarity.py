@@ -2,15 +2,17 @@
 
 - ``brute_force_topk``: exact cosine top-k. One scan + TakeOrderedAndProject
   (sort+limit never materializes a global sort). The correctness baseline.
-- ``lsh_ann_topk``: BucketedRandomProjectionLSH approximate variant --
-  the 100TB path: random-projection bucketing turns the scan into a
-  bucket-pruned candidate join. Seeded; rows-only correctness check.
+- ``pinned_rp_ann_topk``: sign-random-projection approximate variant --
+  the 100TB path: projection bucketing turns the scan into a
+  bucket-pruned candidate join, under a pinned (oracle-mirrorable)
+  projection.
 - ``cosine_pairs``: exact all-pairs cosine near-dup (the embedding twin
-  of shingle_jaccard_pairs); ``lsh_neardup_pairs`` is its LSH-bucketed
-  scale path.
-- ``ivf_topk``: inverted-file ANN -- deterministic Lloyd centroids,
-  cluster-pruned probe. Only the tiny centroid table (nlist x dim) ever
-  reaches the driver; vectors stay distributed.
+  of shingle_jaccard_pairs); ``rp_neardup_pairs_pinned`` is its
+  projection-bucketed scale path.
+- ``ivf_topk_pinned``: inverted-file ANN -- cluster-pruned probe under
+  a pinned coarse quantizer. ``build_pq_index`` trains the quantizer
+  with deterministic Lloyd steps; only the tiny centroid table
+  (nlist x dim) ever reaches the driver, vectors stay distributed.
 """
 
 from __future__ import annotations
@@ -87,37 +89,6 @@ def brute_force_topk(
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
-def lsh_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via random-projection LSH bucket pruning.
-
-    ``approxNearestNeighbors`` probes only matching hash buckets --
-    sub-linear candidate sets at scale. Returns (id, eucl_dist).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = embeddings.select(
-        F.col(id_col), array_to_vector(as_double_array(vec_col)).alias("_v")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_v", outputCol="_h", bucketLength=bucket_length,
-        numHashTables=num_tables, seed=seed,
-    ).fit(vecs)
-    from pyspark.ml.linalg import Vectors
-
-    res = lsh.approxNearestNeighbors(vecs, Vectors.dense(query_vec), k, distCol="dist")
-    return res.select(id_col, F.round("dist", 4).alias("dist"))
-
-
 def pinned_rp_ann_topk(
     embeddings: DataFrame,
     k: int = 10,
@@ -129,10 +100,10 @@ def pinned_rp_ann_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Sign-random-projection (SimHash-for-angles) ANN cosine top-k
-    under a PINNED projection matrix -- the oracle-paired twin of
-    ``lsh_ann_topk`` (r12 verdict item #3: the ``pq_adc_topk``
-    pinned-parameter playbook applied to the RP rung; the pyspark.ml
-    variant stays for API parity, its JVM RNG is not SQL-mirrorable).
+    under a PINNED projection matrix (r12 verdict item #3: the
+    ``pq_adc_topk`` pinned-parameter playbook applied to the RP rung;
+    pyspark.ml's BucketedRandomProjectionLSH is not SQL-mirrorable,
+    because its projections come from the JVM RNG).
 
     The projection matrix is DERIVED, not stored: coefficient
     c(t, p, dim) = md5-fold('rp:t:p:dim') % 19 - 9, an integer in
@@ -244,9 +215,10 @@ def cosine_pairs(
 
     This is a deliberate O(n^2) nested-loop join -- the exact ground
     truth / final-verification stage. The corpus-scale candidate
-    generator is ``lsh_neardup_pairs`` (same contract, LSH-bucketed);
-    running this exact verifier on LSH candidates instead of all pairs
-    is the production composition, mirroring minhash_banded_pairs.
+    generator is ``rp_neardup_pairs_pinned`` (same contract,
+    projection-bucketed); running this exact verifier on bucketed
+    candidates instead of all pairs is the production composition,
+    mirroring ``minhash_banded_pairs_portable``.
     """
     e = embeddings.select(
         F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
@@ -264,58 +236,6 @@ def cosine_pairs(
     )
 
 
-def lsh_neardup_pairs(
-    embeddings: DataFrame,
-    cos_threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 1.0,
-    num_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """LSH-bucketed embedding near-dup pairs -- the scale path for
-    ``cosine_pairs``.
-
-    Vectors are L2-normalized so cosine converts exactly to euclidean
-    distance (``d^2 = 2 - 2*cos``); ``approxSimilarityJoin`` then only
-    compares vectors sharing a random-projection bucket, and every
-    candidate is exactly verified against the distance threshold -- so
-    like the MinHash path, LSH affects recall only, never precision.
-    Seeded hash family => rows-only correctness check.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    from ..functions.vectors import l2_norm
-
-    dist_threshold = math.sqrt(max(0.0, 2.0 - 2.0 * cos_threshold))
-    norm = (
-        embeddings.select(
-            F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_a")
-        )
-        .withColumn("_n", l2_norm(F.col("_a")))
-        .select(
-            "_id",
-            array_to_vector(
-                F.transform(F.col("_a"), lambda x: x / F.col("_n"))
-            ).alias("_v"),
-        )
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_v", outputCol="_h", bucketLength=bucket_length,
-        numHashTables=num_tables, seed=seed,
-    ).fit(norm)
-    pairs = lsh.approxSimilarityJoin(norm, norm, dist_threshold, distCol="_d")
-    return (
-        pairs.where(F.col("datasetA._id") < F.col("datasetB._id"))
-        .select(
-            F.col("datasetA._id").alias("vec_a"),
-            F.col("datasetB._id").alias("vec_b"),
-            F.round(1.0 - F.col("_d") * F.col("_d") / 2.0, 4).alias("cos_sim"),
-        )
-    )
-
-
 def rp_neardup_pairs_pinned(
     embeddings: DataFrame,
     cos_threshold: float = 0.45,
@@ -326,10 +246,9 @@ def rp_neardup_pairs_pinned(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs via PINNED sign-random-projection
-    bucketing + exact quantized-cosine verification -- the
-    oracle-paired twin of ``lsh_neardup_pairs`` (r12 verdict item #3;
-    the pyspark.ml variant stays for API parity, its JVM RNG is not
-    SQL-mirrorable). Same projection-derivation idiom as
+    bucketing + exact quantized-cosine verification (r12 verdict item
+    #3: pyspark.ml's LSH is not SQL-mirrorable, because its
+    projections come from the JVM RNG). Same projection-derivation idiom as
     ``pinned_rp_ann_topk`` (coefficients = md5-fold('nd:t:p:dim') %
     19 - 9 over ``range()``, computed identically by both engines)
     but tuned for the PAIR workload: 6 tables x 3 sign planes, so a
@@ -586,64 +505,6 @@ def _ivf_means(assigned: DataFrame) -> dict:
     return {int(r.cluster): list(r.c) for r in means}
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: deterministic k-means
-    coarse quantizer + cluster-pruned exact search.
-
-    Training: centroids init from the ``nlist`` lowest-id vectors, then
-    ``iters`` Lloyd steps run as DataFrame jobs (assign = argmin over a
-    broadcast centroid literal; update = element-wise mean via
-    posexplode/groupBy). Only the nlist x dim centroid table crosses the
-    driver boundary per step -- the vectors themselves never collect, so
-    the same code trains on 10^9 vectors. Deterministic end to end: seeded
-    by ids, argmin ties broken by centroid index, means order-independent.
-
-    Search: probe the ``nprobe`` centroids nearest the query (driver-side
-    math on the tiny centroid table), scan only vectors assigned to those
-    clusters (a partition-prunable filter when the assignment is written
-    out partitioned by cluster), exact cosine within the probed subset.
-    """
-    e = embeddings.select(
-        F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
-    )
-    cents = [
-        list(r._v)
-        for r in e.orderBy("_id").limit(nlist).collect()
-    ]
-
-    for _ in range(iters):
-        assigned = _ivf_assign(e, cents)
-        by_cluster = _ivf_means(assigned)
-        cents = [by_cluster.get(i, cents[i]) for i in range(nlist)]
-
-    # driver-side probe selection on the tiny centroid table
-    def sq_dist(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    probe_order = sorted(range(len(cents)), key=lambda i: (sq_dist(cents[i], query_vec), i))
-    probes = probe_order[:nprobe]
-
-    assigned = _ivf_assign(e, cents).where(F.col("cluster").isin(probes))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        assigned.select(
-            F.col("_id").alias(id_col),
-            F.round(cosine(F.col("_v"), q), 4).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def ivf_topk_pinned(
     embeddings: DataFrame,
     k: int = 10,
@@ -658,8 +519,8 @@ def ivf_topk_pinned(
     inverted-file rung (r12 verdict item #3): IVF SERVING is pure
     arithmetic under a fixed centroid table, so the pairing needs no
     SQL Lloyd unroll; training quality stays pytest territory exactly
-    as for PQ. The quantizer is the seed state of ``ivf_topk``'s
-    trainer (the ``nlist`` lowest-id vectors, Lloyd iters=0).
+    as for PQ. The quantizer is the seed state of ``build_pq_index``'s
+    Lloyd trainer (the ``nlist`` lowest-id vectors, iters=0).
 
     Every step is exact BIGINT arithmetic both engines reproduce
     bit-for-bit: coordinates quantize at 1e-4; ASSIGN = argmin of the
@@ -734,130 +595,6 @@ def ivf_topk_pinned(
         .orderBy("d2", id_col)
         .limit(k)
         .select(id_col, "cell", "d2")
-    )
-
-
-def quantize_embeddings(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization -- the vector-index
-    compression step (4x smaller than float32, 8x smaller than the
-    double Spark would otherwise carry): ``scale = max|x| / 127``,
-    ``q_i = round(x_i / scale)`` in [-127, 127], dequantized value
-    ``q_i * scale`` is within ``scale/2`` of ``x_i`` per dimension --
-    the bound the test pins.
-
-    Pure HOF projection (no shuffle, no UDF): the quantized corpus is
-    what a 100 TB index actually stores and scans; exact re-scoring of
-    a candidate set (``ivf_topk``'s verify stage) dequantizes on the
-    fly. Zero vectors keep scale 0 and quantize to all-zeros.
-    """
-    x = as_double_array(vec_col)
-    scale = F.array_max(F.transform(x, F.abs)) / F.lit(127.0)
-    q = F.when(scale == 0, F.transform(x, lambda v: F.lit(0).cast("int"))).otherwise(
-        F.transform(x, lambda v: F.round(v / scale).cast("int"))
-    )
-    return embeddings.select(
-        F.col(id_col), scale.alias("scale"), q.alias("q_embedding")
-    )
-
-
-def quantized_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``brute_force_topk`` over the int8-quantized corpus: score =
-    cosine(dequantized, query). The ranking error is bounded by the
-    quantization error (<= scale/2 per dim), so top-k overlap with the
-    exact ranking stays high -- pinned by test, the same contract the
-    LSH/IVF paths carry. Same TakeOrderedAndProject shape; the scan
-    reads int8 + one float per vector instead of 4-byte floats.
-    """
-    qz = quantize_embeddings(embeddings, id_col, vec_col)
-    deq = F.transform("q_embedding", lambda v: v.cast("double") * F.col("scale"))
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = qz.select(
-        F.col(id_col),
-        F.round(cosine(deq, as_double_array(qv)), 4).alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    nlist: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index ``ivf_topk`` trains per call: the
-    production posture is train ONCE, write the assignment table
-    PARTITIONED BY cluster (so a probe scans only its clusters'
-    directories -- partition pruning does the inverted-file lookup) and
-    the nlist x dim centroid table beside it, then serve every query
-    from the artifact. Same deterministic Lloyd trainer; layout:
-
-        {path}/assignments/cluster=N/...   (id, vector)
-        {path}/centroids/                  (cluster, centroid)
-    """
-    e = embeddings.select(
-        F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
-    )
-    cents = [list(r._v) for r in e.orderBy("_id").limit(nlist).collect()]
-    for _ in range(iters):
-        assigned = _ivf_assign(e, cents)
-        by_cluster = _ivf_means(assigned)
-        cents = [by_cluster.get(i, cents[i]) for i in range(nlist)]
-    spark = embeddings.sparkSession
-    (
-        _ivf_assign(e, cents)
-        .select("_id", "_v", "cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{path}/assignments")
-    )
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cluster int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Serve a top-k from a persisted IVF index: probe selection is
-    driver-side math on the tiny centroid table; the assignment scan
-    filters ``cluster IN probes``, which partition-prunes to the probed
-    directories (asserted by plan test) -- the inverted-file property
-    realized with nothing but the partitioned layout."""
-    cents = {
-        int(r.cluster): list(r.centroid)
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    order = sorted(
-        cents, key=lambda i: (sum((x - y) ** 2 for x, y in zip(cents[i], query_vec)), i)
-    )
-    probes = order[:nprobe]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        spark.read.parquet(f"{path}/assignments")
-        .where(F.col("cluster").isin(probes))
-        .select(
-            F.col("_id").alias(id_col),
-            F.round(cosine(F.col("_v"), q), 4).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
     )
 
 
@@ -1013,70 +750,6 @@ def _pq_adc_expr(books: dict, query_vec: list, m: int, sub: int):
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 2,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization ADC top-k -- the vector-index COMPRESSION
-    rung of the ANN ladder (brute force -> LSH -> IVF -> int8 -> PQ):
-    each vector is encoded as ``m`` sub-codebook codes (here 8 bytes
-    for a 64-dim vector, 32x smaller than float32), and search scores
-    candidates by Asymmetric Distance Computation -- the query's
-    distance to each sub-centroid is precomputed once into an
-    ``m x ksub`` table and a vector's approximate distance is just
-    ``sum_j table[j][code_j]``, no float vector ever touched.
-
-    Training is one deterministic Lloyd loop over ALL subspaces at once
-    (the subspace id rides the cluster key), so the per-iteration cost
-    is ONE assign job + ONE means job regardless of ``m`` -- and only
-    the ``m x ksub x (dim/m)`` codebook (= dim * ksub floats, 1k
-    doubles here) ever reaches the driver; seeded by lowest-id vectors,
-    argmin ties to the lowest code, means order-independent -- fully
-    deterministic, like IVF. ADC candidates are exact-cosine re-ranked
-    (top ``rerank``), so quantization affects recall only, never the
-    reported scores (the engine-wide LSH discipline).
-    """
-    dim = len(query_vec)
-    sub = dim // m
-    e = embeddings.select(
-        F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
-    ).persist()
-    # codebooks/ADC run on L2-NORMALIZED vectors (see _l2_normalized);
-    # the exact re-rank itself uses the RAW vectors
-    sf = _pq_subframe(_l2_normalized(e), m, sub).persist()
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    query_vec = [x / qn for x in query_vec]
-
-    books = _pq_train(sf, m, ksub, iters)
-    # encode: (id, array<code>) -- the 8-byte representation
-    codes = _pq_encode(sf, books, m)
-    # ADC table: driver-side math on the tiny codebook
-    adc = _pq_adc_expr(books, query_vec, m, sub)
-    cand = (
-        codes.withColumn("_adc", adc)
-        .orderBy(F.col("_adc").asc(), F.col("_id").asc())
-        .limit(rerank)
-        .select("_id")
-    )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.join(e, "_id")
-        .select(
-            F.col("_id").alias(id_col),
-            F.round(cosine(F.col("_v"), q), 4).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def build_pq_index(
     embeddings: DataFrame,
     path: str,
@@ -1090,11 +763,10 @@ def build_pq_index(
 ) -> None:
     """Materialize an IVF-PQ index (the standard public composition,
     non-residual variant): a coarse IVF quantizer partitions the CODES
-    table by cluster (partition pruning IS the inverted-file lookup,
-    exactly like ``build_ivf_index``) and the PQ codebook compresses
-    each vector to ``m`` sub-codes -- at 100 TB the persisted artifact
-    is codes + codebook (~32x smaller than the float vectors), not the
-    vectors. ``pq_topk`` trains this per call; production trains ONCE
+    table by cluster (partition pruning IS the inverted-file lookup)
+    and the PQ codebook compresses each vector to ``m`` sub-codes --
+    at 100 TB the persisted artifact is codes + codebook (~32x smaller
+    than the float vectors), not the vectors. Production trains ONCE
     here and serves every query from the artifact. Layout:
 
         {path}/codes/cluster=N/...  (_id, codes array<int>)
@@ -1103,8 +775,7 @@ def build_pq_index(
 
     Fully deterministic (lowest-id seeding, first-min argmin,
     order-independent means): rebuilding from the same data yields a
-    bit-identical index, and serving equals in-memory training with the
-    same hyperparameters (both pinned by tests).
+    bit-identical index.
     """
     spark = embeddings.sparkSession
     e = embeddings.select(
@@ -1113,7 +784,9 @@ def build_pq_index(
     en = _l2_normalized(e).persist()
     dim = en.select(F.size("_v").alias("d")).first().d
     sub = dim // m
-    # coarse IVF on the normalized vectors (same trainer as ivf_topk)
+    # coarse IVF on the normalized vectors: Lloyd steps seeded by the
+    # nlist lowest-id vectors, argmin ties to the lowest centroid
+    # index -- deterministic end to end
     cents = [list(r._v) for r in en.orderBy("_id").limit(nlist).collect()]
     for _ in range(ivf_iters):
         by_cluster = _ivf_means(_ivf_assign(en, cents))
@@ -1220,8 +893,8 @@ def append_to_pq_index(
     exactly-once over an at-least-once append -- the standard
     idempotent-read discipline.
 
-    Returns ``{"seq", "n_appended", "mean_sq_distortion"}``; feed
-    :func:`pq_index_staleness` to decide when to retrain.
+    Returns ``{"seq", "n_appended", "mean_sq_distortion"}``; the
+    distortion's drift from the build's is the signal to retrain.
     """
     spark = embeddings.sparkSession
     if not index_marker_exists(spark, path):
@@ -1262,86 +935,6 @@ def append_to_pq_index(
         "seq int, n_appended long, mean_sq_distortion double",
     ).coalesce(1).write.mode("append").parquet(f"{path}/append_log")
     return {"seq": seq, "n_appended": int(n), "mean_sq_distortion": distortion}
-
-
-def pq_index_staleness(
-    spark,
-    path: str,
-    max_appended_fraction: float = 0.5,
-    max_distortion_ratio: float = 1.5,
-) -> dict:
-    """Staleness report for an appended-to IVF-PQ index: how much of
-    the corpus was encoded under a codebook that never saw it, and how
-    much worse it quantizes than the training data did. Retrain is
-    RECOMMENDED (never automatic -- it invalidates every persisted
-    code) when either the appended fraction or the distortion ratio
-    crosses its threshold; both thresholds follow public FAISS
-    guidance that an index trained on a representative sample serves
-    appends well until the distribution drifts."""
-    try:
-        log = spark.read.parquet(f"{path}/append_log")
-        row = log.agg(
-            F.sum("n_appended").alias("n"),
-            (
-                F.sum(F.col("n_appended") * F.col("mean_sq_distortion"))
-                / F.sum("n_appended")
-            ).alias("d"),
-        ).first()
-        appended, app_dist = int(row.n or 0), row.d
-    except AnalysisException:  # path not found: never appended.
-        # Anything else (corruption, transient FS failure) PROPAGATES --
-        # a silent n_appended=0 would suppress a due retrain
-        # recommendation (r10 ADVICE item).
-        appended, app_dist = 0, None
-    try:
-        base = spark.read.parquet(f"{path}/build_stats").first()
-        base_n, base_dist = int(base.n_vectors), float(base.mean_sq_distortion)
-    except AnalysisException:  # pre-r10 index persisted without stats
-        base_n, base_dist = None, None
-    return staleness_report(
-        base_n,
-        base_dist,
-        appended,
-        None if app_dist is None else float(app_dist),
-        max_appended_fraction,
-        max_distortion_ratio,
-    )
-
-
-def staleness_report(
-    base_n: int | None,
-    base_dist: float | None,
-    appended: int,
-    app_dist: float | None,
-    max_appended_fraction: float = 0.5,
-    max_distortion_ratio: float = 1.5,
-) -> dict:
-    """The pure gate math of :func:`pq_index_staleness`, factored out
-    so the decision logic is property-testable against an exact Python
-    model without Spark I/O per example. Invariants the hypothesis
-    suite pins: the weighted-mean inputs are the CALLER's (size-
-    weighted across append batches); ``appended_fraction`` is
-    monotone in ``appended`` and never exceeds 1; a missing side
-    (no appends / pre-stats index) can WAIVE the ratio gate but never
-    the fraction gate; recommendation is exactly the OR of the two
-    threshold breaches."""
-    total = (base_n or 0) + appended
-    frac = (appended / total) if total else 0.0
-    ratio = (
-        float(app_dist) / base_dist
-        if app_dist is not None and base_dist
-        else None
-    )
-    return {
-        "n_base": base_n,
-        "n_appended": appended,
-        "appended_fraction": round(frac, 6),
-        "base_distortion": base_dist,
-        "appended_distortion": app_dist,
-        "distortion_ratio": round(ratio, 6) if ratio is not None else None,
-        "retrain_recommended": frac > max_appended_fraction
-        or (ratio is not None and ratio > max_distortion_ratio),
-    }
 
 
 def pq_index_topk(
@@ -1493,86 +1086,6 @@ def semantic_dedup(
     return assigned.groupBy("cluster").applyInPandas(prune, out_schema)
 
 
-def mmr_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    pool: int = 50,
-    lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Maximal Marginal Relevance (Carbonell/Goldstein 1998) diverse
-    top-k: greedily pick the candidate maximizing ``lam * rel -
-    (1 - lam) * max_sim_to_selected`` -- the diversity-aware retrieval
-    RAG pipelines run so the k results aren't k paraphrases of the
-    same document.
-
-    Scale shape: relevance scoring + top-``pool`` candidate selection
-    are fully distributed (TakeOrderedAndProject, same plan as
-    ``brute_force_topk``; at 100 TB the pool comes from the IVF/PQ
-    index paths instead); ONLY the bounded pool (pool x dim doubles,
-    like the nlist centroid collects) reaches the driver, where the
-    O(k * pool) greedy runs with deterministic lowest-id tie-breaks.
-    Approximate-by-objective (no SQL twin for the greedy), so the
-    queries() entry is rows-only; determinism and the
-    diversity-beats-redundancy contract are pinned by tests.
-    """
-    from math import sqrt
-
-    cand = brute_force_topk(
-        embeddings, query_vec, k=pool, id_col=id_col, vec_col=vec_col
-    )
-    pooled = (
-        embeddings.select(F.col(id_col), as_double_array(vec_col).alias("_v"))
-        .join(cand, id_col)
-        .select(id_col, "score", "_v")
-        .collect()
-    )
-    rows = sorted(
-        ((r[id_col], float(r["score"]), list(r["_v"])) for r in pooled),
-        key=lambda t: (-t[1], t[0]),
-    )
-
-    def unit(v):
-        n = sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else v
-
-    vecs = {i: unit(v) for i, _, v in rows}
-    selected: list[tuple[int, float, float]] = []
-    chosen: set = set()
-    while rows and len(selected) < k:
-        best = None
-        for i, rel, _ in rows:
-            if i in chosen:
-                continue
-            max_sim = max(
-                (
-                    sum(a * b for a, b in zip(vecs[i], vecs[j]))
-                    for j, _, _ in selected
-                ),
-                default=0.0,
-            )
-            mmr = lam * rel - (1.0 - lam) * max_sim
-            # deterministic: strictly-better score wins, then lowest id
-            if best is None or mmr > best[1] + 1e-12 or (
-                abs(mmr - best[1]) <= 1e-12 and i < best[0]
-            ):
-                best = (i, mmr, rel)
-        if best is None:
-            break
-        chosen.add(best[0])
-        selected.append(best)
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        [
-            (rank + 1, i, round(rel, 4), round(mmr, 4))
-            for rank, (i, mmr, rel) in enumerate(selected)
-        ],
-        f"rank long, {id_col} long, score double, mmr_score double",
-    )
-
-
 def mmr_topk_exact(
     embeddings: DataFrame,
     k: int = 10,
@@ -1581,10 +1094,9 @@ def mmr_topk_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """MMR diverse top-k in CROSS-ENGINE EXACT arithmetic -- the
-    oracle-paired twin of ``mmr_topk`` (r12 verdict item #3: the
-    fixed-round playbook applied to a sequential greedy). lambda is
-    pinned at 0.7.
+    """MMR diverse top-k in CROSS-ENGINE EXACT arithmetic (r12 verdict
+    item #3: the fixed-round playbook applied to a sequential greedy).
+    lambda is pinned at 0.7.
 
     Every score the greedy compares is derived from exact BIGINT dot
     products of 1e-4-quantized coordinates by one divide + one sqrt
@@ -1605,7 +1117,7 @@ def mmr_topk_exact(
     result on both engines instead of NaN-ranked garbage. Same guard
     convention as ``q_int8_cosine_topk``'s ``norm_q > 0``.
 
-    Scale shape (unchanged from ``mmr_topk``): relevance scoring and
+    Scale shape: relevance scoring and
     top-``pool`` selection are fully distributed
     (TakeOrderedAndProject over one cached explode); the pairwise
     dots are computed DISTRIBUTED over the pool's exploded rows (a

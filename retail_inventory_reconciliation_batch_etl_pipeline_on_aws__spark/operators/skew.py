@@ -96,34 +96,3 @@ def salted_join(
     )
     joined = big_salted.join(small_rep, on=[on, "_salt"], how=how)
     return joined.drop("_salt")
-
-
-def partition_balance(df: DataFrame) -> DataFrame:
-    """Task-balance diagnostic: rows per PHYSICAL partition of this
-    frame as it would execute (``spark_partition_id`` after whatever
-    exchange the plan carries) -- the straggler detector. A balanced
-    stage shows near-equal counts; a skewed key funnels its weight
-    into one partition and this report shows exactly which and how
-    badly. Tiny output: |partitions| rows.
-    """
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count("*").cast("long").alias("n_rows"))
-        .orderBy("_pid")
-    )
-
-
-def balance_stats(df: DataFrame) -> dict:
-    """max/mean partition-load ratio from ``partition_balance`` -- the
-    scalar a pipeline can alert on (1.0 = perfectly level; >> 1 = a
-    straggler-by-construction stage)."""
-    rows = partition_balance(df).collect()
-    counts = [r.n_rows for r in rows]
-    if not counts:
-        return {"partitions": 0, "max_over_mean": 0.0}
-    mean = sum(counts) / len(counts)
-    return {
-        "partitions": len(counts),
-        "max_over_mean": round(max(counts) / mean, 3) if mean else 0.0,
-    }

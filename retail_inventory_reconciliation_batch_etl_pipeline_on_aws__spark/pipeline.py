@@ -8,8 +8,7 @@ Here the dependency graph is data (name -> (fn, deps)), executed in
 topological order with results injected into downstream tasks. Tasks
 that are ready at the same time overlap on a thread pool, as Airflow
 runs ``stage_sales`` and ``build_dims`` side by side; the graph alone
-says what may overlap. An Airflow/cron adapter stays trivial because the
-graph shape is preserved; no scheduler is required to run or test the
+says what may overlap. No scheduler is required to run or test the
 pipeline.
 """
 
@@ -79,56 +78,3 @@ class Pipeline:
         if error is not None:
             raise error
         return results
-
-
-def to_airflow_tasks(pipeline: Pipeline, dag, operator_cls=None, **op_kwargs):
-    """Adapter closing the loop with the reference's scheduler
-    (dags/retail_pipeline_dag.py:95-100): materialize this Pipeline as
-    Airflow operators with the SAME dependency edges.
-
-    ``dag`` is an airflow DAG object; ``operator_cls`` defaults to
-    PythonOperator (imported lazily so Airflow is never a dependency of
-    the engine itself -- this module stays importable and testable
-    without it). Each task's callable runs the pipeline fn with its
-    dependency RESULTS resolved from XCom, preserving the data-passing
-    contract of ``Pipeline.run``. Returns {name: operator}.
-    """
-    if operator_cls is None:  # pragma: no cover - needs airflow installed
-        from airflow.operators.python import PythonOperator as operator_cls
-
-    def make_callable(fn, deps):
-        def _run(ti=None, **_):
-            kwargs = (
-                {d: ti.xcom_pull(task_ids=d) for d in deps} if ti is not None else {}
-            )
-            return fn(**kwargs)
-
-        return _run
-
-    ops = {
-        name: operator_cls(
-            task_id=name,
-            python_callable=make_callable(fn, deps),
-            dag=dag,
-            **op_kwargs,
-        )
-        for name, (fn, deps) in pipeline.tasks.items()
-    }
-    for name, (_, deps) in pipeline.tasks.items():
-        for d in deps:
-            ops[d] >> ops[name]
-    return ops
-
-
-def to_cron_entry(pipeline_entry: str, schedule: str = "0 3 * * *") -> str:
-    """The cron form of the reference's daily 03:00 trigger
-    (dags/retail_pipeline_dag.py:88 ``schedule_interval``): one line,
-    no scheduler dependency -- ``Pipeline.run`` is already idempotent
-    per date because every sink is a dynamic-partition overwrite.
-
-    ``pipeline_entry`` is either a script path (``.py`` -> submitted via
-    ``spark-submit``, which has no module flag) or a module name
-    (-> ``python -m``, the driver creating its own SparkSession)."""
-    if pipeline_entry.endswith(".py"):
-        return f"{schedule} spark-submit --deploy-mode cluster {pipeline_entry}"
-    return f"{schedule} python -m {pipeline_entry}"

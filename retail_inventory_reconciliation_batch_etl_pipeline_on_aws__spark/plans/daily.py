@@ -153,55 +153,6 @@ def run_daily_pipeline(
     return results
 
 
-def run_incremental_ingest(
-    spark: SparkSession,
-    landing_path: str,
-    out_path: str,
-    manifest_path: str,
-    lint: bool = True,
-) -> dict:
-    """Exactly-once-in-effect micro-batch loader for an append-only
-    landing zone: the manifest picks the files (``sources.readers.
-    read_parquet_incremental``), and the output is partitioned by a
-    DETERMINISTIC batch id -- sha256 over the sorted new-file list --
-    written with dynamic partition overwrite.
-
-    Why that closes the crash window the manifest alone leaves open:
-    a run that dies AFTER the data write but BEFORE the manifest
-    commit is retried against the same uncommitted files, derives the
-    SAME batch id, and overwrites the same ``ingest_batch=`` partition
-    -- replay converges instead of duplicating (the same
-    write-then-commit discipline as a Delta/Iceberg transaction log,
-    expressed with the primitives this repo already has). A plain
-    ``append`` would double those rows; overwriting the whole zone
-    would clobber earlier batches.
-
-    Returns ``{"files": [...], "batch_id": str | None, "rows": int}``;
-    a caught-up zone is a no-op returning zero rows.
-    """
-    import hashlib
-
-    from ..sources.readers import commit_ingest_manifest, read_parquet_incremental
-
-    df, new_files = read_parquet_incremental(spark, landing_path, manifest_path)
-    if not new_files:
-        return {"files": [], "batch_id": None, "rows": 0}
-    batch_id = hashlib.sha256("\n".join(new_files).encode()).hexdigest()[:16]
-    out = df.withColumn("ingest_batch", F.lit(batch_id))
-    if lint:
-        lint_plan(out)
-    # row count observed from the written partition (one authoritative
-    # source), not a second scan of the landing files
-    write_partitioned(out, out_path, "ingest_batch", sort_within=None)
-    rows = (
-        spark.read.parquet(out_path)
-        .where(F.col("ingest_batch") == batch_id)
-        .count()
-    )
-    commit_ingest_manifest(spark, manifest_path, new_files)
-    return {"files": new_files, "batch_id": batch_id, "rows": rows}
-
-
 def plan_backfill(
     spark: SparkSession, out_root: str, dates: list[dt.date]
 ) -> list[dt.date]:

@@ -475,7 +475,7 @@ def q_customer_spend_quartiles_approx(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-# --- event-stream queries (batch forms; streaming twin in streaming/) --
+# --- event-stream queries ----------------------------------------------
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,8 +1133,7 @@ def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict item #3): PINNED sign-random-projection buckets (6 tables
     x 3 planes, md5-derived coefficients) generate candidates, exact
     quantized-BIGINT cosine verifies them -- see
-    ``operators/similarity.rp_neardup_pairs_pinned``; the pyspark.ml
-    ``lsh_neardup_pairs`` stays for API parity. Bucketing affects
+    ``operators/similarity.rp_neardup_pairs_pinned``. Bucketing affects
     recall only (the recall-vs-exact test remains); every surfaced
     pair and score is hash-checked."""
     from .operators.similarity import rp_neardup_pairs_pinned
@@ -1147,9 +1146,10 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-10 under the PINNED seed quantizer, oracle-paired
     end to end (r12 verdict item #3; previously rows-only under the
     Lloyd-trained ``ivf_topk``, which stays as the production trainer
-    behind the persisted-index paths): serving is exact BIGINT
-    arithmetic under a fixed 16-centroid table -- assign argmin, probe
-    selection, and candidate re-rank all hash-checked; see
+    behind the persisted-index pipeline, ``build_pq_index``): serving
+    is exact BIGINT arithmetic under a fixed 16-centroid table --
+    assign argmin, probe selection, and candidate re-rank all
+    hash-checked; see
     ``operators/similarity.ivf_topk_pinned``. Recall vs brute force
     is still asserted in tests."""
     from .operators.similarity import ivf_topk_pinned
@@ -1166,11 +1166,8 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-only xxhash64 family, so the DuckDB twin restates every
     signature, band bucket, and verified Jaccard integer-for-integer
     -- banding recall becomes hash-checked driver evidence instead of
-    a rows-only determinism smoke. The xxhash64 production path
-    (``minhash_banded_pairs``) stays available for callers who want
-    the cheaper per-shingle hash and don't need SQL mirrorability;
-    both share the banding math and the exact-verify contract
-    (precision 1.0 by construction)."""
+    a rows-only determinism smoke. Every banded candidate is verified
+    by exact Jaccard, so precision is 1.0 by construction."""
     from .operators.dedup import minhash_banded_pairs_portable
 
     docs = fixtures.fan_out(fixtures.load(spark, sf_dir, "documents"))
@@ -1192,8 +1189,8 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate cosine top-10 by sign-random-projection bucketing
     under a PINNED md5-derived projection matrix, oracle-paired end to
     end (r12 verdict item #3; previously rows-only under pyspark.ml's
-    JVM-RNG BucketedRandomProjectionLSH, which stays available as
-    ``lsh_ann_topk``): 4 tables x 4 sign planes generate the
+    JVM-RNG BucketedRandomProjectionLSH): 4 tables x 4 sign planes
+    generate the
     candidates, exact quantized-BIGINT cosine re-ranks them -- see
     ``operators.similarity.pinned_rp_ann_topk``. Overlap-vs-exact is
     still pinned by test; the driver now also hash-checks every
@@ -2962,7 +2959,7 @@ def q_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enter the decision: values quantize to cents, the test is the
     squared integer form ``(c*n - s)^2 > 9*(n*ss - s^2)`` over
     DECIMAL(38,0) (HUGEINT in the oracle), so the alert set is
-    bit-identical across engines AND across the streaming twin.
+    bit-identical across engines.
 
     Scale posture (VERDICT r4: the naive form is a
     straggler-by-construction): a single cumulative window partitioned
@@ -2984,10 +2981,7 @@ def q_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
        types*days-way parallelism instead of |types|-way.
 
     Plan-guarded: tests/test_plan_shape.py rejects any cumulative
-    window partitioned by the bare key and ordered by raw ts. The
-    streaming twin (``streaming_value_anomalies``) remains the
-    incremental production path (24 bytes of state per key);
-    this batch form is its replayable ground truth.
+    window partitioned by the bare key and ordered by raw ts.
     """
     ev = fixtures.events(spark, sf_dir)
     c = F.round(F.col("value") * 100).cast("long")
@@ -3939,18 +3933,6 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 cosine over the int8-QUANTIZED corpus (vec_id=0's vector
-    as the query) -- the compressed-index scan path; rows-only entry
-    (the ranking depends on quantization rounding, not SQL-mirrorable
-    bit-for-bit), pinned by overlap + error-bound tests against
-    ``sim_topk``."""
-    from .operators.similarity import quantized_topk
-
-    emb = fixtures.load(spark, sf_dir, "embeddings")
-    return quantized_topk(emb, _query_vector(spark, sf_dir), k=10)
-
-
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-quality monitor: recall@10 of every approximate similarity
     path (pinned RP-LSH, pinned IVF, int8-quantized cosine) against
@@ -3963,8 +3945,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_topk``, ``int8_cosine_topk``), so the recall computation is
     SQL-expressible end to end -- the oracle composes the four
     component oracles as subqueries and reproduces hits and recall
-    bit-for-bit (through r13 this compared the JVM-seeded
-    ``quantized_topk`` path and was rows-only). The Spark side is
+    bit-for-bit (through r13 this compared a JVM-seeded int8 path and
+    was rows-only). The Spark side is
     fully distributed: the three 10-row candidate frames union with a
     method tag and left-join the broadcast 10-row exact frame -- no
     driver-side loop of counts (the old shape ran one count action
@@ -4219,7 +4201,7 @@ def q_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned table: ``table_changes(1, 2)`` where v2 is a full
     overwrite -- every v1 row surfaces as a ``delete`` and every v2
     row as an ``insert`` (an update is its delete+insert pair at this
-    grain; a keyed ``merge_upsert`` consumer collapses them).
+    grain; a keyed MERGE consumer collapses them).
 
     Both snapshots resolve to FIXED file lists before the diff, so the
     feed is stable under concurrent writers. The oracle mirrors the
@@ -4494,9 +4476,7 @@ def q_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     file clustering, exposed as a query so the bit-interleave math is
     pinned value-exact against an independent SQL spelling. Top-100 by
     key (TakeOrderedAndProject); the interleave is 10 shift/and/or ops
-    per row, all inside whole-stage codegen (see
-    ``tests/test_layout.py`` for the measured file-pruning proof the
-    layout exists for).
+    per row, all inside whole-stage codegen.
     """
     from .operators.layout import zvalue16
 
@@ -5830,27 +5810,14 @@ def q_event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-10 (deterministic codebooks;
-    approximate by design, so rows-only -- recall vs brute force and
-    the 8-byte-code compression contract are asserted in tests). The
-    compression rung of the ANN ladder: see
-    ``operators/similarity.pq_topk``."""
-    from .operators.similarity import pq_topk
-
-    emb = fixtures.load(spark, sf_dir, "embeddings")
-    return pq_topk(emb, _query_vector(spark, sf_dir), k=10)
-
-
 def q_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 served from a PERSISTED IVF-PQ index (train-once/
     serve-many: codes partitioned by coarse cluster so the probe scan
     partition-prunes, one global m x ksub codebook, exact-cosine
     re-rank against the source vectors). The index is built lazily
-    into the gitignored fixture root on first use and reused after --
-    the artifact lifecycle ``build_ivf_index`` has, at the PQ
-    compression rung. Approximate by design -> rows-only; serve==train
-    identity and determinism are pinned by tests."""
+    into the gitignored fixture root on first use and reused after.
+    Approximate by design -> rows-only; determinism is pinned by
+    tests."""
     import os as _os
 
     from .operators.similarity import build_pq_index, pq_index_topk
@@ -7809,9 +7776,8 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy compares is one divide + one sqrt from exact BIGINT dots
     (``operators/similarity.mmr_topk_exact``), so the DuckDB twin
     unrolls the 10 greedy steps as MATERIALIZED CTEs and reproduces
-    every selection bit-for-bit; the float ``mmr_topk`` stays for
-    callers with pre-scored float pools. Redundancy-suppression is
-    still pinned by tests."""
+    every selection bit-for-bit. Redundancy-suppression is still
+    pinned by tests."""
     from .operators.similarity import mmr_topk_exact
 
     emb = fixtures.load(spark, sf_dir, "embeddings")
@@ -12915,9 +12881,10 @@ def q_purchases_in_promo_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the promo dimension is derived from the fact stream itself, so
     every purchase's own week IS a promo window and containment
     reduces to ``ts < date_trunc('week', ts) + 2 days`` -- one scan,
-    zero shuffles before the final week rollup. (The STREAMING twin
-    cannot elide it: there the promo windows arrive as an independent
-    stream and the stream-stream interval join is real.) Revenue sums
+    zero shuffles before the final week rollup. (A streaming form
+    could not elide it: there the promo windows arrive as an
+    independent stream and the stream-stream interval join is real.)
+    Revenue sums
     in DECIMAL(18,2) -- exact and order-independent -- and casts to
     double at the edge.
     """
@@ -12945,10 +12912,10 @@ def q_pq_index_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper half arrives later via ``append_to_pq_index`` (encoded under
     the EXISTING codebook -- FAISS ``index.add`` semantics; no
     retrain), and the query is served over the combined codes table.
-    The append-log staleness report gates retraining in production;
-    here the corpus halves are iid so the drift ratio stays ~1.
-    Approximate by design -> rows-only; codes-parity, associativity,
-    idempotent-read, and staleness-gate semantics are pinned by tests.
+    The append log records each batch's quantization distortion, the
+    drift signal for retraining; here the corpus halves are iid so the
+    drift stays ~1. Approximate by design -> rows-only; codes-parity,
+    associativity and idempotent-read semantics are pinned by tests.
     Built lazily into the gitignored fixture root, like
     ``q_pq_index_topk``."""
     import os as _os

@@ -70,73 +70,6 @@ def read_parquet_evolving(
     return reader.parquet(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """JSON-lines scan -- the de-facto interchange format of LLM data
-    pipelines (one document object per line).
-
-    Same schema discipline as S1: explicit ``StructType`` in prod (schema
-    inference on JSON costs a full pre-scan AND silently widens types on
-    dirty corpora); undeclared fields are dropped by the schema rather
-    than exploding the column set. Corrupt lines are captured, not
-    fatal: ``_corrupt_record`` stays NULL for clean rows, so a data
-    quality gate is ``df.where(col('_corrupt_record').isNotNull())``.
-    """
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    )
-    if schema is not None:
-        if "_corrupt_record" not in schema.fieldNames():
-            schema = T.StructType(
-                [*schema.fields, T.StructField("_corrupt_record", T.StringType())]
-            )
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = False,
-) -> DataFrame:
-    """Opaque-binary ingestion via Spark's native ``binaryFile`` source
-    -- the entry point for image/audio/video corpora: one row per file
-    with ``(path, modificationTime, length, content)``, where
-    ``content`` is the raw bytes column the multimodal operators
-    (``operators.multimodal.image_dimensions`` etc.) decode.
-
-    ``glob`` filters by filename pattern (``pathGlobFilter`` -- applied
-    during listing, BEFORE any byte is read); ``recursive`` walks
-    nested dirs (``recursiveFileLookup``). Scale posture: files are
-    Spark's split unit here (binary payloads don't split), so millions
-    of small images parallelize naturally, while the listing itself is
-    the bottleneck at 1e8+ files -- at that point the production move
-    is packing payloads into parquet binary columns (which is exactly
-    what the multimodal operators consume downstream), keeping this
-    source as the one-time packer input.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan -- the second columnar format Spark supports natively
-    (vectorized reader, predicate pushdown to stripe/row-group level,
-    same partition-discovery rules as parquet). Kept so a warehouse
-    standardized on ORC (classic Hive/EMR estates) can consume the
-    engine's marts without a conversion hop; writers.write_orc is the
-    producing side."""
-    return spark.read.orc(path)
-
-
 def read_partition(
     df: DataFrame,
     partition_col: str,
@@ -155,121 +88,3 @@ def read_partition(
     else:
         pred = F.col(partition_col) == F.lit(value).cast("date")
     return df.where(pred)
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """Capability probe for the ``avro`` DataSource (the spark-avro
-    connector is an EXTERNAL module since Spark 2.4 -- present only when
-    the deployment ships the jar). Probed by asking the JVM to resolve
-    the data source, which is a classloader lookup, not an I/O call.
-    Readers/writers raise a clear error when absent; tests skip.
-
-    ``lookupDataSource``'s JVM signature is ``(String, SQLConf)`` -- the
-    second argument must be the session's SQLConf, and only the
-    known "source absent" failure modes map to False; any other error
-    (signature drift, classloader breakage) propagates so a broken
-    probe can never masquerade as a missing connector."""
-    try:
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            "avro", spark._jsparkSession.sessionState().conf()
-        )
-        return True
-    except Exception as exc:
-        # PySpark converts the JVM error into a captured AnalysisException
-        # ("Failed to find data source: avro") when the jar is absent --
-        # the exception CLASS is the primary signal (wording is
-        # Spark-version-sensitive), the message substrings the fallback
-        # for raw Py4J surfaces; anything else re-raises (a Py4JError
-        # "Method ... does not exist" means the PROBE broke, not the jar)
-        try:
-            from pyspark.errors import AnalysisException
-        except ImportError:  # pragma: no cover - pre-3.4 layout
-            from pyspark.sql.utils import AnalysisException
-        if isinstance(exc, AnalysisException):
-            return False
-        msg = str(getattr(exc, "java_exception", exc))
-        if "Failed to find" in msg or "ClassNotFoundException" in msg:
-            return False
-        raise
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro scan -- row-major interchange format (Kafka/Hive estates).
-    Same partition-discovery rules as parquet/ORC. Requires the
-    spark-avro connector jar; ``avro_available`` probes for it."""
-    if not avro_available(spark):
-        raise RuntimeError(
-            "spark-avro connector not on the classpath; add "
-            "org.apache.spark:spark-avro_2.13 to spark.jars.packages"
-        )
-    return spark.read.format("avro").load(path)
-
-
-def read_parquet_incremental(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str,
-) -> tuple[DataFrame, list[str]]:
-    """Manifest-gated incremental ingestion: read ONLY the files of a
-    landing zone that no previous run has processed -- the file-level
-    watermark every production batch loader needs once producers append
-    continuously (the same discover-vs-committed split a Delta/Iceberg
-    log performs, done here against a plain parquet directory).
-
-    Discovery uses the hidden ``_metadata.file_path`` column projected
-    alone, so Spark's scan touches footers and listing only -- no data
-    column is materialized. The processed set lives in ``manifest_path``
-    as newline-delimited paths (written by ``commit_ingest_manifest``
-    AFTER the downstream write succeeds, making the pair crash-safe:
-    a run that dies mid-write re-reads the same files on retry --
-    at-least-once, deduplicated by the idempotent sinks this repo
-    already ships). New files are found by an ids-only anti-join; the
-    driver materializes only the path LIST (bounded by file count, the
-    same driver-side object a Delta log replay holds -- never data).
-
-    Returns ``(df, new_files)``: ``df`` scans exactly ``new_files``
-    (empty-but-typed when the zone is fully caught up). Feed
-    ``new_files`` to ``commit_ingest_manifest`` after the sink commits.
-    """
-    zone = spark.read.parquet(path)
-    discovered = zone.select(
-        F.col("_metadata.file_path").alias("file_path")
-    ).distinct()
-    if _manifest_exists(spark, manifest_path):
-        seen = spark.read.text(manifest_path).select(
-            F.col("value").alias("file_path")
-        )
-        fresh = discovered.join(seen, "file_path", "left_anti")
-    else:
-        fresh = discovered
-    new_files = sorted(r.file_path for r in fresh.collect())
-    if not new_files:
-        return spark.createDataFrame([], zone.schema), []
-    return spark.read.schema(zone.schema).parquet(*new_files), new_files
-
-
-def commit_ingest_manifest(
-    spark: SparkSession, manifest_path: str, files: list[str]
-) -> None:
-    """Record ``files`` as processed (append-only text, one path per
-    line). Append mode adds new part files without touching existing
-    ones, so concurrent readers never see a half-written manifest; a
-    replayed commit merely duplicates lines, which the anti-join in
-    ``read_parquet_incremental`` treats identically (set semantics)."""
-    if not files:
-        return
-    spark.createDataFrame(
-        [(f,) for f in files], "value string"
-    ).coalesce(1).write.mode("append").text(manifest_path)
-
-
-def _manifest_exists(spark: SparkSession, path: str) -> bool:
-    """FS-agnostic probe (same rationale as writers._mart_exists: a
-    driver-local os.path check lies about remote stores)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.text(path).schema
-        return True
-    except AnalysisException:
-        return False

@@ -15,8 +15,6 @@ O_EXCL (a compare-and-swap on the version number), so racing writers
 serialize -- the loser recomputes against the new parent and retries
 metadata-only (its data files are immutable and uuid-named). On an
 object store, swap the exclusive create for a conditional put.
-``vacuum`` deletes data files no RETAINED commit references -- the GC
-step that makes overwrite storage-safe.
 """
 
 from __future__ import annotations
@@ -45,72 +43,6 @@ def latest_version(path: str) -> int:
     return int(os.path.basename(cs[-1])[1:-5]) if cs else -1
 
 
-class CheckViolation(ValueError):
-    """A table CHECK constraint rejected a write. ``counts`` maps
-    constraint name -> number of violating rows in the attempted
-    write (SQL CHECK semantics: a row violates only when the
-    condition evaluates to FALSE; NULL/unknown passes)."""
-
-    def __init__(self, counts: dict[str, int]):
-        self.counts = dict(counts)
-        super().__init__(
-            "CHECK constraint violation: "
-            + ", ".join(f"{k}: {v} row(s)" for k, v in sorted(counts.items()))
-        )
-
-
-def table_checks(path: str) -> dict[str, str]:
-    """Active CHECK constraints of the latest version (name -> SQL
-    boolean expression). Constraints are commit metadata -- versioned,
-    inherited by every child commit, visible to time travel."""
-    v = latest_version(path)
-    if v < 0:
-        return {}
-    return _load_commit(
-        os.path.join(path, "commits", f"v{v:05d}.json")
-    ).get("checks", {})
-
-
-def _check_violations(df: DataFrame, checks: dict[str, str]) -> dict[str, int]:
-    """Per-constraint violating-row counts in ONE aggregate pass (all
-    constraints evaluated in the same scan -- the enforcement cost at
-    100 TB is one map-side-combined count, not one job per rule)."""
-    if not checks:
-        return {}
-    from pyspark.sql import functions as F
-
-    names = sorted(checks)
-    row = df.agg(
-        *[
-            F.sum(
-                F.when(F.expr(checks[n]).isNotNull() & ~F.expr(checks[n]), 1)
-                .otherwise(0)
-            ).alias(f"_c{i}")
-            for i, n in enumerate(names)
-        ]
-    ).first()
-    return {
-        n: int(row[f"_c{i}"] or 0)
-        for i, n in enumerate(names)
-        if (row[f"_c{i}"] or 0) > 0
-    }
-
-
-def _staged_violations(
-    spark: SparkSession, paths: list[str], checks: dict[str, str]
-) -> dict[str, int]:
-    """CHECK evaluation over STAGED PARQUET -- the exact bytes a commit
-    would reference -- not over the writer's logical plan. Validating
-    the plan would (a) pay a full extra computation of ``df`` and
-    (b) let a non-deterministic plan pass validation yet stage
-    violating rows; reading the staged files back validates what is
-    actually published, for one cheap columnar re-scan of only the
-    constraint columns."""
-    if not checks or not paths:
-        return {}
-    return _check_violations(spark.read.parquet(*paths), checks)
-
-
 def write_versioned(df: DataFrame, path: str, mode: str = "append") -> int:
     """Publish ``df`` as a new table version; returns the version.
 
@@ -119,7 +51,7 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append") -> int:
     readable -- replacement is logical, not physical). The commit
     becomes visible in one exclusive create (the CAS described in the
     module docstring); a crash before it leaves only unreferenced data
-    files for ``vacuum``.
+    files.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append/overwrite, got {mode!r}")
@@ -128,19 +60,9 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append") -> int:
     os.makedirs(data_dir, exist_ok=True)
     os.makedirs(commits_dir, exist_ok=True)
 
-    # stage first, then enforce the parent's CHECK constraints on the
-    # STAGED parquet (the exact bytes the commit would reference) --
-    # a rejected write just drops the staging dir, leaving no orphans,
-    # and a non-deterministic input plan cannot pass validation on one
-    # evaluation yet publish different rows from another
-    checks = table_checks(path)
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
     staged = sorted(_glob.glob(os.path.join(staging, "part-*.parquet")))
-    bad = _staged_violations(df.sparkSession, staged, checks)
-    if bad:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise CheckViolation(bad)
     new_files = []
     for pf in staged:
         name = f"{uuid.uuid4().hex}.parquet"
@@ -160,26 +82,8 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append") -> int:
             else []
         )
         version = parent + 1
-        cur_checks = table_checks(path)
-        if cur_checks != checks:
-            # a concurrent commit changed the constraints while we
-            # staged; re-validate OUR STAGED FILES against the new rule
-            # set (rare CAS retry path) -- on violation, clean them up
-            checks = cur_checks
-            bad = _staged_violations(
-                df.sparkSession,
-                [os.path.join(data_dir, n) for n in new_files],
-                checks,
-            )
-            if bad:
-                for name in new_files:
-                    try:
-                        os.remove(os.path.join(data_dir, name))
-                    except FileNotFoundError:
-                        pass
-                raise CheckViolation(bad)
         commit = {"version": version, "parent": parent, "mode": mode,
-                  "files": base + new_files, "checks": checks}
+                  "files": base + new_files}
         try:
             fd = os.open(
                 os.path.join(commits_dir, f"v{version:05d}.json"),
@@ -222,76 +126,13 @@ def history(path: str) -> list[dict]:
     return out
 
 
-def restore_version(path: str, version: int) -> int:
-    """RESTORE TABLE ... TO VERSION AS OF: publish a NEW commit whose
-    file list (and CHECK-constraint set) is exactly ``version``'s --
-    the Delta-style rollback. Metadata-only: no data file moves or
-    copies, the restored snapshot shares the old version's immutable
-    files; history is preserved (the bad commits stay readable by time
-    travel -- a rollback that rewrote history would break every reader
-    pinned to an intermediate version). ``vacuum`` still reclaims
-    unreferenced files later; a restore REVIVES the restored files'
-    liveness because the new head references them.
-
-    CAS-published like every other commit: concurrent writers race on
-    the version file, never on data. Returns the NEW version number."""
-    commits_dir = os.path.join(path, "commits")
-    src = os.path.join(commits_dir, f"v{version:05d}.json")
-    if version < 0 or not os.path.exists(src):
-        raise ValueError(f"no version {version} to restore")
-    target = _load_commit(src)
-    while True:
-        parent = latest_version(path)
-        if parent == version:
-            return parent  # restoring the head is a no-op
-        commit = {
-            "version": parent + 1,
-            "parent": parent,
-            "mode": "restore",
-            "restored_from": version,
-            "files": target["files"],
-            "checks": target.get("checks", {}),
-        }
-        try:
-            fd = os.open(
-                os.path.join(commits_dir, f"v{parent + 1:05d}.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            continue  # lost the CAS race: re-read the new head
-        with os.fdopen(fd, "w") as f:
-            json.dump(commit, f)
-        return parent + 1
-
-
-def vacuum(path: str, keep_versions: int = 1) -> list[str]:
-    """Delete data files referenced by NO retained commit (the newest
-    ``keep_versions`` commits are retained; older commit files are
-    dropped too). Returns the deleted data file names. With
-    ``keep_versions=1`` only the live snapshot survives -- the standard
-    storage-reclaim after overwrites."""
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    cs = _commit_paths(path)
-    keep, drop = cs[-keep_versions:], cs[:-keep_versions]
-    live = {f for p in keep for f in _load_commit(p)["files"]}
-    deleted = []
-    for df_ in sorted(os.listdir(os.path.join(path, "data"))):
-        if df_ not in live:
-            os.remove(os.path.join(path, "data", df_))
-            deleted.append(df_)
-    for p in drop:
-        os.remove(p)
-    return deleted
-
-
 def table_changes(
     spark: SparkSession, path: str, from_version: int, to_version: int
 ) -> DataFrame:
     """Row-level change feed between two snapshots (the CDF read
     pattern): full-row anti-joins in both directions, tagged
     ``insert`` / ``delete`` (an update appears as its delete+insert
-    pair -- the grain a keyed ``merge_upsert`` consumer collapses).
+    pair -- the grain a keyed ``merge_into`` consumer collapses).
     Snapshots resolve to fixed file lists first, so the diff is stable
     under concurrent writes; the join keys are ALL columns, i.e.
     content identity, no key declaration needed.
@@ -308,132 +149,6 @@ def table_changes(
         "_change", F.lit("delete")
     )
     return inserts.unionByName(deletes)
-
-
-def add_check(
-    spark: SparkSession, path: str, name: str, expr: str
-) -> int:
-    """ALTER TABLE ADD CONSTRAINT ... CHECK: validates that the CURRENT
-    snapshot already satisfies ``expr`` (refusing otherwise, like
-    Delta), then publishes a METADATA-ONLY commit (same files) whose
-    ``checks`` map includes the new rule. Every subsequent write --
-    append, overwrite, DELETE/UPDATE/MERGE rewrite, streaming append,
-    compaction -- enforces it before publishing; a rejected write
-    raises ``CheckViolation`` and leaves no orphan files. Time travel
-    to pre-constraint versions is unaffected (constraints are commit
-    metadata, versioned like everything else)."""
-    commits_dir = os.path.join(path, "commits")
-    while True:
-        parent = latest_version(path)
-        if parent < 0:
-            raise ValueError("cannot add a CHECK to an empty table")
-        pc = _load_commit(os.path.join(commits_dir, f"v{parent:05d}.json"))
-        bad = _check_violations(
-            read_versioned(spark, path, version=parent), {name: expr}
-        )
-        if bad:
-            raise CheckViolation(bad)
-        checks = dict(pc.get("checks", {}))
-        checks[name] = expr
-        version = parent + 1
-        commit = {"version": version, "parent": parent, "mode": "set_check",
-                  "files": pc["files"], "checks": checks}
-        try:
-            fd = os.open(
-                os.path.join(commits_dir, f"v{version:05d}.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            continue  # lost the CAS race: re-read and re-validate
-        with os.fdopen(fd, "w") as f:
-            json.dump(commit, f)
-        return version
-
-
-def drop_check(path: str, name: str) -> int:
-    """ALTER TABLE DROP CONSTRAINT: metadata-only commit without the
-    rule. Unknown names fail loudly (a silent no-op would let a typo
-    leave the table unguarded)."""
-    commits_dir = os.path.join(path, "commits")
-    while True:
-        parent = latest_version(path)
-        if parent < 0:
-            raise ValueError(
-                "cannot drop a CHECK from an empty table (no commits yet)"
-            )
-        pc = _load_commit(os.path.join(commits_dir, f"v{parent:05d}.json"))
-        checks = dict(pc.get("checks", {}))
-        if name not in checks:
-            raise ValueError(f"no CHECK named {name!r} on this table")
-        del checks[name]
-        version = parent + 1
-        commit = {"version": version, "parent": parent, "mode": "set_check",
-                  "files": pc["files"], "checks": checks}
-        try:
-            fd = os.open(
-                os.path.join(commits_dir, f"v{version:05d}.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(commit, f)
-        return version
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_files: int = 1,
-    zorder: tuple[str, str] | None = None,
-) -> int:
-    """OPTIMIZE for the versioned layer: rewrite the live snapshot into
-    ``target_files`` files and publish it as a new overwrite commit --
-    row-identical (pinned by test), old versions still readable until
-    ``vacuum``, readers never see a half-compacted table (they hold
-    either the old or the new commit, nothing between). The
-    accumulated-small-files problem ``small_file_report`` diagnoses,
-    solved transactionally.
-
-    ``zorder=(col_a, col_b)`` additionally rewrites the LAYOUT
-    (OPTIMIZE ZORDER BY): each dimension is fixed-point scaled onto 16
-    bits from its live min/max (two bounded scalars) and the files are
-    range-partitioned on the Morton key, so after compaction min/max
-    footer pruning works on BOTH columns (measured in
-    ``tests/test_layout.py``). Same single shuffle as the plain
-    rewrite; the curve changes which rows co-locate, not the cost."""
-    from pyspark.sql import functions as F
-
-    live = read_versioned(spark, path)
-    if zorder is None:
-        return write_versioned(live.coalesce(target_files), path, mode="overwrite")
-
-    from ..operators.layout import scale16, zvalue16
-
-    a, b = zorder
-    bounds = live.agg(
-        F.min(a), F.max(a), F.min(b), F.max(b)
-    ).first()  # bounded: 4 scalars
-    a_lo, a_hi, b_lo, b_hi = bounds
-    if any(v is None for v in bounds):
-        # an all-NULL dimension (or an empty snapshot) has no layout
-        # to optimize -- fail loudly rather than TypeError below; the
-        # caller can re-run without zorder for a plain rewrite
-        raise ValueError(
-            f"zorder columns ({a!r}, {b!r}) have no non-NULL values "
-            "in the live snapshot; run compact() without zorder"
-        )
-    z = zvalue16(
-        scale16(F.col(a), a_lo, max(a_hi, a_lo + 1)),
-        scale16(F.col(b), b_lo, max(b_hi, b_lo + 1)),
-    )
-    laid_out = (
-        live.withColumn("_z", z)
-        .repartitionByRange(target_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    return write_versioned(laid_out, path, mode="overwrite")
 
 
 def _rewrite_touched(
@@ -491,23 +206,11 @@ def _stage_and_splice(
     checking alone is vacuous for a pure-insert merge (touched is
     empty)."""
     data_dir = os.path.join(path, "data")
-    # DML goes through the same CHECK gate as ingest: the rewritten
-    # rows (updated/merged values plus their co-located keepers) must
-    # satisfy the table's constraints. Validation runs on the STAGED
-    # parquet -- the bytes a commit would reference -- so the check is
-    # one cheap extra scan instead of a full recomputation of the
-    # rewrite plan, and non-deterministic plans cannot sneak
-    # violating rows past a pre-staging evaluation.
-    checks = table_checks(path)
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     rewritten.repartition(max(1, len(touched))).write.mode(
         "overwrite"
     ).parquet(staging)
     staged = sorted(_glob.glob(os.path.join(staging, "part-*.parquet")))
-    bad = _staged_violations(rewritten.sparkSession, staged, checks)
-    if bad:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise CheckViolation(bad)
     new_files = []
     for pf in staged:
         name = f"{uuid.uuid4().hex}.parquet"
@@ -518,7 +221,7 @@ def _stage_and_splice(
     def _refuse(why: str):
         # a refused commit must not leak its staged output: the files
         # were already moved into data/ but no commit references them,
-        # so they would sit as orphans until some later vacuum. They
+        # so they would sit as orphans. They
         # are this writer's own uuid-named files -- deleting them races
         # with nobody.
         for name in new_files:
@@ -549,22 +252,11 @@ def _stage_and_splice(
             )
         keep = [f for f in parent_files if f not in touched]
         version = parent + 1
-        cur_checks = table_checks(path)
-        if cur_checks != checks:
-            checks = cur_checks
-            bad = _staged_violations(
-                rewritten.sparkSession,
-                [os.path.join(data_dir, n) for n in new_files],
-                checks,
-            )
-            if bad:
-                _refuse(str(CheckViolation(bad)))
         commit = {
             "version": version,
             "parent": parent,
             "mode": mode,
             "files": keep + new_files,
-            "checks": checks,
         }
         try:
             fd = os.open(
@@ -584,11 +276,9 @@ def delete_where(spark: SparkSession, path: str, condition) -> tuple[int, int]:
     (``input_file_name``), files containing at least one matching row
     are rewritten without those rows, and the new commit references the
     untouched files UNCHANGED plus the rewrites -- the Delta/Iceberg
-    DELETE shape. On a z-ordered table a selective predicate touches
-    few files (measured in ``tests/test_layout.py``), so the rewrite
-    cost tracks the data deleted, not the table size. Readers hold
-    either commit, never a half-deleted table; old versions stay
-    time-travelable until ``vacuum``.
+    DELETE shape, so the rewrite cost tracks the files the predicate
+    touches, not the table size. Readers hold either commit, never a
+    half-deleted table; old versions stay time-travelable.
 
     Returns ``(new_version, n_files_rewritten)``. ``condition`` is a
     Column predicate selecting the rows to DELETE. SQL DELETE
@@ -614,7 +304,7 @@ def update_where(
     only the files containing matching rows are rewritten, with
     ``assignments`` (column name -> Column expression) applied to the
     matching rows and every other row carried through unchanged --
-    completing the DML triad with ``merge_upsert`` (keyed MERGE) and
+    completing the DML triad with ``merge_into`` (keyed MERGE) and
     ``delete_where``. Returns ``(new_version, n_files_rewritten)``.
 
     SQL UPDATE semantics: every SET right-hand side is evaluated
@@ -701,45 +391,3 @@ def merge_into(
     # publishing over it would duplicate keys. Strict check, not the
     # touched-file check alone -- which is vacuous when touched == {}.
     return _stage_and_splice(path, touched, rewritten, "merge", require_parent=v)
-
-
-def run_stream_to_versioned(sdf: DataFrame, path: str, checkpoint_dir: str) -> None:
-    """Exactly-once streaming append into the versioned table: each
-    micro-batch becomes one commit CARRYING ITS BATCH ID, and a batch
-    id already present in the commit log is skipped -- so a replayed
-    micro-batch (restart between sink write and engine checkpoint) is
-    a no-op instead of a duplicate snapshot. The same
-    write-then-idempotence discipline as the partitioned-parquet sink,
-    but here the transaction boundary is the commit file itself.
-    Drives the bounded stream to completion (test/dev harness)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        done = {
-            c.get("batch_id")
-            for c in (_load_commit(p) for p in _commit_paths(path))
-        }
-        if batch_id in done:
-            return  # replayed micro-batch: already committed
-        v = write_versioned(batch_df, path, mode="append")
-        # stamp the batch id into the just-written commit (single
-        # writer per query; the stamp is read only by this dedup)
-        cp = os.path.join(path, "commits", f"v{v:05d}.json")
-        c = _load_commit(cp)
-        c["batch_id"] = batch_id
-        tmp = cp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(c, f)
-        os.replace(tmp, cp)
-
-    q = (
-        sdf.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

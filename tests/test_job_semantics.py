@@ -163,26 +163,20 @@ def test_partitioned_writer_idempotent(spark, tmp_path):
     assert out == {(dt.date(2024, 1, 1), "A"): 1, (dt.date(2024, 1, 2), "B"): 99}
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "avro"])
+@pytest.mark.parametrize("fmt", ["parquet"])
 def test_writers_leave_every_file_sorted(spark, tmp_path, fmt):
     """Sorted-at-rest holds for a hash-ordered input: a partitioned
     write sorts by its partition columns itself, and a user sort below
     that is dropped unless it leads with them."""
     import glob
 
-    import pyarrow.orc as orc
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources import (
         writers,
     )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.readers import (
-        avro_available,
-    )
 
-    if fmt == "avro" and not avro_available(spark):
-        pytest.skip("spark-avro connector not on classpath")
     df = (
         spark.range(3000)
         .select(
@@ -193,20 +187,11 @@ def test_writers_leave_every_file_sorted(spark, tmp_path, fmt):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     path = str(tmp_path / fmt)
-    if fmt == "parquet":
-        writers.write_partitioned(df, path, "date_key", "sku")
-    else:
-        write = writers.write_orc if fmt == "orc" else writers.write_avro
-        write(df, path, partition_by="date_key", sort_within="sku")
+    writers.write_partitioned(df, path, "date_key", "sku")
     files = glob.glob(f"{path}/date_key=*/*.{fmt}")
     assert files
     for f in files:
-        if fmt == "parquet":
-            skus = pq.read_table(f).column("sku").to_pylist()
-        elif fmt == "orc":
-            skus = orc.read_table(f).column("sku").to_pylist()
-        else:
-            skus = [r.sku for r in spark.read.format("avro").load(f).collect()]
+        skus = pq.read_table(f).column("sku").to_pylist()
         assert skus == sorted(skus), f
 
 

@@ -1,13 +1,12 @@
-"""Z-order layout (operators/layout.py + the canonical Morton writer
-in sources/writers.py): curve math pinned against a pure-python
-reference, and the file-pruning claim MEASURED from real parquet
-footers rather than asserted."""
+"""Z-order curve math (operators/layout.py over the canonical Morton
+key in sources/writers.py) pinned against a pure-python reference, and
+the versioned table's copy-on-write DML measured against a
+range-clustered layout: a selective predicate rewrites only the files
+it touches."""
 
 from pyspark.sql import functions as F
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.layout import (
-    file_prune_fraction,
-    scale16,
     zvalue16,
 )
 
@@ -52,60 +51,6 @@ def test_zvalue_matches_python_reference(spark):
         assert r.zy == 1 << (2 * b + 1)
 
 
-def test_scale16_maps_domain_endpoints_and_clamps(spark):
-    df = spark.createDataFrame([(1,), (50,), (25,), (-3,), (99,)], "q long")
-    got = {
-        r.q: r.s
-        for r in df.select(
-            "q", scale16(F.col("q"), 1, 50).alias("s")
-        ).collect()
-    }
-    assert got[1] == 0
-    assert got[50] == 65535
-    assert 0 < got[25] < 65535
-    assert got[-3] == 0 and got[99] == 65535  # out-of-domain clamps
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """The reason the operator exists, measured: a partkey-sorted
-    layout prunes files only for partkey predicates (quantity
-    predicates touch EVERY file), while the scaled Morton layout
-    prunes well on BOTH dimensions, paying a bounded amount of
-    partkey sharpness. Thresholds are below measured values (0.69 /
-    0.63 / 0.63 at sf0.01, 16 files) with slack for file-boundary
-    jitter."""
-    li = (
-        spark.read.parquet(f"{SF}/lineitem.parquet")
-        .select("l_partkey", F.col("l_quantity").cast("long").alias("qty"))
-    )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.writers import (
-        write_zordered,
-    )
-
-    pk_max = li.agg(F.max("l_partkey")).first()[0]
-    lin, zd = str(tmp_path / "linear"), str(tmp_path / "zord")
-    (
-        li.repartitionByRange(16, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(lin)
-    )
-    write_zordered(li, zd, ["l_partkey", "qty"], num_files=16)
-    # narrow-dimension predicate: linear layout cannot skip anything
-    assert file_prune_fraction(lin, "qty", 1, 6) == 0.0
-    assert file_prune_fraction(zd, "qty", 1, 6) >= 0.4
-    # wide-dimension predicate: z-order stays useful
-    assert file_prune_fraction(lin, "l_partkey", 0, pk_max // 8) >= 0.6
-    assert file_prune_fraction(zd, "l_partkey", 0, pk_max // 8) >= 0.4
-    # layout changes bytes, never rows
-    back = spark.read.parquet(zd)
-    assert back.count() == li.count()
-    assert (
-        back.groupBy().agg(F.sum("qty"), F.sum("l_partkey")).collect()
-        == li.groupBy().agg(F.sum("qty"), F.sum("l_partkey")).collect()
-    )
-
-
 def test_zorder_curve_query_is_topk(spark):
     """The query surface stays a bounded TakeOrderedAndProject -- the
     curve key itself never forces a global sort of the table."""
@@ -128,67 +73,16 @@ def test_zorder_curve_query_is_topk(spark):
     )
 
 
-def test_versioned_zorder_compact_rewrites_layout(spark, tmp_path):
-    """OPTIMIZE ZORDER BY for the versioned layer: appends land in
-    arrival order (no pruning on either dimension beyond luck), one
-    zorder-compact publishes a row-identical overwrite version whose
-    live files prune on BOTH columns; the pre-compact version stays
-    time-travelable."""
-    import json
-    import os
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (
-        compact,
-        history,
-        read_versioned,
-        write_versioned,
-    )
-
-    path = str(tmp_path / "zopt")
-    li = (
-        spark.read.parquet(f"{SF}/lineitem.parquet")
-        .select("l_partkey", F.col("l_quantity").cast("long").alias("qty"))
-    )
-    # 4 appended batches split by a hash -- each batch spans the full
-    # (partkey, qty) domain, so every file covers everything
-    for i in range(4):
-        write_versioned(li.where(F.col("l_partkey") % 4 == i), path)
-    before = read_versioned(spark, path).groupBy().agg(
-        F.count("*"), F.sum("qty"), F.sum("l_partkey")
-    ).collect()
-
-    # 16 files: repartitionByRange SAMPLES its boundaries, so coarse
-    # granularities jitter a skip across the threshold run-to-run
-    v = compact(spark, path, target_files=16, zorder=("l_partkey", "qty"))
-    h = history(path)[-1]
-    assert h["version"] == v and h["mode"] == "overwrite"
-
-    live = json.load(
-        open(os.path.join(path, "commits", f"v{v:05d}.json"))
-    )["files"]
-    live_paths = [os.path.join(path, "data", f) for f in live]
-    assert file_prune_fraction(live_paths, "qty", 1, 6) >= 0.35
-    assert file_prune_fraction(live_paths, "l_partkey", 0, 200) >= 0.35
-
-    after = read_versioned(spark, path).groupBy().agg(
-        F.count("*"), F.sum("qty"), F.sum("l_partkey")
-    ).collect()
-    assert after == before
-    # pre-compact snapshot untouched
-    assert read_versioned(spark, path, v - 1).count() == after[0][0]
-
-
 def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
-    """Copy-on-write DELETE composed with the z-order layout: a
-    selective two-sided predicate touches only the files whose z-range
-    intersects it, so most live files survive BY NAME into the new
+    """Copy-on-write DELETE over a range-clustered layout: a selective
+    predicate touches only the files whose key range intersects it,
+    so most live files survive BY NAME into the new
     commit; the change feed between the two versions is exactly the
     deleted rows; old version still time-travelable."""
     import json
     import os
 
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (
-        compact,
         delete_where,
         read_versioned,
         table_changes,
@@ -200,8 +94,7 @@ def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
         spark.read.parquet(f"{SF}/lineitem.parquet")
         .select("l_partkey", F.col("l_quantity").cast("long").alias("qty"))
     )
-    write_versioned(li, path)
-    v_opt = compact(spark, path, target_files=16, zorder=("l_partkey", "qty"))
+    v_opt = write_versioned(li.repartitionByRange(16, "l_partkey"), path)
 
     cond = (F.col("qty") <= 3) & (F.col("l_partkey") <= 200)
     n_match = read_versioned(spark, path).where(cond).count()
@@ -257,7 +150,6 @@ def test_update_where_rewrites_only_touched_files(spark, tmp_path):
     import os
 
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (
-        compact,
         read_versioned,
         update_where,
         write_versioned,
@@ -268,8 +160,7 @@ def test_update_where_rewrites_only_touched_files(spark, tmp_path):
         spark.read.parquet(f"{SF}/lineitem.parquet")
         .select("l_partkey", F.col("l_quantity").cast("long").alias("qty"))
     )
-    write_versioned(li, path)
-    v_opt = compact(spark, path, target_files=16, zorder=("l_partkey", "qty"))
+    v_opt = write_versioned(li.repartitionByRange(16, "l_partkey"), path)
     before_files = set(
         json.load(open(os.path.join(path, "commits", f"v{v_opt:05d}.json")))["files"]
     )
@@ -305,7 +196,6 @@ def test_merge_into_upserts_with_minimal_rewrite(spark, tmp_path):
     import pytest
 
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (
-        compact,
         merge_into,
         read_versioned,
         write_versioned,
@@ -316,8 +206,7 @@ def test_merge_into_upserts_with_minimal_rewrite(spark, tmp_path):
         F.col("id").cast("long").alias("k"),
         (F.col("id") % 7).cast("long").alias("val"),
     )
-    write_versioned(base, path)
-    v_opt = compact(spark, path, target_files=10, zorder=("k", "val"))
+    v_opt = write_versioned(base.repartitionByRange(10, "k"), path)
     before_files = set(
         json.load(open(os.path.join(path, "commits", f"v{v_opt:05d}.json")))["files"]
     )
@@ -329,7 +218,7 @@ def test_merge_into_upserts_with_minimal_rewrite(spark, tmp_path):
     after_files = set(
         json.load(open(os.path.join(path, "commits", f"v{v_new:05d}.json")))["files"]
     )
-    # keys 5 and 6 are adjacent on the z-curve -> few files touched
+    # keys 5 and 6 are adjacent in the range layout -> few files touched
     assert 0 < n_rw < len(before_files)
     assert len(before_files & after_files) == len(before_files) - n_rw
 
@@ -485,8 +374,7 @@ def test_merge_into_refuses_concurrent_append(spark, monkeypatch):
         }
         assert got == {(1, "a"), (9, "raced")}
         # and the refused merge cleaned up its staged output: every
-        # data file on disk is referenced by some commit (no orphans
-        # waiting for vacuum)
+        # data file on disk is referenced by some commit (no orphans)
         import glob as _glob
         import json as _json
         import os as _os
@@ -501,265 +389,3 @@ def test_merge_into_refuses_concurrent_append(spark, monkeypatch):
         assert on_disk == referenced
 
 
-def test_scale16_survives_huge_span(spark):
-    """A span above ~1.4e14 wraps the *65535 multiply in long
-    arithmetic (non-ANSI), silently scrambling the z-key; the scaling
-    now runs in DECIMAL(38,0), so buckets stay exact at any int64
-    span."""
-    lo, hi = 0, 10**15
-    vals = [0, 10**15, 5 * 10**14, 3, hi - 1]
-    df = spark.createDataFrame([(v,) for v in vals], "q long")
-    got = {
-        r.q: r.s
-        for r in df.select("q", scale16(F.col("q"), lo, hi).alias("s")).collect()
-    }
-    for v in vals:
-        assert got[v] == (v - lo) * 65535 // (hi - lo), v
-    assert got[0] == 0 and got[10**15] == 65535
-
-
-def test_check_constraints_gate_every_write_path(spark, tmp_path):
-    """ALTER TABLE ADD CHECK: existing-data validation, enforcement on
-    append AND row-level UPDATE, NULL-passes semantics, clean refusal
-    (no new version, no orphan data files), drop re-opens the gate,
-    time travel unaffected."""
-    import glob as g
-    import os
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (  # noqa: E501
-        CheckViolation,
-        add_check,
-        drop_check,
-        history,
-        latest_version,
-        read_versioned,
-        table_checks,
-        update_where,
-        write_versioned,
-    )
-    import pyspark.sql.functions as F
-    import pytest
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, None)], "id long, qty int"
-    )
-    v0 = write_versioned(df, path)
-
-    # refuse a constraint the existing data violates
-    with pytest.raises(CheckViolation) as e:
-        add_check(spark, path, "qty_big", "qty > 15")
-    assert e.value.counts == {"qty_big": 1}  # only id=1; NULL passes
-
-    v1 = add_check(spark, path, "qty_pos", "qty > 0")
-    assert table_checks(path) == {"qty_pos": "qty > 0"}
-    assert history(path)[-1]["mode"] == "set_check"
-
-    # violating append: refused, version unchanged, no orphan files
-    files_before = set(g.glob(os.path.join(path, "data", "*.parquet")))
-    bad = spark.createDataFrame([(4, -5), (5, 7)], "id long, qty int")
-    with pytest.raises(CheckViolation) as e:
-        write_versioned(bad, path)
-    assert e.value.counts == {"qty_pos": 1}
-    assert latest_version(path) == v1
-    assert set(g.glob(os.path.join(path, "data", "*.parquet"))) == files_before
-
-    # NULL evaluates unknown -> passes (SQL CHECK semantics)
-    ok = spark.createDataFrame([(6, None)], "id long, qty int")
-    v2 = write_versioned(ok, path)
-    assert latest_version(path) == v2
-
-    # DML goes through the same gate: an UPDATE that would set qty <= 0
-    with pytest.raises(CheckViolation):
-        update_where(
-            spark, path, F.col("id") == 2, {"qty": F.lit(-1)}
-        )
-    assert latest_version(path) == v2
-    # files still consistent: snapshot readable, count intact
-    assert read_versioned(spark, path).count() == 4
-
-    # constraints are inherited by ordinary commits
-    assert table_checks(path) == {"qty_pos": "qty > 0"}
-
-    # drop re-opens the gate; unknown name fails loudly
-    with pytest.raises(ValueError):
-        drop_check(path, "nope")
-    drop_check(path, "qty_pos")
-    v3 = write_versioned(bad, path)
-    assert read_versioned(spark, path).count() == 6
-
-    # time travel to the pre-constraint version still works
-    assert read_versioned(spark, path, version=v0).count() == 3
-    assert latest_version(path) == v3
-
-
-def test_check_constraints_gate_merge_into(spark, tmp_path):
-    """MERGE goes through the same CHECK gate: an upsert whose inserts
-    violate the constraint is refused with no new version; a clean
-    merge passes and inherits the constraint."""
-    import pytest
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (  # noqa: E501
-        CheckViolation,
-        add_check,
-        latest_version,
-        merge_into,
-        table_checks,
-        write_versioned,
-    )
-
-    path = str(tmp_path / "m")
-    base = spark.createDataFrame([(1, 10), (2, 20)], "id long, qty int")
-    write_versioned(base, path)
-    add_check(spark, path, "qty_pos", "qty > 0")
-    v = latest_version(path)
-
-    bad = spark.createDataFrame([(3, -1)], "id long, qty int")
-    with pytest.raises((CheckViolation, RuntimeError)):
-        merge_into(spark, path, bad, keys=["id"])
-    assert latest_version(path) == v
-
-    ok = spark.createDataFrame([(2, 25), (3, 30)], "id long, qty int")
-    merge_into(spark, path, ok, keys=["id"])
-    assert latest_version(path) > v
-    assert table_checks(path) == {"qty_pos": "qty > 0"}
-
-
-def test_scale16_degenerate_domain_raises(spark):
-    """hi <= lo would make the span divisor zero: decimal ``div`` by
-    zero is non-ANSI NULL, which would silently NULL the z-key for
-    every row -- the operator refuses the domain instead."""
-    import pytest
-
-    for lo, hi in [(5, 5), (7, 3)]:
-        with pytest.raises(ValueError, match="degenerate domain"):
-            scale16(F.col("q"), lo, hi)
-
-
-def test_drop_check_on_empty_table_raises_cleanly(tmp_path):
-    """DROP CONSTRAINT on a table with no commits must be a descriptive
-    ValueError, not a FileNotFoundError for 'v-0001.json' (the same
-    guard add_check has)."""
-    import os
-
-    import pytest
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (  # noqa: E501
-        drop_check,
-    )
-
-    path = str(tmp_path / "empty")
-    os.makedirs(os.path.join(path, "commits"))
-    with pytest.raises(ValueError, match="empty table"):
-        drop_check(path, "anything")
-
-
-def test_rejected_write_validates_staged_bytes_and_cleans_staging(
-    spark, tmp_path
-):
-    """The CHECK gate runs on the STAGED parquet (the bytes a commit
-    would reference), not on a pre-staging evaluation of the writer's
-    plan -- and a refusal removes the staging directory entirely."""
-    import glob as g
-    import os
-
-    import pytest
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (  # noqa: E501
-        CheckViolation,
-        add_check,
-        latest_version,
-        write_versioned,
-    )
-
-    path = str(tmp_path / "t")
-    write_versioned(
-        spark.createDataFrame([(1, 10)], "id long, qty int"), path
-    )
-    add_check(spark, path, "qty_pos", "qty > 0")
-    v = latest_version(path)
-    files_before = set(g.glob(os.path.join(path, "data", "*.parquet")))
-
-    bad = spark.createDataFrame([(2, -1)], "id long, qty int")
-    with pytest.raises(CheckViolation) as e:
-        write_versioned(bad, path)
-    assert e.value.counts == {"qty_pos": 1}
-    assert latest_version(path) == v
-    # no staging leftovers and no unreferenced data files
-    assert g.glob(os.path.join(path, "_staging-*")) == []
-    assert set(g.glob(os.path.join(path, "data", "*.parquet"))) == files_before
-
-    # a plan Spark marks non-deterministic still publishes correct
-    # bytes: validation sees what was staged, not a re-evaluation
-    import pyspark.sql.functions as F
-
-    nd = (
-        spark.range(3)
-        .select(
-            F.col("id"),
-            (F.floor(F.rand(seed=7) * 5) + 1).cast("int").alias("qty"),
-        )
-    )
-    write_versioned(nd, path)
-    assert latest_version(path) == v + 1
-
-
-def test_restore_version_rolls_back_metadata_only(spark, tmp_path):
-    """RESTORE publishes a NEW commit with the old version's files and
-    checks: content equals the restored snapshot, history is preserved
-    (intermediate versions stay time-travel readable), no data files
-    are moved or copied, restoring the head is a no-op, and vacuum
-    after restore keeps the revived files."""
-    import glob as g
-    import os
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.versioned import (  # noqa: E501
-        add_check,
-        history,
-        latest_version,
-        read_versioned,
-        restore_version,
-        table_checks,
-        vacuum,
-        write_versioned,
-    )
-    import pytest
-
-    path = str(tmp_path / "t")
-    v0 = write_versioned(
-        spark.createDataFrame([(1, 10), (2, 20)], "id long, qty int"), path
-    )
-    v1 = add_check(spark, path, "qty_pos", "qty > 0")
-    v2 = write_versioned(
-        spark.createDataFrame([(9, 90)], "id long, qty int"),
-        path,
-        mode="overwrite",
-    )
-    files_before = set(g.glob(os.path.join(path, "data", "*.parquet")))
-
-    v3 = restore_version(path, v0)
-    assert v3 == v2 + 1
-    # content == v0, history intact, no file churn
-    assert sorted(
-        (r.id, r.qty) for r in read_versioned(spark, path).collect()
-    ) == [(1, 10), (2, 20)]
-    assert read_versioned(spark, path, version=v2).count() == 1
-    assert set(g.glob(os.path.join(path, "data", "*.parquet"))) == files_before
-    h = history(path)
-    assert h[-1]["mode"] == "restore" and len(h) == 4
-    # v0 predates the constraint -> the restored head carries v0's
-    # (empty) check set
-    assert table_checks(path) == {}
-
-    # restoring to v1 brings the constraint back
-    v4 = restore_version(path, v1)
-    assert table_checks(path) == {"qty_pos": "qty > 0"}
-    assert restore_version(path, v4) == v4  # head restore is a no-op
-
-    with pytest.raises(ValueError, match="no version"):
-        restore_version(path, 99)
-
-    # vacuum keeps the revived (head-referenced) files
-    vacuum(path, keep_versions=1)
-    assert sorted(
-        (r.id, r.qty) for r in read_versioned(spark, path).collect()
-    ) == [(1, 10), (2, 20)]

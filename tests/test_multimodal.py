@@ -9,19 +9,11 @@ from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.
     encode_jpeg,
     encode_png_gray,
     image_dimensions,
-    resize_images,
-    sample_frames,
-    with_binary_payload,
     with_test_images,
     with_test_jpegs,
 )
 
 from conftest import TESTDATA
-
-
-def _docs(spark, n=20):
-    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet").limit(n)
-    return with_binary_payload(docs)
 
 
 def test_decode_image_png_bmp_roundtrip():
@@ -195,66 +187,20 @@ def test_image_dimensions_spark_path(spark):
         assert r.bit_depth == (8 if r.doc_id % 2 == 0 else 24)
 
 
-def test_resize_schema_and_determinism(spark):
-    """REAL resize: every output payload is a VALID 8-bit grayscale
-    PNG with the target dims (decode_image roundtrip proves it),
-    byte-deterministic across runs, for both source containers."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (  # noqa: E501
-        decode_image,
-        with_test_images,
-    )
-
-    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet").limit(20)
-    imgs = with_test_images(docs)
-    out = resize_images(imgs, width=8, height=6)
-    rows = {r.doc_id: r for r in out.collect()}
-    again = {r.doc_id: r for r in resize_images(imgs, 8, 6).collect()}
-    assert len(rows) == 20
-    for doc_id, r in rows.items():
-        assert (r.width, r.height, r.channels) == (8, 6, 1)
-        assert decode_image(bytes(r.resized)) == {
-            "format": "png", "width": 8, "height": 6, "bit_depth": 8,
-        }
-        assert bytes(r.resized) == bytes(again[doc_id].resized)
-
-
-def test_resize_pixels_match_python_box_model():
-    """The Spark-side resample is the pure-Python integer box model:
-    decode(resize(encode(px))) == box_mean(px) exactly, downscale and
-    upscale, PNG and BMP sources."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (  # noqa: E501
-        decode_gray_pixels,
-        encode_bmp_rgb,
-        encode_png_gray,
-        encode_png_gray_pixels,
-        resize_gray_pixels,
-    )
-
-    def box_model(px, ow, oh):
-        h, w = len(px), len(px[0])
-        out = []
-        for y in range(oh):
-            y0, y1 = y * h // oh, max(y * h // oh + 1, (y + 1) * h // oh)
-            row = []
-            for x in range(ow):
-                x0 = x * w // ow
-                x1 = max(x0 + 1, (x + 1) * w // ow)
-                vals = [px[yy][xx] for yy in range(y0, y1) for xx in range(x0, x1)]
-                row.append(sum(vals) // len(vals))
-            out.append(row)
-        return out
-
-    for payload in [
-        encode_png_gray(13, 9, seed=3),
-        encode_bmp_rgb(13, 9, seed=3),
-        encode_png_gray(4, 4, seed=11),
-    ]:
-        src = decode_gray_pixels(payload)
-        for ow, oh in [(5, 3), (8, 8), (17, 11)]:  # down, mixed, up
-            got = resize_gray_pixels(src, ow, oh)
-            assert got == box_model(src, ow, oh)
-            # encode->decode roundtrip is lossless (filter-0 PNG)
-            assert decode_gray_pixels(encode_png_gray_pixels(got)) == got
+def _box_resample(px, ow, oh):
+    """Integer box-mean resample of a grayscale matrix to ow x oh."""
+    h, w = len(px), len(px[0])
+    out = []
+    for y in range(oh):
+        y0, y1 = y * h // oh, max(y * h // oh + 1, (y + 1) * h // oh)
+        row = []
+        for x in range(ow):
+            x0 = x * w // ow
+            x1 = max(x0 + 1, (x + 1) * w // ow)
+            vals = [px[yy][xx] for yy in range(y0, y1) for xx in range(x0, x1)]
+            row.append(sum(vals) // len(vals))
+        out.append(row)
+    return out
 
 
 def test_resized_near_dups_still_band_together(spark):
@@ -265,7 +211,6 @@ def test_resized_near_dups_still_band_together(spark):
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (  # noqa: E501
         ahash64,
         decode_gray_pixels,
-        resize_gray_pixels,
         with_test_images_textured,
     )
 
@@ -279,67 +224,10 @@ def test_resized_near_dups_still_band_together(spark):
         px = decode_gray_pixels(p)
         orig = ahash64(px) & (2**64 - 1)
         half = ahash64(
-            resize_gray_pixels(px, max(8, len(px[0]) // 2), max(8, len(px) // 2))
+            _box_resample(px, max(8, len(px[0]) // 2), max(8, len(px) // 2))
         ) & (2**64 - 1)
         dist = bin(orig ^ half).count("1")
         assert dist <= 3, (doc_id, dist)
-
-
-def test_sample_frames_explodes_with_stable_order(spark):
-    out = sample_frames(_docs(spark), n_frames=4)
-    rows = out.collect()
-    assert len(rows) == 20 * 4
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    for doc_id, frames in by_doc.items():
-        assert sorted(f.frame_idx for f in frames) == [0, 1, 2, 3]
-        for f in frames:
-            assert f.frame_bytes == len(f.frame) > 0
-
-
-def test_binary_file_source_feeds_image_decode(spark, tmp_path):
-    """End-to-end multimodal ingest: real files on disk -> binaryFile
-    source (path/length/content rows, glob applied at listing time) ->
-    the same header decoder the parquet-packed path uses. Proves the
-    source composes with the operators, not just the synthetic
-    payload column."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (
-        encode_bmp_rgb,
-        encode_png_gray,
-        image_dimensions,
-    )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.readers import (
-        read_binary_files,
-    )
-    from pyspark.sql import functions as F
-
-    d = tmp_path / "imgs"
-    d.mkdir()
-    (d / "a.png").write_bytes(encode_png_gray(12, 7, seed=1))
-    (d / "b.bmp").write_bytes(encode_bmp_rgb(9, 5, seed=2))
-    (d / "ignore.txt").write_bytes(b"not an image")
-
-    df = read_binary_files(spark, str(d), glob="*.{png,bmp}")
-    assert sorted(df.columns) == ["content", "length", "modificationTime", "path"]
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 2, "glob must exclude the .txt at listing time"
-    for r in rows:
-        assert r.length == len(r.content)
-
-    payload = df.select(
-        F.monotonically_increasing_id().alias("doc_id"),
-        F.col("content").alias("payload"),
-        F.col("path"),
-    )
-    dims = {
-        r.path.rsplit("/", 1)[-1]: (r.format, r.width, r.height)
-        for r in image_dimensions(payload, id_col="doc_id")
-        .join(payload.select("doc_id", "path"), "doc_id")
-        .collect()
-    }
-    assert dims["a.png"] == ("png", 12, 7)
-    assert dims["b.bmp"] == ("bmp", 9, 5)
 
 
 def test_wav_decode_walks_chunks_and_rejects_corruption():
@@ -396,39 +284,6 @@ def test_gif_frame_walk_counts_frames_and_duration():
         decode_frames(b"MP4\x00\x00\x00")
     with _pytest.raises(ValueError):
         decode_frames(b"GIF89a" + b"\x00" * 4)
-
-
-def test_extracted_gif_frames_are_standalone_valid_gifs(spark):
-    """Each sampled frame re-wraps into a VALID 1-frame GIF: the real
-    decoder accepts it, dims match the parent, and sampling every=2
-    takes ceil(n/2) frames."""
-    from pyspark.sql import functions as F
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (
-        decode_frames,
-        encode_gif_frames,
-        extract_gif_frames,
-        sample_animation_frames,
-        with_test_animations,
-    )
-
-    g = encode_gif_frames(6, 4, 5, delay_cs=4, seed=9)
-    frames = extract_gif_frames(g, every=2)
-    assert len(frames) == 3  # frames 0, 2, 4
-    for fb in frames:
-        m = decode_frames(fb)
-        assert (m["width"], m["height"], m["n_frames"]) == (6, 4, 1)
-        assert m["duration_cs"] == 4  # GCE carried with its frame
-
-    docs = spark.range(6).select(F.col("id").alias("doc_id"))
-    out = sample_animation_frames(with_test_animations(docs), every=2).collect()
-    per_doc = {}
-    for r in out:
-        per_doc.setdefault(r.doc_id, []).append(r)
-        assert decode_frames(r.frame)["n_frames"] == 1
-    for i in range(6):
-        expect = (i % 7 + 1 + 1) // 2  # ceil(n_frames / 2)
-        assert len(per_doc[i]) == expect, i
 
 
 def test_pixel_decode_roundtrips_both_containers():

@@ -1,9 +1,7 @@
 """End-to-end integration: the full daily DAG writing real zone
-artifacts, replayed for idempotency; and the streaming warehouse sink."""
+artifacts, replayed for idempotency; the curation DAG; and backfill."""
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -17,16 +15,9 @@ from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.queries im
     q_discrepancy_count,
     q_reconcile,
 )
-from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.sessionize import (
-    hourly_rollup,
-)
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans import fixtures
-from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.streaming.events import (
-    run_to_partitioned_parquet,
-    streaming_hourly_rollup,
-)
 
-from conftest import TESTDATA, raw_nanos_events
+from conftest import TESTDATA
 
 
 def _recon_rows(df):
@@ -125,166 +116,6 @@ def test_daily_pipeline_one_fact_pass_and_job_budget(spark, tmp_path, monkeypatc
     ]
     assert not [s.name for s in stages if s.name.startswith("parquet at")]
     assert 0 < len(jobs) <= JOB_BUDGET, [s.name for s in stages]
-
-
-def test_streaming_parquet_sink_idempotent(spark, tmp_path):
-    # stage events as two time-ordered files so the watermark advances
-    # and append mode finalizes the early windows
-    ev = raw_nanos_events(spark)
-    (mid,) = ev.approxQuantile("ts", [0.5], 0.0)
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    for i, part in enumerate(
-        [ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)]
-    ):
-        stage = tmp_path / f"stage{i}"
-        part.coalesce(1).write.parquet(str(stage))
-        (pf,) = glob.glob(str(stage / "part-*.parquet"))
-        shutil.move(pf, src / f"{i:02d}.parquet")
-        os.utime(src / f"{i:02d}.parquet", (i + 1, i + 1))
-
-    out = str(tmp_path / "warehouse" / "events_hourly")
-    ckpt = str(tmp_path / "ckpt")
-    agg = streaming_hourly_rollup(spark, str(src), watermark="1 minute")
-    run_to_partitioned_parquet(agg, out, ckpt)
-
-    written = spark.read.parquet(out)
-    batch = {
-        (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
-        for r in hourly_rollup(fixtures.events(spark, TESTDATA)).collect()
-    }
-    got = {
-        (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
-        for r in written.collect()
-    }
-    assert len(got) > 0
-    # every finalized window written by the stream matches batch truth
-    # (only windows still open at the final watermark may be absent)
-    for k, v in got.items():
-        assert batch[k] == v, k
-    assert len(got) >= len(batch) - 2 * len(
-        {k[1] for k in batch}
-    )  # at most the last 2 open hours per event_type missing
-
-    # replaying the whole stream with a fresh checkpoint rewrites the
-    # same partitions -- the table is unchanged, not duplicated
-    run_to_partitioned_parquet(
-        streaming_hourly_rollup(spark, str(src), watermark="1 minute"),
-        out,
-        str(tmp_path / "ckpt2"),
-    )
-    again = {
-        (r.bucket_start, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == got
-
-
-def test_airflow_adapter_preserves_graph_and_data_passing():
-    """to_airflow_tasks must mirror Pipeline's edges and resolve
-    dependency results (XCom contract) -- verified with a stub operator
-    so Airflow itself is never required."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.pipeline import (
-        Pipeline,
-        to_airflow_tasks,
-    )
-
-    class StubOp:
-        def __init__(self, task_id, python_callable, dag, **_):
-            self.task_id, self.fn, self.dag = task_id, python_callable, dag
-            self.upstream = []
-
-        def __rshift__(self, other):
-            other.upstream.append(self.task_id)
-            return other
-
-    p = (
-        Pipeline()
-        .add("stage_sales", lambda: 7)
-        .add("build_dims", lambda: 3)
-        .add("reconcile", lambda stage_sales, build_dims: stage_sales - build_dims,
-             ["stage_sales", "build_dims"])
-    )
-    ops = to_airflow_tasks(p, dag="DAG", operator_cls=StubOp)
-    assert set(ops) == {"stage_sales", "build_dims", "reconcile"}
-    assert sorted(ops["reconcile"].upstream) == ["build_dims", "stage_sales"]
-    assert all(o.dag == "DAG" for o in ops.values())
-
-    class FakeTI:  # XCom result store
-        def __init__(self, results):
-            self.results = results
-
-        def xcom_pull(self, task_ids):
-            return self.results[task_ids]
-
-    results = {}
-    for name in ("stage_sales", "build_dims", "reconcile"):
-        results[name] = ops[name].fn(ti=FakeTI(results))
-    assert results == p.run() == {"stage_sales": 7, "build_dims": 3, "reconcile": 4}
-
-
-def test_cron_entry_is_runnable_command():
-    """The rendered crontab line must be a command that exists:
-    spark-submit takes a script path (it has no module flag), python -m
-    takes a module name. Guard both renderings."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.pipeline import (
-        to_cron_entry,
-    )
-
-    line = to_cron_entry("jobs/daily_reconcile.py")
-    assert line == "0 3 * * * spark-submit --deploy-mode cluster jobs/daily_reconcile.py"
-    assert " -m " not in line  # spark-submit has no -m flag
-
-    line = to_cron_entry("retail_jobs.daily", schedule="30 2 * * *")
-    assert line == "30 2 * * * python -m retail_jobs.daily"
-
-
-def test_incremental_ingest_crash_replay_converges(spark, tmp_path):
-    """run_incremental_ingest: normal pickup, crash-replay (data
-    written, manifest commit lost) converges to the same bytes, and
-    later batches land beside earlier ones."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans.daily import (
-        run_incremental_ingest,
-    )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.readers import (
-        read_parquet_incremental,
-    )
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "bronze")
-    manifest = str(tmp_path / "manifest")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, v string"
-    ).coalesce(1).write.mode("append").parquet(landing)
-
-    r1 = run_incremental_ingest(spark, landing, out, manifest)
-    assert r1["rows"] == 2 and len(r1["files"]) == 1
-
-    # crash window: simulate a run that wrote data but lost the
-    # manifest commit -- wipe the manifest, re-run: same files, same
-    # batch id, partition overwritten in place, NO duplication
-    import shutil
-
-    shutil.rmtree(manifest)
-    r_replay = run_incremental_ingest(spark, landing, out, manifest)
-    assert r_replay["batch_id"] == r1["batch_id"]
-    assert spark.read.parquet(out).count() == 2
-
-    # producer appends; only the new file is picked up, old batch kept
-    spark.createDataFrame([(3, "c")], "id long, v string").coalesce(
-        1
-    ).write.mode("append").parquet(landing)
-    r2 = run_incremental_ingest(spark, landing, out, manifest)
-    assert r2["rows"] == 1 and r2["batch_id"] != r1["batch_id"]
-    assert sorted(
-        r.id for r in spark.read.parquet(out).select("id").collect()
-    ) == [1, 2, 3]
-
-    # caught up: no-op
-    assert run_incremental_ingest(spark, landing, out, manifest)["rows"] == 0
-    # and the manifest now covers both files
-    _, fresh = read_parquet_incremental(spark, landing, manifest)
-    assert fresh == []
 
 
 def test_curation_pipeline_end_to_end(spark, tmp_path):

@@ -124,65 +124,6 @@ def test_simhash64_uses_full_width_and_pigeonhole_recall(spark):
     assert (0, 100) in banded
 
 
-@SLOW
-@given(
-    batches=st.lists(
-        st.lists(
-            st.tuples(
-                st.sampled_from(["2024-01-01", "2024-01-02", "2024-01-03"]),
-                st.integers(min_value=0, max_value=6),   # sku
-                st.integers(min_value=-50, max_value=50),  # qty
-            ),
-            min_size=1,
-            max_size=6,
-        ),
-        min_size=1,
-        max_size=3,
-    )
-)
-def test_merge_upsert_equals_dict_semantics(spark, tmp_path_factory, batches):
-    """Randomized CDC streams: after applying N batches (keep-last
-    within each batch by version), the mart must equal a driver-side
-    dict replay -- whatever the partition mix, collisions, or batch
-    sizes. Versions are batch-local (0..n), so later batches routinely
-    redeliver keys with LOWER versions than the stored row: the model
-    applies the cross-batch gate (new version must be >= stored to
-    win), pinning out-of-order protection under randomized streams.
-    Metrics must balance: kept+replaced = previous rows in the touched
-    partitions of the truth dict."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sources.writers import (
-        merge_upsert,
-    )
-
-    path = str(tmp_path_factory.mktemp("cdcprop") / "mart")
-    truth: dict = {}  # key -> (qty, ver)
-    for batch in batches:
-        rows = [
-            (d, str(sku), qty, i) for i, (d, sku, qty) in enumerate(batch)
-        ]
-        df = spark.createDataFrame(
-            rows, "date_key string, sku string, qty int, ver int"
-        )
-        touched = {d for d, *_ in rows}
-        prev_in_touched = sum(1 for (d, _s) in truth if d in touched)
-        metrics = merge_upsert(
-            spark, df, path, key_cols=["date_key", "sku"], version_col="ver"
-        )
-        winners: dict = {}  # within-batch: highest version per key wins
-        for d, sku, qty, v in rows:
-            if (d, sku) not in winners or v >= winners[(d, sku)][1]:
-                winners[(d, sku)] = (qty, v)
-        for k, (qty, v) in winners.items():  # cross-batch: >= stored wins
-            if k not in truth or v >= truth[k][1]:
-                truth[k] = (qty, v)
-        assert metrics["rows_kept"] + metrics["rows_replaced"] == prev_in_touched
-        got = {
-            (str(r.date_key), r.sku): (r.qty, r.ver)
-            for r in spark.read.parquet(path).collect()
-        }
-        assert got == truth
-
-
 from hypothesis import given, settings as hsettings, strategies as st
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (
@@ -296,33 +237,6 @@ def test_asof_join_matches_pandas_merge_asof(spark, left_rows, right_rows):
             for r in exp_df.itertuples()
         }
         assert got == exp, direction
-
-
-@SLOW
-@given(
-    vals=st.lists(
-        st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=12
-    ),
-    lo=st.integers(min_value=-(2**63), max_value=2**63 - 2),
-    span=st.integers(min_value=1, max_value=2**64 - 1),
-)
-def test_scale16_matches_python_integer_math(spark, vals, lo, span):
-    """scale16 == pure-Python clamped exact bucketing at ANY int64
-    span -- the decimal IntegralDivide must never wrap or misround."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.layout import (
-        scale16,
-    )
-    from pyspark.sql import functions as F
-
-    hi = lo + span
-    df = spark.createDataFrame([(v,) for v in vals], "q long")
-    got = {
-        r.q: r.s
-        for r in df.select("q", scale16(F.col("q"), lo, hi).alias("s")).collect()
-    }
-    for v in vals:
-        c = min(max(v, lo), hi)
-        assert got[v] == (c - lo) * 65535 // span, (v, lo, hi)
 
 
 @SLOW
@@ -677,38 +591,47 @@ def test_throttle_matches_python_greedy(spark, gaps, cooldown):
     assert got == want
 
 
-@given(
-    w=st.integers(1, 24),
-    h=st.integers(1, 24),
-    ow=st.integers(1, 24),
-    oh=st.integers(1, 24),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_resize_box_resample_matches_python_model(w, h, ow, oh, seed):
-    """resize_gray_pixels == an independently written integer box-mean
-    model on random matrices at ANY (source, target) dims -- downscale,
-    upscale, degenerate 1-px, and the PNG re-encode is lossless."""
-    import random
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.multimodal import (  # noqa: E501
-        decode_gray_pixels,
-        encode_png_gray_pixels,
-        resize_gray_pixels,
+def test_alert_throttle_state_carries_across_arrow_batches(spark):
+    """The r14 mapInPandas spelling carries (current key, last-kept
+    sec) across Arrow batch boundaries inside a partition. Force
+    2-row batches so every key straddles several batches: the kept
+    set must equal the per-key python greedy exactly -- a reset at a
+    batch boundary would re-keep suppressed rows mid-burst."""
+    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.alerts import (  # noqa: E501
+        throttle_alerts,
     )
 
-    rng = random.Random(seed)
-    px = [[rng.randrange(256) for _ in range(w)] for _ in range(h)]
-    got = resize_gray_pixels(px, ow, oh)
-    assert len(got) == oh and all(len(r) == ow for r in got)
-    for y in range(oh):
-        y0, y1 = y * h // oh, max(y * h // oh + 1, (y + 1) * h // oh)
-        for x in range(ow):
-            x0 = x * w // ow
-            x1 = max(x0 + 1, (x + 1) * w // ow)
-            vals = [px[yy][xx] for yy in range(y0, y1) for xx in range(x0, x1)]
-            assert got[y][x] == sum(vals) // len(vals)
-    assert decode_gray_pixels(encode_png_gray_pixels(got)) == got
+    # 3 users x 50 alerts, 40s apart -> with cooldown 100s the greedy
+    # keeps every 3rd alert per user (t=0,120,240,...); 2-row Arrow
+    # batches put ~25 batch boundaries inside each user's run
+    rows = [
+        (u, u * 1000 + i, 40 * i) for u in (1, 2, 3) for i in range(50)
+    ]
+    df = spark.createDataFrame(rows, "user_id long, event_id long, sec long")
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        kept = sorted(
+            (r.user_id, r.event_id)
+            for r in throttle_alerts(df, cooldown_s=100).collect()
+        )
+    finally:
+        if old is None:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        else:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )
+    # python greedy twin
+    want = []
+    for u in (1, 2, 3):
+        last = None
+        for i in range(50):
+            sec = 40 * i
+            if last is None or sec - last >= 100:
+                want.append((u, u * 1000 + i))
+                last = sec
+    assert kept == sorted(want) and len(kept) == 3 * 17
 
 
 @given(
@@ -867,6 +790,16 @@ def _brute_min_accepted_overlap(m, num, den):
     return m + 1
 
 
+def _prefix_alpha(spark, m: int, threshold: float) -> int:
+    """The prefix filter's in-plan alpha for a document of m shingles."""
+    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (
+        _rounded_prefix_alpha_expr,
+    )
+
+    df = spark.createDataFrame([(m,)], "n_shingles int")
+    return df.select(_rounded_prefix_alpha_expr(threshold)).first()[0]
+
+
 @given(
     m=st.integers(min_value=3, max_value=200_000),
     frac=st.sampled_from(
@@ -874,17 +807,13 @@ def _brute_min_accepted_overlap(m, num, den):
     ),
 )
 @settings(max_examples=60, deadline=None)
-def test_rounded_prefix_alpha_is_complete_and_tight(m, frac):
+def test_rounded_prefix_alpha_is_complete_and_tight(spark, m, frac):
     """alpha never exceeds the true minimum ROUNDED-accepted overlap
     (completeness: the prefix filter cannot prune an acceptable pair)
     and sits within the documented 1-shingle IEEE cushion of it
     (tightness: pruning power is not given away)."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (
-        rounded_prefix_alpha,
-    )
-
     num, den = frac
-    alpha = rounded_prefix_alpha(m, num / den)
+    alpha = _prefix_alpha(spark, m, num / den)
     # brute-force scan is O(m); confine it to a window around alpha
     lo = max(1, alpha - 3)
     from fractions import Fraction
@@ -901,15 +830,11 @@ def test_rounded_prefix_alpha_is_complete_and_tight(m, frac):
     assert alpha >= k_min - 1, f"alpha {alpha} gives away >1 below {k_min}"
 
 
-def test_rounded_prefix_alpha_r8_advice_scenario():
+def test_rounded_prefix_alpha_r8_advice_scenario(spark):
     """The exact scenario from the r8 advice: t=0.7, m=20000 -- the
     pair with overlap 13999 (ratio 0.69995, rounds to 0.7000) is
     ACCEPTED by the filter but ceil(t*m)=14000 would prune it."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (
-        rounded_prefix_alpha,
-    )
-
     assert _brute_min_accepted_overlap(20_000, 7, 10) == 13_999
-    assert rounded_prefix_alpha(20_000, 0.7) <= 13_999
+    assert _prefix_alpha(spark, 20_000, 0.7) <= 13_999
     # and the old exact-threshold alpha really was wrong
     assert -(-7 * 20_000 // 10) == 14_000

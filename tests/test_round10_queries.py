@@ -203,112 +203,6 @@ def test_pq_append_is_associative_and_idempotent_to_read(spark, tmp_path):
     assert len({r.vec_id for r in dup}) == 10  # no id served twice
 
 
-def test_pq_staleness_gates_retraining(spark, tmp_path):
-    """The staleness report counts base vs appended rows, weights
-    distortion by batch size, and recommends retraining only past the
-    thresholds -- appending MORE than the training corpus must trip
-    the appended-fraction gate."""
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.similarity import (  # noqa: E501
-        append_to_pq_index,
-        build_pq_index,
-        pq_index_staleness,
-    )
-
-    emb = _emb(spark)
-    mid = emb.approxQuantile("vec_id", [0.3], 0.0)[0]
-    a = emb.where(F.col("vec_id") <= mid)
-    b = emb.where(F.col("vec_id") > mid)
-    idx = str(tmp_path / "stale")
-    build_pq_index(a, idx)
-
-    fresh = pq_index_staleness(spark, idx)
-    assert fresh["n_appended"] == 0 and not fresh["retrain_recommended"]
-    assert fresh["n_base"] == a.count()
-
-    append_to_pq_index(b, idx)
-    rep = pq_index_staleness(spark, idx)
-    assert rep["n_appended"] == b.count()
-    assert rep["appended_fraction"] > 0.5
-    assert rep["retrain_recommended"]  # appended > trained-on corpus
-    # iid halves: the fixed codebook quantizes the unseen half about
-    # as well as the training half (ratio ~ 1, far under the gate)
-    assert rep["distortion_ratio"] is not None
-    assert rep["distortion_ratio"] < 1.5
-
-
-def test_pq_staleness_gate_matches_exact_python_model():
-    """Hypothesis vs an independently-written exact model (the r7/r10
-    discipline that caught real BPE and k-core bugs): for arbitrary
-    append-batch histories and thresholds, the factored-out gate math
-    must agree with first-principles Fraction arithmetic on (a) the
-    size-weighted mean distortion, (b) the appended fraction, and
-    (c) the exact OR-of-breaches recommendation; plus the structural
-    invariants -- fraction in [0, 1], monotone in appends, a missing
-    ratio side waives only the ratio gate."""
-    from fractions import Fraction
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.similarity import (  # noqa: E501
-        staleness_report,
-    )
-
-    dist = st.integers(0, 10_000).map(lambda c: c / 1000.0)  # exact doubles
-    batches = st.lists(
-        st.tuples(st.integers(1, 10_000), dist), min_size=0, max_size=8
-    )
-
-    @given(
-        st.one_of(st.none(), st.integers(0, 10_000_000)),
-        st.one_of(st.none(), dist),
-        batches,
-        st.integers(1, 99),
-        st.integers(100, 400),
-    )
-    @settings(max_examples=200, deadline=None)
-    def check(base_n, base_dist, log, maxf_pct, maxr_pct):
-        # the caller (pq_index_staleness) folds the append log into a
-        # size-weighted mean; reproduce that fold exactly
-        appended = sum(n for n, _ in log)
-        app_dist = (
-            float(
-                sum(Fraction(n) * Fraction(d) for n, d in log)
-                / Fraction(appended)
-            )
-            if appended
-            else None
-        )
-        maxf, maxr = maxf_pct / 100.0, maxr_pct / 100.0
-        rep = staleness_report(
-            base_n, base_dist, appended, app_dist, maxf, maxr
-        )
-        # exact model: fractions all the way to the comparisons
-        total = (base_n or 0) + appended
-        frac = Fraction(appended, total) if total else Fraction(0)
-        assert 0 <= frac <= 1
-        assert rep["appended_fraction"] == round(float(frac), 6)
-        assert rep["n_appended"] == appended and rep["n_base"] == base_n
-        if app_dist is None or not base_dist:
-            # missing side: ratio gate waived, NEVER the fraction gate
-            assert rep["distortion_ratio"] is None
-            assert rep["retrain_recommended"] == (float(frac) > maxf)
-        else:
-            ratio = app_dist / base_dist
-            assert rep["distortion_ratio"] == round(ratio, 6)
-            assert rep["retrain_recommended"] == (
-                float(frac) > maxf or ratio > maxr
-            )
-        # monotonicity: more appended rows never lowers the fraction
-        if appended:
-            rep2 = staleness_report(
-                base_n, base_dist, appended + 1, app_dist, maxf, maxr
-            )
-            assert rep2["appended_fraction"] >= rep["appended_fraction"]
-
-    check()
-
-
 def test_pq_index_append_query_contract(spark):
     """The rows-only entry: 10 rows, deterministic, self is top-1 (the
     query vector sits in the TRAINED half, served alongside appended

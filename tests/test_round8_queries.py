@@ -17,13 +17,14 @@ from conftest import TESTDATA as SF
 def test_prefix_containment_is_output_identical_to_raw_join(spark):
     """The overlap prefix-filter theorem says recall is exactly 1.0 --
     verified directly: the filtered operator and the raw shared-shingle
-    join return the same directional pair set on the corpus."""
+    join return the same directional pair set on the corpus (the
+    router's prefix route, forced by ``max_df_raw_route=0``)."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.functions.text import (  # noqa: E501
         tokens,
         word_ngrams,
     )
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (  # noqa: E501
-        prefix_containment_pairs,
+        containment_pairs,
     )
 
     docs = fixtures.fan_out(fixtures.load(spark, SF, "documents"))
@@ -65,7 +66,7 @@ def test_prefix_containment_is_output_identical_to_raw_join(spark):
     }
     pref = {
         (r.doc_a, r.doc_b, r.containment)
-        for r in prefix_containment_pairs(docs, n=3).collect()
+        for r in containment_pairs(docs, n=3, max_df_raw_route=0).collect()
     }
     assert pref == raw and raw  # identical and non-empty
 
@@ -76,7 +77,7 @@ def test_prefix_containment_boundary_pair(spark):
     integer, so the >= boundary is inclusive; a 3-of-5 pair (0.6) is
     dropped by the verify stage."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (  # noqa: E501
-        prefix_containment_pairs,
+        containment_pairs,
     )
 
     # doc 1: tokens w1..w7 -> 5 shingles; doc 2 shares its first 6
@@ -90,7 +91,7 @@ def test_prefix_containment_boundary_pair(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.containment
-        for r in prefix_containment_pairs(docs, n=3).collect()
+        for r in containment_pairs(docs, n=3, max_df_raw_route=0).collect()
     }
     assert got[(1, 2)] == 0.8  # exactly at the boundary, kept
     assert (1, 3) not in got and (3, 1) not in got

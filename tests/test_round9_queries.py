@@ -531,38 +531,38 @@ def test_heavy_hitters_equals_exact_group_by(spark):
 
 def test_mmr_is_deterministic_and_suppresses_redundancy(spark):
     """Two runs agree row-for-row; on a planted pool where the two
-    most relevant vectors are near-identical, plain top-k keeps both
-    but MMR keeps one and promotes a diverse vector."""
+    most relevant vectors (after the query itself) are near-identical,
+    plain top-k keeps both but MMR keeps one and promotes a diverse
+    vector."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.similarity import (  # noqa: E501
         brute_force_topk,
-        mmr_topk,
+        mmr_topk_exact,
     )
 
-    # query deliberately differs from every vector so relevance and
-    # inter-candidate similarity are distinct quantities (with q ==
-    # vec0, every unit vector x has rel(x) == sim(x, vec0) and all
-    # MMR scores tie at 0)
-    q = [1.0, 0.0, 0.0, 0.0]
+    # the query is vector 9; it ranks first (rel 1.0) and then counts
+    # as selected, so a later pick x pays 0.3 * max(rel(x), sim to
+    # the other picks): a diverse vector scores 0.4 * rel, a near-dup
+    # of pick 0 scores ~0.7 * rel - 0.3
     rows = [
+        (9, [1.0, 0.0, 0.0, 0.0]),        # the query
         (0, [0.95, 0.3122, 0.0, 0.0]),    # most relevant
         (1, [0.949, 0.3152, 0.0, 0.0]),   # near-duplicate of 0
-        (2, [0.9, -0.4359, 0.0, 0.0]),    # relevant, diverse from 0
+        (2, [0.93, -0.3676, 0.0, 0.0]),   # relevant, diverse from 0
         (3, [0.5, 0.0, 0.866, 0.0]),      # less relevant, diverse
         (4, [0.0, 1.0, 0.0, 0.0]),        # orthogonal to the query
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [1.0, 0.0, 0.0, 0.0]
     plain = [r.vec_id for r in brute_force_topk(emb, q, k=3).collect()]
-    assert plain[:2] == [0, 1]  # redundancy in the relevance-only list
-    out1 = mmr_topk(emb, q, k=3, pool=5, lam=0.5).collect()
-    out2 = mmr_topk(emb, q, k=3, pool=5, lam=0.5).collect()
+    assert plain == [9, 0, 1]  # redundancy in the relevance-only list
+    out1 = mmr_topk_exact(emb, k=3, pool=5, query_id=9).collect()
+    out2 = mmr_topk_exact(emb, k=3, pool=5, query_id=9).collect()
     assert out1 == out2
     picked = [r.vec_id for r in out1]
-    assert picked[0] == 0  # first pick is pure relevance
-    assert 1 not in picked  # the near-duplicate is suppressed
-    assert len(picked) == 3
-    # ranks are 1..k and mmr_score never exceeds lam * score
+    assert picked == [9, 0, 2]  # the near-duplicate is suppressed
+    # ranks are 1..k and mmr_score never exceeds lambda * rel
     for r in out1:
-        assert r.mmr_score <= 0.5 * r.score + 1e-9
+        assert r.mmr_score <= 0.7 * r.rel + 1e-9
     assert [r.rank for r in out1] == [1, 2, 3]
 
 

@@ -234,45 +234,6 @@ def test_weighted_sample_deterministic_pps_and_zero_weight_excluded(spark):
     assert heavy_seats > light_seats * 2, (heavy_seats, light_seats)
 
 
-def test_quantized_topk_overlap_and_reconstruction_bound(spark):
-    """int8 contract: (a) per-dim dequantization error <= scale/2;
-    (b) the quantized top-10 recovers most of the exact top-10 and the
-    query vector itself stays rank 1."""
-    from pyspark.sql import functions as F
-
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.similarity import (
-        quantize_embeddings,
-    )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans import (
-        fixtures,
-    )
-    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.functions.vectors import (
-        as_double_array,
-    )
-
-    emb = fixtures.load(spark, ORACLE_SF, "embeddings")
-    qz = quantize_embeddings(emb)
-    joined = emb.join(qz, "vec_id").select(
-        F.array_max(
-            F.zip_with(
-                as_double_array("embedding"),
-                F.transform("q_embedding", lambda v: v.cast("double") * F.col("scale")),
-                lambda a, b: F.abs(a - b),
-            )
-        ).alias("max_err"),
-        (F.col("scale") / 2 + 1e-12).alias("bound"),
-    )
-    assert joined.where(F.col("max_err") > F.col("bound")).count() == 0
-
-    # q_quantized_topk was RETIRED from the queries() registry in r14
-    # (its rung is the oracle-paired int8_cosine_topk); the operator
-    # and this contract test stay
-    got = Q.q_quantized_topk(spark, ORACLE_SF).collect()
-    exact = {r.vec_id for r in entry.queries()["sim_topk"](spark, ORACLE_SF).collect()}
-    assert len(got) == 10 and got[0].vec_id == 0
-    assert len(exact & {r.vec_id for r in got}) >= 8
-
-
 def test_ann_recall_reports_every_path_above_floor(spark):
     rows = {r.method: r for r in entry.queries()["ann_recall"](spark, ORACLE_SF).collect()}
     assert set(rows) == {"lsh", "ivf", "int8"}
@@ -285,39 +246,14 @@ def test_ann_recall_reports_every_path_above_floor(spark):
     assert rows["lsh"].hits >= 3
 
 
-def test_pq_topk_recall_rerank_and_compression(spark):
-    """PQ ADC: self-match first (exact re-rank guarantees the true
-    nearest survives any candidate set containing it), recall@10 >= 7
-    vs brute force at rerank=50/500, reported scores EXACTLY equal the
-    brute-force cosine on the overlap (quantization affects recall
-    only, never scores), deterministic across runs; and the code
-    representation is genuinely m small ints (the 8-bytes-per-vector
-    compression claim)."""
-    # q_pq_topk was RETIRED from the queries() registry in r14 (its
-    # serve math is the oracle-paired pq_adc_topk); operator + test stay
-    qs = entry.queries()
-    pq = Q.q_pq_topk(spark, ORACLE_SF).collect()
-    assert len(pq) == 10
-    assert pq[0].vec_id == 0 and pq[0].score == 1.0
-    brute = {r.vec_id: r.score for r in qs["sim_topk"](spark, ORACLE_SF).collect()}
-    got = {r.vec_id for r in pq}
-    # codebook training averages floats, so centroids (and recall)
-    # shift a little with session partitioning -- same floor as IVF
-    assert len(set(brute) & got) >= 5
-    for r in pq:
-        if r.vec_id in brute:
-            assert r.score == brute[r.vec_id]
-    again = Q.q_pq_topk(spark, ORACLE_SF).collect()
-    assert [r.vec_id for r in pq] == [r.vec_id for r in again]
-
-
-def test_pq_topk_survives_tiny_corpus(spark):
+def test_pq_index_survives_tiny_corpus(spark, tmp_path):
     """A corpus smaller than ksub must still train (codebooks seeded by
-    whatever exists) and return every vector ranked."""
+    whatever exists) and serve every vector ranked."""
     import pyspark.sql.functions as F
 
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.similarity import (  # noqa: E501
-        pq_topk,
+        build_pq_index,
+        pq_index_topk,
     )
 
     emb = spark.range(5).select(
@@ -328,7 +264,9 @@ def test_pq_topk_survives_tiny_corpus(spark):
         ).alias("embedding"),
     )
     q = [float(i) / 100.0 for i in range(64)]  # == vec 0
-    rows = pq_topk(emb, q, k=5, ksub=16).collect()
+    idx = str(tmp_path / "pq_tiny")
+    build_pq_index(emb, idx, ksub=16, nlist=2)
+    rows = pq_index_topk(spark, idx, q, k=5, nprobe=2, embeddings=emb).collect()
     assert len(rows) == 5 and rows[0].vec_id == 0
 
 
@@ -400,8 +338,3 @@ def test_pq_index_topk_contract(spark):
     assert len(rows) == 10
     assert rows[0].vec_id == 0 and rows[0].score == 1.0
     assert rows == qs["pq_index_topk"](spark, ORACLE_SF).collect()
-    # serve-many vs train-per-query: same corpus, same codebook params
-    # -> the persisted path must agree with pq_topk's candidates
-    direct = {r.vec_id for r in Q.q_pq_topk(spark, ORACLE_SF).collect()}
-    served = {r.vec_id for r in rows}
-    assert len(served & direct) >= 8  # nprobe=4 of 8 clusters may trim

@@ -7,13 +7,11 @@ from pyspark.sql import functions as F
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.scd import (
     scd2_apply,
-    scd2_as_of,
     scd2_init,
 )
 
 D1 = dt.date(2024, 1, 1)
 D2 = dt.date(2024, 2, 1)
-D3 = dt.date(2024, 3, 1)
 
 
 def _snap(spark, rows):
@@ -57,21 +55,6 @@ def test_scd2_unchanged_snapshot_is_idempotent(spark):
     h = scd2_init(snap, ["sku"], ["category"], D1)
     h2 = scd2_apply(h, snap, ["sku"], ["category"], D2)
     assert _by_key(h2) == _by_key(h)
-
-
-def test_scd2_as_of_slices_each_era(spark):
-    h = scd2_init(_snap(spark, [("A", "x")]), ["sku"], ["category"], D1)
-    h = scd2_apply(h, _snap(spark, [("A", "y")]), ["sku"], ["category"], D2)
-    h = scd2_apply(h, _snap(spark, [("A", "z")]), ["sku"], ["category"], D3)
-
-    def cat(d):
-        return scd2_as_of(h, d).collect()[0].category
-
-    assert cat(D1) == "x"
-    assert cat(D2 - dt.timedelta(days=1)) == "x"  # half-open: change day excl.
-    assert cat(D2) == "y"
-    assert cat(D3) == "z"
-    assert scd2_as_of(h, D1 - dt.timedelta(days=1)).count() == 0
 
 
 def test_scd2_apply_is_one_join_no_extra_shuffle(spark):

@@ -75,9 +75,8 @@ FLOOR_NOTES = {
         "xxhash64 hash family to the oracle-pairable pinned "
         "universal-hash family over md5 hex-fold shingles (r12 "
         "verdict item #3) -- md5 per distinct shingle costs more than "
-        "xxhash64, bought hash-checked driver evidence. The xxhash64 "
-        "operator (minhash_banded_pairs) is unchanged for production "
-        "callers; pre-r13 floors compare a different plan."
+        "xxhash64, bought hash-checked driver evidence. Pre-r13 "
+        "floors compare a different plan."
     ),
     "embed_neardup_lsh": (
         "SELECTIVITY, not speed (r13 ADVICE item #1): at the shipped "
