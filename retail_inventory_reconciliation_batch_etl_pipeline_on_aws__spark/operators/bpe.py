@@ -21,6 +21,14 @@ Per iteration:
   4. the rewritten vocabulary is the state ``iterate`` checkpoints
      round by round.
 
+A vocabulary of at most ``iterate.LOCAL_MAX_ROWS`` words skips that
+loop (``iterate.route``): Spark still scans the corpus and builds each
+word's seed symbols (``_initial_symbols``, so the tokenizer lives in
+one place), then the seed table is collected once and the merges run
+in the driver with the same counts, tie-break and greedy fold. A round
+of a small vocabulary is milliseconds of work; as a Spark loop it paid
+two jobs of per-job overhead.
+
 Pair counts follow the reference implementation's naive adjacent count
 ('aaa' contributes (a,a) twice even though only one merge can apply) --
 the property the hypothesis test pins against an exact Python model.
@@ -29,11 +37,14 @@ the property the hypothesis test pins against an exact Python model.
 from __future__ import annotations
 
 import functools
+from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from .iterate import checkpoint, iterate
+from .iterate import checkpoint, iterate, route
 
 #: end-of-word marker, per the published recipe: merges never cross a
 #: word boundary, and word-final subwords stay distinct from prefixes.
@@ -131,11 +142,17 @@ def learn_bpe_merges(
     the classic worked example."""
     if n_merges <= 0:
         return _empty_merges(docs)
-    words, _ = checkpoint(
+    spark = docs.sparkSession
+    words, _, merges = route(
         word_freq_table(docs, text_col).select(
             "freq", _initial_symbols(F.col("word")).alias("syms")
-        )
+        ),
+        lambda seed, _: spark.createDataFrame(
+            _learn_local(seed, n_merges), MERGES_SCHEMA
+        ),
     )
+    if merges is not None:
+        return merges
     best = [_bpe_argmax(words)]
     if best[0] is None:
         # exhausted before the first merge: empty table, same schema
@@ -172,17 +189,56 @@ def learn_bpe_merges(
     return functools.reduce(DataFrame.unionByName, ranked)
 
 
+MERGES_SCHEMA = (
+    "rank int not null, left string, right string, merged string, pair_freq long"
+)
+
+
 def _empty_merges(docs: DataFrame) -> DataFrame:
-    return docs.sparkSession.createDataFrame(
-        [],
-        "rank int, left string, right string, merged string, pair_freq long",
-    )
+    return docs.sparkSession.createDataFrame([], MERGES_SCHEMA)
+
+
+def _learn_local(seed: pa.Table, n_merges: int) -> list[tuple]:
+    """The driver route of :func:`learn_bpe_merges` over the collected
+    ``(freq, syms)`` seed: per round the naive frequency-weighted
+    adjacent-pair count, the (count desc, pair asc) argmax -- Python
+    orders str by code point, as Spark orders UTF-8 bytes -- and the
+    greedy fold. Returns the merge-table rows; stops early, as the
+    distributed loop does, once no word has an adjacent pair left."""
+    freqs = seed.column("freq").to_pylist()
+    words = seed.column("syms").to_pylist()
+    rows = []
+    for rank in range(n_merges):
+        counts: Counter = Counter()
+        for syms, freq in zip(words, freqs):
+            for pair in zip(syms, syms[1:]):
+                counts[pair] += freq
+        if not counts:
+            break
+        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        rows.append((rank, a, b, a + b, n))
+        words = [_merge_symbols(syms, a, b) for syms in words]
+    return rows
+
+
+def _merge_symbols(syms: list[str], a: str, b: str) -> list[str]:
+    """``_apply_merge`` in Python: the greedy left-to-right fold."""
+    if len(syms) < 2 or a not in syms or b not in syms:
+        return syms
+    out = syms[:1]
+    for x in syms[1:]:
+        if out[-1] == a and x == b:
+            out[-1] = a + b
+        else:
+            out.append(x)
+    return out
 
 
 def _bpe_argmax(words: DataFrame) -> DataFrame | None:
     """The round's 1-row ``(left, right, n)`` argmax frame (count desc,
-    pair asc), checkpointed once and never collected to the driver; None
-    when no word has an adjacent pair left."""
+    pair asc), checkpointed once and, on the distributed loop, never
+    collected to the driver; None when no word has an adjacent pair
+    left."""
     pairs = (
         words.select(
             "freq",
@@ -229,20 +285,50 @@ def apply_bpe_merges(
     times), so compile time explodes exponentially -- measured: 8
     chained merges never finished codegen, while 8 checkpointed vocab
     passes are milliseconds. Returns one row per (doc row, word
-    occurrence) with the word's subword array in ``out_col``."""
+    occurrence) with the word's subword array in ``out_col``.
+
+    A distinct vocabulary of at most ``iterate.LOCAL_MAX_ROWS`` words
+    is collected once and folds every merge in the driver
+    (``iterate.route``); the corpus then joins the resulting small
+    table as before."""
     from ..functions.text import tokens
 
-    vocab, _ = checkpoint(
+    spark = docs.sparkSession
+
+    def local(seed: pa.Table, _) -> DataFrame:
+        words = seed.column(out_col).to_pylist()
+        for a, b in merges:
+            words = [_merge_symbols(syms, a, b) for syms in words]
+        return spark.createDataFrame(
+            pa.table(
+                {
+                    "word": seed.column("word"),
+                    out_col: pa.array(words, pa.list_(pa.string())),
+                }
+            ),
+            StructType(
+                [
+                    StructField("word", StringType()),
+                    StructField(out_col, ArrayType(StringType(), False)),
+                ]
+            ),
+        )
+
+    vocab, _, folded = route(
         docs.select(F.explode(tokens(text_col)).alias("word"))
         .distinct()
-        .select("word", _initial_symbols(F.col("word")).alias(out_col))
+        .select("word", _initial_symbols(F.col("word")).alias(out_col)),
+        local,
     )
-    vocab, _ = iterate(
-        vocab,
-        lambda v, i: v.select(
-            "word", _apply_merge(F.col(out_col), *merges[i]).alias(out_col)
-        ),
-        len(merges),
-    )
+    if folded is not None:
+        vocab = folded
+    else:
+        vocab, _ = iterate(
+            vocab,
+            lambda v, i: v.select(
+                "word", _apply_merge(F.col(out_col), *merges[i]).alias(out_col)
+            ),
+            len(merges),
+        )
     word = docs.select("*", F.explode(tokens(text_col)).alias("word"))
     return word.join(vocab, "word").drop("word")

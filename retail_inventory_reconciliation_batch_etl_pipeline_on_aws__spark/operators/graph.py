@@ -14,10 +14,13 @@ so the same loop runs on a billion-edge graph.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from .iterate import checkpoint, iterate
+from .iterate import checkpoint, iterate, route
 from .skew import salted_join
 
 #: broadcast-router ceiling of the per-round |V|-row tables (ranks,
@@ -239,10 +242,14 @@ def pagerank(
     move the accumulation to DECIMAL(38,0) like the k-means centroid
     sums.
 
-    Scale shape: per round, ONE shuffle-join of edges to the
+    Scale shape: a graph of at most ``iterate.LOCAL_MAX_ROWS`` edges
+    is collected once and runs every round in the driver, the same
+    recurrence in numpy int64 (``_pagerank_local``); the driver then
+    holds the edge list and one rank array. Larger graphs run the
+    distributed loop: per round, ONE shuffle-join of edges to the
     ids-only rank frame on src (hot hubs salt-able exactly like
     ``_attach_mins``) and one map-side-combined sum on dst; rounds run
-    through ``iterate``. Driver sees no data at all.
+    through ``iterate``, and the driver sees no data.
     """
     # Materialize the edge list ONCE before anything iterates: deg,
     # nodes, and every loop round re-read it, and a caller-supplied
@@ -277,27 +284,49 @@ def pagerank(
     # the router ceiling it falls back to the symmetrized loop --
     # built from the already-checkpointed canonical frame, never by
     # re-running the caller's mining plan.
-    if undirected_canonical:
-        # cheap certification guard (r14 ADVICE): the fast path TRUSTS
-        # the caller's claim (one row per undirected simple edge,
-        # src < dst -- so no self-loops and no duplicate orientations);
-        # a violating edge list would silently diverge from the
-        # documented multi-edge semantics of the general path. The
-        # orientation/self-loop half of that claim is checkable for
-        # free as an observed metric riding the checkpoint job we
-        # already pay (guide §1.5); true duplicate rows would need a
-        # grouping pass and stay the caller's contract.
-        ec, seen = checkpoint(
-            edges.select(F.col(src).alias(src), F.col(dst).alias(dst)),
-            n_noncanon=F.count_if(F.col(src) >= F.col(dst)),
+    # SIZE ROUTER (``iterate.route``, the "Scale shape" above): the edge
+    # checkpoint observes its row count; ``_pagerank_local`` declines
+    # (None) wherever its int64 rounds could part from Spark's.
+    #
+    # Cheap certification guard (r14 ADVICE): the canonical fast path
+    # TRUSTS the caller's claim (one row per undirected simple edge,
+    # src < dst -- so no self-loops and no duplicate orientations); a
+    # violating edge list would silently diverge from the documented
+    # multi-edge semantics of the general path. The orientation /
+    # self-loop half of that claim is checkable for free as an
+    # observed metric riding the checkpoint job we already pay (guide
+    # §1.5); true duplicate rows would need a grouping pass and stay
+    # the caller's contract. It raises before any round runs, on
+    # either route.
+    guard = (
+        {"n_noncanon": F.count_if(F.col(src) >= F.col(dst))}
+        if undirected_canonical
+        else {}
+    )
+    node = StructField(
+        "node",
+        edges.schema[src].dataType,
+        edges.schema[src].nullable or edges.schema[dst].nullable,
+    )
+    spark = edges.sparkSession
+
+    def local(table, seen):
+        _require_canonical(seen)
+        return _pagerank_local(
+            spark, table, node, undirected_canonical, iterations,
+            damping_pct, scale,
         )
-        if seen["n_noncanon"] > 0:
-            raise ValueError(
-                "undirected_canonical=True requires src < dst on every "
-                f"row; found {seen['n_noncanon']} violating rows "
-                "(self-loops or non-canonical orientation). Drop the "
-                "flag to use the general multi-edge path."
-            )
+
+    edges, seen, ranks = route(
+        edges.select(F.col(src).alias(src), F.col(dst).alias(dst)),
+        local,
+        **guard,
+    )
+    _require_canonical(seen)
+    if ranks is not None:
+        return ranks
+    if undirected_canonical:
+        ec = edges
         deg = (
             ec.select(F.explode(F.array(src, dst)).alias("node"))
             .groupBy("node")
@@ -318,12 +347,9 @@ def pagerank(
             return state.select("node", "rank")
         # too many nodes to broadcast ranks: symmetrize off the
         # checkpoint and fall through to the general loop below
-        edges = ec.unionByName(
-            ec.select(F.col(dst).alias(src), F.col(src).alias(dst))
+        edges, _ = checkpoint(
+            ec.unionByName(ec.select(F.col(dst).alias(src), F.col(src).alias(dst)))
         )
-    edges, _ = checkpoint(
-        edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
-    )
     deg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count("*").cast("long").alias("outdeg")
     )
@@ -354,6 +380,65 @@ def pagerank(
         iterations,
     )
     return state.select("node", "rank")
+
+
+def _require_canonical(seen: dict) -> None:
+    if seen.get("n_noncanon", 0) > 0:
+        raise ValueError(
+            "undirected_canonical=True requires src < dst on every "
+            f"row; found {seen['n_noncanon']} violating rows "
+            "(self-loops or non-canonical orientation). Drop the "
+            "flag to use the general multi-edge path."
+        )
+
+
+def _pagerank_local(
+    spark,
+    edges: pa.Table,
+    node: StructField,
+    symmetric: bool,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+) -> DataFrame | None:
+    """The driver route of ``pagerank`` over the collected ``(src, dst)``
+    table: the exact BIGINT recurrence in numpy int64 (floor ``//``,
+    sums by ``np.add.reduceat`` over the dst-sorted edges, never a
+    float accumulator). ``symmetric`` adds each row's reverse
+    orientation, as the canonical path's 2-way explode does. Returns
+    ``(node, rank)`` with ``node`` typed as the input key, or None
+    where the distributed loop must run instead: a null key (Spark's
+    join semantics decide those rows), src and dst of different types
+    (Spark widens them), a negative rank (Spark's ``div`` truncates
+    where ``//`` floors), or a magnitude where int64 could wrap
+    (``damping_pct * scale * n_nodes >= 2**63``, see the MAGNITUDE
+    CEILING) and ANSI Spark would raise instead."""
+    cols = [c.combine_chunks() for c in edges.columns]
+    if any(c.null_count for c in cols) or cols[0].type != cols[1].type:
+        return None
+    keys = pa.concat_arrays(cols).dictionary_encode()
+    n = len(keys.dictionary)
+    if not (0 <= damping_pct <= 100 and 0 < scale and damping_pct * scale * n < 2**63):
+        return None
+    ids = keys.indices.to_numpy().astype(np.int64)
+    src, dst = ids[: edges.num_rows], ids[edges.num_rows :]
+    if symmetric:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    outdeg = np.bincount(src, minlength=n)
+    order = np.argsort(dst, kind="stable")
+    src, dst = src[order], dst[order]
+    heads = np.flatnonzero(np.diff(dst, prepend=-1))
+    base = (100 - damping_pct) * scale // 100
+    rank = np.full(n, scale, dtype=np.int64)
+    for _ in range(iterations):
+        inflow = np.zeros(n, dtype=np.int64)
+        if len(dst):
+            inflow[dst[heads]] = np.add.reduceat(rank[src] // outdeg[src], heads)
+        rank = base + damping_pct * inflow // 100
+    return spark.createDataFrame(
+        pa.table({"node": keys.dictionary, "rank": rank}),
+        StructType([node, StructField("rank", LongType())]),
+    )
 
 
 def _pagerank_round(

@@ -26,6 +26,22 @@ def spark():
     yield spark
 
 
+def on_both_routes(run):
+    """``[run() on the distributed loop, run() on the driver route]``:
+    ``iterate.route``'s size ceiling forced to 0, then above any test
+    input, so an equivalence test holds each route to the same rows."""
+    from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators import (
+        iterate,
+    )
+
+    out = []
+    for ceiling in (0, 10**9):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(iterate, "LOCAL_MAX_ROWS", ceiling)
+            out.append(run())
+    return out
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -1,5 +1,6 @@
 """BPE merge learning: exact-Python-model equivalence (hypothesis),
-the classic worked example, determinism, and apply-side greediness."""
+the classic worked example, determinism, and apply-side greediness --
+each equivalence on both the distributed loop and the driver route."""
 
 from collections import Counter
 
@@ -12,6 +13,8 @@ from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.
     apply_bpe_merges,
     learn_bpe_merges,
 )
+
+from conftest import on_both_routes
 
 
 def py_bpe(word_freqs: dict[str, int], n_merges: int):
@@ -62,10 +65,13 @@ def test_bpe_classic_worked_example(spark):
         ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
     )
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = [
-        (r.rank, r.left, r.right, r.merged, r.pair_freq)
-        for r in learn_bpe_merges(docs, n_merges=5).orderBy("rank").collect()
-    ]
+    got, local = on_both_routes(
+        lambda: [
+            (r.rank, r.left, r.right, r.merged, r.pair_freq)
+            for r in learn_bpe_merges(docs, n_merges=5).orderBy("rank").collect()
+        ]
+    )
+    assert local == got
     assert got == [
         (0, "e", "s", "es", 9),
         (1, "es", "t", "est", 9),
@@ -92,13 +98,16 @@ def test_bpe_matches_python_model(spark, word_freqs, n_merges):
     in every iterative operator that shipped with it)."""
     text = " ".join(w for w, f in sorted(word_freqs.items()) for _ in range(f))
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = [
-        (r.rank, r.left, r.right, r.merged, r.pair_freq)
-        for r in learn_bpe_merges(docs, n_merges=n_merges)
-        .orderBy("rank")
-        .collect()
-    ]
+    got, local = on_both_routes(
+        lambda: [
+            (r.rank, r.left, r.right, r.merged, r.pair_freq)
+            for r in learn_bpe_merges(docs, n_merges=n_merges)
+            .orderBy("rank")
+            .collect()
+        ]
+    )
     assert got == py_bpe(word_freqs, n_merges)
+    assert local == got
 
 
 def test_bpe_apply_matches_python_and_is_greedy(spark):
@@ -109,20 +118,25 @@ def test_bpe_apply_matches_python_and_is_greedy(spark):
     docs = spark.createDataFrame([(1, corpus)], "doc_id long, text string")
     merges_df = learn_bpe_merges(docs, n_merges=4).orderBy("rank").collect()
     merges = [(r.left, r.right) for r in merges_df]
-    out = {
-        tuple(r.bpe_tokens)
-        for r in apply_bpe_merges(docs, merges).select("bpe_tokens").collect()
-    }
+    out, local = on_both_routes(
+        lambda: {
+            tuple(r.bpe_tokens)
+            for r in apply_bpe_merges(docs, merges).select("bpe_tokens").collect()
+        }
+    )
     want = {tuple(py_apply(w, merges)) for w in corpus.split()}
     assert out == want
-    direct = {
-        tuple(r.bpe_tokens)
-        for r in apply_bpe_merges(
-            spark.createDataFrame([(1, "aaa")], "doc_id long, text string"),
-            [("a", "a")],
-        ).collect()
-    }
-    assert direct == {("aa", "a", EOW)}
+    assert local == out
+    direct, direct_local = on_both_routes(
+        lambda: {
+            tuple(r.bpe_tokens)
+            for r in apply_bpe_merges(
+                spark.createDataFrame([(1, "aaa")], "doc_id long, text string"),
+                [("a", "a")],
+            ).collect()
+        }
+    )
+    assert direct == direct_local == {("aa", "a", EOW)}
 
 
 def test_bpe_merges_query_contract(spark):
@@ -161,12 +175,15 @@ def test_bpe_oracle_replace_equals_greedy_on_runs(spark):
     ]
     for text in corpora:
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        got = [
-            tuple(r)
-            for r in learn_bpe_merges(docs, n_merges=16)
-            .orderBy("rank")
-            .collect()
-        ]
+        got, local = on_both_routes(
+            lambda: [
+                tuple(r)
+                for r in learn_bpe_merges(docs, n_merges=16)
+                .orderBy("rank")
+                .collect()
+            ]
+        )
+        assert local == got, text
         con = duckdb.connect()
         con.execute("CREATE TABLE documents(text VARCHAR)")
         con.execute("INSERT INTO documents VALUES (?)", [text])
@@ -180,8 +197,27 @@ def test_bpe_stops_early_when_pairs_exhaust(spark):
     early and return only the merges that existed: 'ab' yields exactly
     (a,b) then (ab,</w>) and nothing else, no matter the budget."""
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    got = [
-        (r.rank, r.left, r.right)
-        for r in learn_bpe_merges(docs, n_merges=10).orderBy("rank").collect()
-    ]
+    got, local = on_both_routes(
+        lambda: [
+            (r.rank, r.left, r.right)
+            for r in learn_bpe_merges(docs, n_merges=10).orderBy("rank").collect()
+        ]
+    )
     assert got == [(0, "a", "b"), (1, "ab", EOW)]
+    assert local == got
+
+
+def test_bpe_empty_inputs_agree_on_both_routes(spark):
+    """The corners give the same typed rows on either route: an empty
+    corpus, a merge budget of 0 or less, and one-character words that
+    exhaust after two merges ((a, </w>) and (b, </w>))."""
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    one_char = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
+    for docs, n in [(empty, 4), (one_char, 0), (one_char, -1), (one_char, 6)]:
+        got, local = on_both_routes(
+            lambda: learn_bpe_merges(docs, n_merges=n).orderBy("rank")
+        )
+        assert local.schema == got.schema
+        assert local.collect() == got.collect()
+    tok, tok_local = on_both_routes(lambda: apply_bpe_merges(empty, [("a", "b")]))
+    assert tok_local.schema == tok.schema and tok.collect() == tok_local.collect() == []

@@ -2,10 +2,13 @@
 
 import pytest
 
+from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators import iterate
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
     connected_components,
     dedup_groups,
 )
+
+from conftest import on_both_routes
 
 
 def test_components_chain_triangle_pair(spark):
@@ -180,7 +183,8 @@ def _pagerank_int_twin(edges, iterations=8, damping_pct=85, scale=10**12):
 def test_pagerank_exact_vs_int_twin(spark):
     """The Spark loop must match the exact integer recurrence
     rank-for-rank -- the bit-determinism contract that lets the same
-    job reproduce across clusters and partitionings."""
+    job reproduce across clusters and partitionings -- and so must the
+    driver route's numpy int64 rounds."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
         pagerank,
     )
@@ -190,8 +194,11 @@ def test_pagerank_exact_vs_int_twin(spark):
     raw = [(1, 2), (1, 3), (1, 4), (2, 3), (3, 4), (4, 2), (2, 9),
            (5, 6), (6, 5), (4, 1)]
     edges = spark.createDataFrame(raw, "src bigint, dst bigint")
-    got = {r.node: r["rank"] for r in pagerank(edges, iterations=8).collect()}
+    got, local = on_both_routes(
+        lambda: {r.node: r["rank"] for r in pagerank(edges, iterations=8).collect()}
+    )
     assert got == _pagerank_int_twin(raw, iterations=8)
+    assert local == got
 
 
 def test_pagerank_mass_and_hub_ordering(spark):
@@ -453,12 +460,12 @@ def test_kcore_ignores_self_loops(spark):
     assert got[1] == got[2] == got[3] == 2
 
 
-def test_pagerank_identical_across_join_strategies(spark):
+def test_pagerank_identical_across_join_strategies(spark, monkeypatch):
     """The broadcast router picks a physical strategy, never a result:
     forcing the shuffle-join path (broadcast_max_nodes=0) must agree
     rank-for-rank with the broadcast path -- the fixed-point integer
     discipline is exactly what makes this hold (double sums would
-    differ across join orders)."""
+    differ across join orders). The driver route agrees too."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
         pagerank,
     )
@@ -466,23 +473,26 @@ def test_pagerank_identical_across_join_strategies(spark):
     raw = [(1, 2), (1, 3), (2, 3), (3, 1), (3, 4), (4, 1), (2, 9),
            (9, 2), (5, 6), (6, 5)]
     edges = spark.createDataFrame(raw, "src bigint, dst bigint")
-    bcast = {r.node: r["rank"]
-             for r in pagerank(edges, iterations=5).collect()}
-    shuffled = {r.node: r["rank"]
-                for r in pagerank(
-                    edges, iterations=5, broadcast_max_nodes=0
-                ).collect()}
+
+    def ranks(**kw):
+        return {r.node: r["rank"]
+                for r in pagerank(edges, iterations=5, **kw).collect()}
+
+    bcast, local = on_both_routes(ranks)
+    monkeypatch.setattr(iterate, "LOCAL_MAX_ROWS", 0)
+    shuffled = ranks(broadcast_max_nodes=0)
     assert bcast == shuffled
     assert bcast == _pagerank_int_twin(raw, iterations=5)
+    assert local == bcast
 
 
-def test_pagerank_undirected_canonical_equals_symmetrized(spark):
+def test_pagerank_undirected_canonical_equals_symmetrized(spark, monkeypatch):
     """The r14 canonical fast path (one row per undirected edge, 2-way
     explode of contributions) must be rank-identical to the general
     loop over the explicitly symmetrized list -- on the broadcast
     route, on the shuffle fallback (broadcast_max_nodes=0, which
-    internally re-symmetrizes off the checkpoint), and vs the exact
-    python twin."""
+    internally re-symmetrizes off the checkpoint), on the driver
+    route, and vs the exact python twin."""
     from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
         pagerank,
     )
@@ -491,16 +501,17 @@ def test_pagerank_undirected_canonical_equals_symmetrized(spark):
     sym = canon + [(b, a) for a, b in canon]
     ce = spark.createDataFrame(canon, "src bigint, dst bigint")
     se = spark.createDataFrame(sym, "src bigint, dst bigint")
-    general = {r.node: r["rank"]
-               for r in pagerank(se, iterations=5).collect()}
-    fast = {r.node: r["rank"]
-            for r in pagerank(
-                ce, iterations=5, undirected_canonical=True
-            ).collect()}
-    fallback = {r.node: r["rank"]
-                for r in pagerank(
-                    ce, iterations=5, undirected_canonical=True,
-                    broadcast_max_nodes=0,
-                ).collect()}
+
+    def ranks(edges, **kw):
+        return {r.node: r["rank"]
+                for r in pagerank(edges, iterations=5, **kw).collect()}
+
+    general, general_local = on_both_routes(lambda: ranks(se))
+    fast, fast_local = on_both_routes(
+        lambda: ranks(ce, undirected_canonical=True)
+    )
+    monkeypatch.setattr(iterate, "LOCAL_MAX_ROWS", 0)
+    fallback = ranks(ce, undirected_canonical=True, broadcast_max_nodes=0)
     assert fast == general == fallback
     assert fast == _pagerank_int_twin(sym, iterations=5)
+    assert fast_local == general_local == fast

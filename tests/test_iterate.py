@@ -1,6 +1,7 @@
 """The checkpointed-round helper: finished rounds are released, every
-eager checkpoint in the operators goes through it, and the operator
-guards that ride its observed metrics still fire."""
+eager checkpoint in the operators goes through it, the operator guards
+that ride its observed metrics still fire, and small iterative state
+runs its rounds in the driver within a fixed job budget."""
 
 import ast
 from pathlib import Path
@@ -9,6 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark as pkg
+from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators import (
+    iterate as iterate_module,
+)
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.graph import (
     kcore_numbers,
     pagerank,
@@ -18,19 +22,23 @@ from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.
     iterate,
 )
 
+from conftest import TESTDATA
+
 PKG = Path(pkg.__file__).parent
 
 
-def _persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _retained(spark, run) -> int:
-    """Persistent RDDs ``run`` leaves behind, starting from a clean cache."""
+    """Persistent RDDs ``run`` leaves behind, starting from a clean cache.
+    Counted by id: the context cleaner may free an earlier test's RDD
+    meanwhile, which a difference of sizes would net against a leak."""
     spark.catalog.clearCache()
     before = _persistent(spark)
     run()
-    return _persistent(spark) - before
+    return len(_persistent(spark) - before)
 
 
 def _canonical_edges(spark):
@@ -41,9 +49,10 @@ def _canonical_edges(spark):
 
 
 @pytest.mark.parametrize("iterations", [2, 6])
-def test_pagerank_releases_finished_rounds(spark, iterations):
-    """Edge checkpoint + seed ranks + final round, whatever the round
-    count."""
+def test_pagerank_releases_finished_rounds(spark, iterations, monkeypatch):
+    """On the distributed loop: edge checkpoint + seed ranks + final
+    round, whatever the round count."""
+    monkeypatch.setattr(iterate_module, "LOCAL_MAX_ROWS", 0)
     edges = _canonical_edges(spark)
     n = _retained(
         spark,
@@ -120,7 +129,60 @@ def test_every_checkpoint_goes_through_iterate():
 @pytest.mark.parametrize(
     "rows", [[(1, 2), (3, 2)], [(1, 2), (4, 4)]], ids=["reversed", "self-loop"]
 )
-def test_pagerank_canonical_guard_raises(spark, rows):
+def test_pagerank_canonical_guard_raises(spark, rows, monkeypatch):
     edges = spark.createDataFrame(rows, "src bigint, dst bigint")
-    with pytest.raises(ValueError, match="1 violating rows"):
-        pagerank(edges, iterations=2, undirected_canonical=True)
+    for ceiling in (0, 10**9):  # distributed loop, then driver route
+        monkeypatch.setattr(iterate_module, "LOCAL_MAX_ROWS", ceiling)
+        with pytest.raises(ValueError, match="1 violating rows"):
+            pagerank(edges, iterations=2, undirected_canonical=True)
+
+
+def test_driver_route_leaves_no_checkpoint(spark, monkeypatch):
+    """``route`` releases the seed checkpoint once the rounds ran in the
+    driver, and when they raise."""
+    monkeypatch.setattr(iterate_module, "LOCAL_MAX_ROWS", 10**9)
+    edges = _canonical_edges(spark)
+    assert _retained(
+        spark,
+        lambda: pagerank(edges, iterations=6, undirected_canonical=True).collect(),
+    ) == 0
+
+    def boom(table, observed):
+        raise RuntimeError("rounds failed")
+
+    def failing():
+        with pytest.raises(RuntimeError, match="rounds failed"):
+            iterate_module.route(spark.range(3), boom)
+
+    assert _retained(spark, failing) == 0
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    # a first call at sf0.001 runs 6 and 8 jobs (5 and 7 warm); the
+    # previous commit ran 31 and 69 (30 and 68 warm), one or more per
+    # round, and left 3 and 17 persistent RDDs
+    [("pagerank", 6), ("bpe_merges", 8)],
+)
+def test_small_state_query_job_budget(spark, name, budget):
+    """At the test scale both loops' state is far under
+    ``LOCAL_MAX_ROWS``: every round runs in the driver, so a call costs
+    a fixed handful of Spark jobs (read from its job group) and leaves
+    no persistent RDD behind."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    group = f"route-budget-{name}"
+
+    def run():
+        sc.setJobGroup(group, name)
+        try:
+            entry.queries()[name](spark, TESTDATA).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    assert _retained(spark, run) == 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    store = sc._jsc.sc().statusStore()
+    assert 0 < len(jobs) <= budget, [store.job(j).name() for j in jobs]

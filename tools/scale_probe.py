@@ -41,6 +41,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
+from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators import (  # noqa: E402,E501
+    iterate,
+)
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.dedup import (  # noqa: E402,E501
     winnow_fingerprints,
 )
@@ -154,6 +157,12 @@ def probe_containment(spark, sf: str, k: int) -> int:
 
 
 def probe_pagerank(spark, sf: str, k: int) -> int:
+    """PageRank's distributed loop (6 checkpointed join-agg rounds) on k
+    disjoint copies of the symmetrized co-purchase graph. The probe
+    measures that loop's data slope, so it sets
+    ``iterate.LOCAL_MAX_ROWS`` to 0 for the call: at its default,
+    every graph up to that ceiling would run its rounds in the driver
+    instead."""
     li = _scaled_lineitem(spark, sf, k)
     grouped = li.groupBy("l_orderkey").agg(
         F.collect_list("l_partkey").alias("ps")
@@ -180,7 +189,11 @@ def probe_pagerank(spark, sf: str, k: int) -> int:
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return pagerank(edges, iterations=6).count()
+    ceiling, iterate.LOCAL_MAX_ROWS = iterate.LOCAL_MAX_ROWS, 0
+    try:
+        return pagerank(edges, iterations=6).count()
+    finally:
+        iterate.LOCAL_MAX_ROWS = ceiling
 
 
 def probe_kcore_hindex(spark, sf: str, k: int) -> int:
