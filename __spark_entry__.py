@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship reconciliation on sf0.001;
-``queries()`` exposes the engine's named query surface; ``oracle_sql()``
-gives the DuckDB-equivalent ANSI SQL for each (same parquet tables,
-pre-registered as views).
+``queries()`` exposes the engine's named query surface -- every ``q_*``
+function of ``queries.py`` -- in the driver's attestation order;
+``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each (same
+parquet tables, pre-registered as views).
 
 The fixture-derivation rules shared by both sides are documented in
 ``retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark/plans/fixtures.py``.
@@ -11,6 +12,7 @@ The fixture-derivation rules shared by both sides are documented in
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,6 +23,9 @@ from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans.fixt
     ensure_evolving_fixture,
     ensure_versioned_fixture,
 )
+from tools.rotation_check import order
+
+Query = Callable[[SparkSession, str], DataFrame]
 
 #: Built at import so the DuckDB oracle can read the two-schema fixture
 #: even if the driver runs the oracle side first (deterministic bytes,
@@ -37,494 +42,38 @@ def entry(spark: SparkSession) -> DataFrame:
     return Q.q_reconcile(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the LEAST-RECENTLY driver-attested entries come FIRST.
+def _defined() -> dict[str, Query]:
+    """Every ``q_*`` function defined in ``queries.py`` (names it only
+    imports do not count), in definition order, keyed without ``q_``."""
+    return {
+        name[2:]: fn
+        for name, fn in vars(Q).items()
+        if name.startswith("q_") and callable(fn)
+        and getattr(fn, "__module__", None) == Q.__name__
+    }
+
+
+@functools.cache
+def _attestation_order() -> tuple[tuple[str, Query], ...]:
+    defined = _defined()
+    names = order(list(defined), set(oracle_sql()))
+    return tuple((name, defined[name]) for name in names)
+
+
+def queries() -> dict[str, Query]:
+    """Every ``q_*`` query, least-recently driver-attested first.
 
     The driver's CORRECTNESS artifact records only the first 50
-    entries, so ordering is part of the contract. Rotation after
-    CORRECTNESS_r15 (50/50 green, never-attested backlog still ZERO):
-    a pure staleness rotation -- the window holds the 50
-    least-recently-attested oracle-paired entries (the 6 whose
-    standing attestation is r6, then the stalest 44 of the 49-entry
-    r7 cohort in their existing relative order; the remaining 5 r7
-    rows sit just past the boundary and mechanically lead the next
-    queue). Behind the window, every previously-attested paired entry
-    in staleness order (freshest last), then the rows-only entries
-    whose one-time driver evidence is already on file. The order is a
-    stable sort of the paired entries by their last green round from
-    ``tools/rotation_check.last_attested()``. All post-window entries
-    stay pinned value-level by tests/test_oracle_parity.py and
-    bit-exactly by tools/strict_parity.py.
+    entries, so ordering is part of the contract. It is derived once
+    per process from the ``CORRECTNESS_r*.json`` files on disk by
+    ``tools/rotation_check.order``, whose ``check`` validates it:
+    never-attested entries, then entries last seen red, then paired
+    entries by their last green round, then rows-only entries with
+    driver evidence. Entries past the window stay pinned value-level by
+    tests/test_oracle_parity.py and bit-exactly by
+    tools/strict_parity.py.
     """
-    return {
-        # --- attestation window (50 slots): the 6 entries last green
-        # in r6, then the stalest 44 of the 49-entry r7 cohort; the
-        # remaining 5 r7 rows lead the next queue (see the docstring;
-        # pinned by tests/test_rotation_contract.py) -------------------
-        # last green: r6
-        "contamination_hashed": Q.q_contamination_hashed,
-        "pii_scan": Q.q_pii_scan,
-        "mixture_weights": Q.q_mixture_weights,
-        "quality_flags": Q.q_quality_flags,
-        "user_journey": Q.q_user_journey,
-        "sku_sales_anomaly": Q.q_sku_sales_anomaly,
-        # last green: r7
-        "returnflag_unpivot": Q.q_returnflag_unpivot,
-        "scd2_point_in_time": Q.q_scd2_point_in_time,
-        "table_checksum": Q.q_table_checksum,
-        "dq_violations": Q.q_dq_violations,
-        "brand_segment_chi2": Q.q_brand_segment_chi2,
-        "brand_price_deciles": Q.q_brand_price_deciles,
-        "order_gap_stats": Q.q_order_gap_stats,
-        "ship_latency": Q.q_ship_latency,
-        "shingle_containment": Q.q_shingle_containment,
-        "ngram_novelty": Q.q_ngram_novelty,
-        "basket_rules": Q.q_basket_rules,
-        "forecast_backtest": Q.q_forecast_backtest,
-        "domain_classifier": Q.q_domain_classifier,
-        "copurchase_triangles": Q.q_copurchase_triangles,
-        "jaccard_prefix_pairs": Q.q_jaccard_prefix_pairs,
-        "measure_correlations": Q.q_measure_correlations,
-        "purchase_attribution": Q.q_purchase_attribution,
-        "rebate_proration": Q.q_rebate_proration,
-        "part_skyline": Q.q_part_skyline,
-        "benford_screen": Q.q_benford_screen,
-        "nation_revenue_gini": Q.q_nation_revenue_gini,
-        "event_path_trigrams": Q.q_event_path_trigrams,
-        "bigram_counts": Q.q_bigram_counts,
-        "reconcile": Q.q_reconcile,
-        "reconcile_snapshots": Q.q_reconcile_snapshots,
-        "discrepancy_count": Q.q_discrepancy_count,
-        "discrepancy_topk": Q.q_discrepancy_topk,
-        "partition_prune": Q.q_partition_prune,
-        "normalize_clean": Q.q_normalize_clean,
-        "stock_timeseries": Q.q_stock_timeseries,
-        "pricing_summary": Q.q_pricing_summary,
-        "top_customers": Q.q_top_customers,
-        "region_revenue": Q.q_region_revenue,
-        "dedup_applied": Q.q_dedup_applied,
-        "revenue_forecast": Q.q_revenue_forecast,
-        "nation_trade_volume": Q.q_nation_trade_volume,
-        "events_hour_of_day": Q.q_events_hour_of_day,
-        "sku_rolling_range": Q.q_sku_rolling_range,
-        "order_count_distribution": Q.q_order_count_distribution,
-        "idle_rich_customers": Q.q_idle_rich_customers,
-        "sole_late_supplier": Q.q_sole_late_supplier,
-        "dim_scd2": Q.q_dim_scd2,
-        "sales_rollup": Q.q_sales_rollup,
-        "sales_cube": Q.q_sales_cube,
-        # --- past the attestation boundary: previously-attested
-        # paired entries, staleness order (freshest last) ---------
-        "cust_no_orders": Q.q_cust_no_orders,
-        "parts_ordered_semi": Q.q_parts_ordered_semi,
-        "customer_setops": Q.q_customer_setops,
-        "returnflag_pivot": Q.q_returnflag_pivot,
-        "min_cost_supplier": Q.q_min_cost_supplier,
-        # last green: r8
-        "price_equidepth_hist": Q.q_price_equidepth_hist,
-        "fifo_allocation": Q.q_fifo_allocation,
-        "name_edit1_pairs": Q.q_name_edit1_pairs,
-        "supplier_backlog_peak": Q.q_supplier_backlog_peak,
-        "order_streaks": Q.q_order_streaks,
-        "weighted_median_price": Q.q_weighted_median_price,
-        "cohort_matrix": Q.q_cohort_matrix,
-        "price_endings": Q.q_price_endings,
-        "collocation_lift": Q.q_collocation_lift,
-        "hapax_stats": Q.q_hapax_stats,
-        "dominant_priority": Q.q_dominant_priority,
-        "nation_supplier_hhi": Q.q_nation_supplier_hhi,
-        "token_simpson_diversity": Q.q_token_simpson_diversity,
-        "source_vocab_overlap": Q.q_source_vocab_overlap,
-        "basket_size_histogram": Q.q_basket_size_histogram,
-        "repeat_purchase_rate": Q.q_repeat_purchase_rate,
-        "new_vs_repeat_revenue": Q.q_new_vs_repeat_revenue,
-        "magnitude_histogram": Q.q_magnitude_histogram,
-        "lifo_allocation": Q.q_lifo_allocation,
-        "price_dispersion": Q.q_price_dispersion,
-        "monthly_seasonality": Q.q_monthly_seasonality,
-        "duplicate_invoice_screen": Q.q_duplicate_invoice_screen,
-        "abc_migration": Q.q_abc_migration,
-        "vocab_growth": Q.q_vocab_growth,
-        "discount_depth_profile": Q.q_discount_depth_profile,
-        "returns_rate_by_brand": Q.q_returns_rate_by_brand,
-        "token_frequency_spectrum": Q.q_token_frequency_spectrum,
-        "weekday_revenue_profile": Q.q_weekday_revenue_profile,
-        "lead_time_bucket_matrix": Q.q_lead_time_bucket_matrix,
-        "important_part_values": Q.q_important_part_values,
-        "top_revenue_supplier": Q.q_top_revenue_supplier,
-        "bulk_red_shippers": Q.q_bulk_red_shippers,
-        "source_quota_sample": Q.q_source_quota_sample,
-        "corpus_pack": Q.q_corpus_pack,
-        "dataset_split": Q.q_dataset_split,
-        "bm25_search": Q.q_bm25_search,
-        "small_qty_revenue": Q.q_small_qty_revenue,
-        "large_volume_customers": Q.q_large_volume_customers,
-        "hybrid_rank": Q.q_hybrid_rank,
-        "local_supplier_revenue": Q.q_local_supplier_revenue,
-        "returned_item_customers": Q.q_returned_item_customers,
-        "promo_revenue_share": Q.q_promo_revenue_share,
-        "dedup_keep_best": Q.q_dedup_keep_best,
-        "dedup_canonical": Q.q_dedup_canonical,
-        "source_quality_drift": Q.q_source_quality_drift,
-        "stock_asof_tolerant": Q.q_stock_asof_tolerant,
-        "value_anomalies": Q.q_value_anomalies,
-        "evolving_schema": Q.q_evolving_schema,
-        "stock_asof_forward": Q.q_stock_asof_forward,
-        "stage_sales": Q.q_stage_sales,
-        # last green: r9
-        "price_change_events": Q.q_price_change_events,
-        "single_source_risk": Q.q_single_source_risk,
-        "seasonal_naive_backtest": Q.q_seasonal_naive_backtest,
-        "langid_confusion": Q.q_langid_confusion,
-        "dedup_group_sizes": Q.q_dedup_group_sizes,
-        "rfm_segments": Q.q_rfm_segments,
-        "lorenz_curve": Q.q_lorenz_curve,
-        "price_volume_bridge": Q.q_price_volume_bridge,
-        "revenue_recognition": Q.q_revenue_recognition,
-        "demand_intermittency": Q.q_demand_intermittency,
-        "token_burstiness": Q.q_token_burstiness,
-        "brand_spearman": Q.q_brand_spearman,
-        "kwic_concordance": Q.q_kwic_concordance,
-        "brand_transitions": Q.q_brand_transitions,
-        "snapshot_diff": Q.q_snapshot_diff,
-        "heavy_hitter_tokens": Q.q_heavy_hitter_tokens,
-        "template_prefix_groups": Q.q_template_prefix_groups,
-        "supplier_on_time_rate": Q.q_supplier_on_time_rate,
-        "post_return_activity": Q.q_post_return_activity,
-        "inventory_aging": Q.q_inventory_aging,
-        "brand_price_mad": Q.q_brand_price_mad,
-        "order_fill_status": Q.q_order_fill_status,
-        "ship_hazard": Q.q_ship_hazard,
-        "brand_price_slope": Q.q_brand_price_slope,
-        "readability_scores": Q.q_readability_scores,
-        "eoq_recommendation": Q.q_eoq_recommendation,
-        "order_batching": Q.q_order_batching,
-        "brand_price_ladder": Q.q_brand_price_ladder,
-        "monthly_return_rate": Q.q_monthly_return_rate,
-        "order_ship_span": Q.q_order_ship_span,
-        "char_trigram_profile": Q.q_char_trigram_profile,
-        "latency_by_year": Q.q_latency_by_year,
-        "customer_quartile_migration": Q.q_customer_quartile_migration,
-        "dormancy_by_segment": Q.q_dormancy_by_segment,
-        "sentence_length_profile": Q.q_sentence_length_profile,
-        "customer_value_cv": Q.q_customer_value_cv,
-        "chunk_dedup_stats": Q.q_chunk_dedup_stats,
-        "neardup_source_matrix": Q.q_neardup_source_matrix,
-        "part_size_mix": Q.q_part_size_mix,
-        "event_dow_hour_matrix": Q.q_event_dow_hour_matrix,
-        "line_position_profile": Q.q_line_position_profile,
-        "embedding_dim_stats": Q.q_embedding_dim_stats,
-        "label_balance": Q.q_label_balance,
-        "nearest_centroid_confusion": Q.q_nearest_centroid_confusion,
-        "segment_priority_mix": Q.q_segment_priority_mix,
-        "brand_seasonal_peak": Q.q_brand_seasonal_peak,
-        "order_total_consistency": Q.q_order_total_consistency,
-        "weekly_zchart": Q.q_weekly_zchart,
-        "nation_segment_grid": Q.q_nation_segment_grid,
-        "type_discount_profile": Q.q_type_discount_profile,
-        # last green: r10
-        "purchases_in_promo_windows": Q.q_purchases_in_promo_windows,
-        "cross_region_trade_share": Q.q_cross_region_trade_share,
-        "referential_integrity_audit": Q.q_referential_integrity_audit,
-        "user_lifespan_profile": Q.q_user_lifespan_profile,
-        "user_burst_ratio": Q.q_user_burst_ratio,
-        "segment_halfyear_momentum": Q.q_segment_halfyear_momentum,
-        "corpus_ingestion_drift": Q.q_corpus_ingestion_drift,
-        "nation_acctbal_quartiles": Q.q_nation_acctbal_quartiles,
-        "avg_word_length_profile": Q.q_avg_word_length_profile,
-        "customer_purchase_acceleration": Q.q_customer_purchase_acceleration,
-        "order_value_band_transition": Q.q_order_value_band_transition,
-        "lang_source_lift": Q.q_lang_source_lift,
-        "user_error_rate_bands": Q.q_user_error_rate_bands,
-        "brand_weekly_rank_volatility": Q.q_brand_weekly_rank_volatility,
-        "size_band_revenue_trend": Q.q_size_band_revenue_trend,
-        "customer_value_uplift": Q.q_customer_value_uplift,
-        "tax_discount_grid": Q.q_tax_discount_grid,
-        "supplier_brand_focus": Q.q_supplier_brand_focus,
-        "source_exact_dup_rate": Q.q_source_exact_dup_rate,
-        "same_day_reorder_rate": Q.q_same_day_reorder_rate,
-        "event_mix_drift": Q.q_event_mix_drift,
-        "brand_cannibalization": Q.q_brand_cannibalization,
-        "order_priority_escalation": Q.q_order_priority_escalation,
-        "customer_supply_reach": Q.q_customer_supply_reach,
-        "returning_user_curve": Q.q_returning_user_curve,
-        "sku_velocity_quadrant": Q.q_sku_velocity_quadrant,
-        "stopword_density_profile": Q.q_stopword_density_profile,
-        "nation_trade_imbalance": Q.q_nation_trade_imbalance,
-        "nation_weekly_volatility": Q.q_nation_weekly_volatility,
-        "label_cohesion": Q.q_label_cohesion,
-        "supplier_new_business_trend": Q.q_supplier_new_business_trend,
-        "quantity_uniformity_screen": Q.q_quantity_uniformity_screen,
-        "type_hour_profile_similarity": Q.q_type_hour_profile_similarity,
-        "supplier_turnover": Q.q_supplier_turnover,
-        "returns_by_value_band": Q.q_returns_by_value_band,
-        "customer_concentration_trend": Q.q_customer_concentration_trend,
-        "day_of_month_profile": Q.q_day_of_month_profile,
-        "label_top_dims": Q.q_label_top_dims,
-        "sku_repurchase_cycle": Q.q_sku_repurchase_cycle,
-        "exact_dup_source_matrix": Q.q_exact_dup_source_matrix,
-        "label_text_profile": Q.q_label_text_profile,
-        "lang_label_lift": Q.q_lang_label_lift,
-        "open_order_aging": Q.q_open_order_aging,
-        "segment_spend_intensity": Q.q_segment_spend_intensity,
-        "brand_order_penetration": Q.q_brand_order_penetration,
-        "signup_conversion_by_week": Q.q_signup_conversion_by_week,
-        "segment_qoq_growth": Q.q_segment_qoq_growth,
-        "brand_volume_value_mix": Q.q_brand_volume_value_mix,
-        "customer_priority_breadth": Q.q_customer_priority_breadth,
-        "brand_copurchase_pairs": Q.q_brand_copurchase_pairs,
-        # last green: r11
-        "image_dims_jpeg": Q.q_image_dims_jpeg,
-        "copurchase_degree_hist": Q.q_copurchase_degree_hist,
-        "copurchase_component_sizes": Q.q_copurchase_component_sizes,
-        "leakage_safe_split": Q.q_leakage_safe_split,
-        "daily_trending_types": Q.q_daily_trending_types,
-        "three_step_funnel": Q.q_three_step_funnel,
-        "session_duration_by_entry": Q.q_session_duration_by_entry,
-        "partname_brand_collisions": Q.q_partname_brand_collisions,
-        "event_value_concentration": Q.q_event_value_concentration,
-        "value_roundness_screen": Q.q_value_roundness_screen,
-        "monthly_reactivation": Q.q_monthly_reactivation,
-        "value_by_user_age": Q.q_value_by_user_age,
-        "month_yoy_heat": Q.q_month_yoy_heat,
-        "order_ordinal_curve": Q.q_order_ordinal_curve,
-        "session_conversion_rate": Q.q_session_conversion_rate,
-        "big_order_brand_mix": Q.q_big_order_brand_mix,
-        "returns_by_line_position": Q.q_returns_by_line_position,
-        "weekpart_overlap": Q.q_weekpart_overlap,
-        "order_supplier_spread": Q.q_order_supplier_spread,
-        "brand_price_mix_effect": Q.q_brand_price_mix_effect,
-        "nation_acquisition_trend": Q.q_nation_acquisition_trend,
-        "hourly_conversion_profile": Q.q_hourly_conversion_profile,
-        "priority_mix_trend": Q.q_priority_mix_trend,
-        "brand_part_introduction": Q.q_brand_part_introduction,
-        "discount_by_line_position": Q.q_discount_by_line_position,
-        "first_day_activity_mix": Q.q_first_day_activity_mix,
-        "supplier_discount_profile": Q.q_supplier_discount_profile,
-        "returns_trend_by_year": Q.q_returns_trend_by_year,
-        "basket_density_bands": Q.q_basket_density_bands,
-        "event_calendar_gaps": Q.q_event_calendar_gaps,
-        "customer_return_propensity": Q.q_customer_return_propensity,
-        "weekly_value_per_event": Q.q_weekly_value_per_event,
-        "kmeans_iteration": Q.q_kmeans_iteration,
-        "embedding_outliers": Q.q_embedding_outliers,
-        "pagerank": Q.q_pagerank,
-        # last green: r12
-        "nation_discount_gap": Q.q_nation_discount_gap,
-        "cohort_retention_triangle": Q.q_cohort_retention_triangle,
-        "click_to_purchase_latency": Q.q_click_to_purchase_latency,
-        "signup_dow_retention": Q.q_signup_dow_retention,
-        "vintage_price_profile": Q.q_vintage_price_profile,
-        "supplier_activity_regularity": Q.q_supplier_activity_regularity,
-        "brand_weekend_mix": Q.q_brand_weekend_mix,
-        "cadence_by_ordinal": Q.q_cadence_by_ordinal,
-        "type_mix_by_tenure": Q.q_type_mix_by_tenure,
-        "brand_customer_concentration": Q.q_brand_customer_concentration,
-        "weekpart_value_gap": Q.q_weekpart_value_gap,
-        "conversion_by_session_depth": Q.q_conversion_by_session_depth,
-        "nation_market_structure": Q.q_nation_market_structure,
-        "token_length_histogram": Q.q_token_length_histogram,
-        "discount_cost_by_year": Q.q_discount_cost_by_year,
-        "partname_word_prices": Q.q_partname_word_prices,
-        "first_order_cohort": Q.q_first_order_cohort,
-        "qty_discount_curve": Q.q_qty_discount_curve,
-        "returns_vs_latency": Q.q_returns_vs_latency,
-        "acctbal_activity_bands": Q.q_acctbal_activity_bands,
-        "negative_balance_profile": Q.q_negative_balance_profile,
-        "supplier_nation_load": Q.q_supplier_nation_load,
-        "month_end_push": Q.q_month_end_push,
-        "event_value_moments": Q.q_event_value_moments,
-        "split_order_screen": Q.q_split_order_screen,
-        "supplier_leadtime_cv": Q.q_supplier_leadtime_cv,
-        "tax_burden_profile": Q.q_tax_burden_profile,
-        "retailprice_premium": Q.q_retailprice_premium,
-        "dau_wau_stickiness": Q.q_dau_wau_stickiness,
-        "copurchase_degree_dist": Q.q_copurchase_degree_dist,
-        "event_interarrival_profile": Q.q_event_interarrival_profile,
-        "user_type_diversity": Q.q_user_type_diversity,
-        "supplier_balance_bands": Q.q_supplier_balance_bands,
-        "customer_tenure_value": Q.q_customer_tenure_value,
-        "order_line_hhi": Q.q_order_line_hhi,
-        "stock_cover_days": Q.q_stock_cover_days,
-        "shingle_df_profile": Q.q_shingle_df_profile,
-        "nation_balance_flow": Q.q_nation_balance_flow,
-        "top_customer_per_nation": Q.q_top_customer_per_nation,
-        "event_type_transitions": Q.q_event_type_transitions,
-        "part_supplier_breadth": Q.q_part_supplier_breadth,
-        "source_length_percentiles": Q.q_source_length_percentiles,
-        "second_purchase_latency": Q.q_second_purchase_latency,
-        "returns_by_discount_band": Q.q_returns_by_discount_band,
-        "embedding_label_margin": Q.q_embedding_label_margin,
-        "winnow_fingerprint_density": Q.q_winnow_fingerprint_density,
-        "fingerprint_matches": Q.q_fingerprint_matches,
-        "copurchase_kcore_hist": Q.q_copurchase_kcore_hist,
-        "pq_adc_topk": Q.q_pq_adc_topk,
-        "int8_cosine_topk": Q.q_int8_cosine_topk,
-        # last green: r13
-        "supplier_cosupply_pairs": Q.q_supplier_cosupply_pairs,
-        "brand_quantity_mode": Q.q_brand_quantity_mode,
-        "sku_seasonality_strength": Q.q_sku_seasonality_strength,
-        "customer_dow_habit": Q.q_customer_dow_habit,
-        "session_size_histogram": Q.q_session_size_histogram,
-        "event_type_peak_hour": Q.q_event_type_peak_hour,
-        "source_genericness": Q.q_source_genericness,
-        "embedding_dim_correlations": Q.q_embedding_dim_correlations,
-        "brand_nation_price_spread": Q.q_brand_nation_price_spread,
-        "monthly_aov_trend": Q.q_monthly_aov_trend,
-        "brand_top_supplier_share": Q.q_brand_top_supplier_share,
-        "user_activity_deciles": Q.q_user_activity_deciles,
-        "nation_rank_trajectory": Q.q_nation_rank_trajectory,
-        "brand_backorder_exposure": Q.q_brand_backorder_exposure,
-        "customer_order_regularity": Q.q_customer_order_regularity,
-        "label_separation_matrix": Q.q_label_separation_matrix,
-        "order_rank_value_curve": Q.q_order_rank_value_curve,
-        "new_sku_revenue_share": Q.q_new_sku_revenue_share,
-        "order_status_profile": Q.q_order_status_profile,
-        "event_value_coverage": Q.q_event_value_coverage,
-        "embedding_dim_occupancy": Q.q_embedding_dim_occupancy,
-        "basket_brand_breadth": Q.q_basket_brand_breadth,
-        "customer_brand_breadth": Q.q_customer_brand_breadth,
-        "order_calendar_coverage": Q.q_order_calendar_coverage,
-        "user_entry_exit_matrix": Q.q_user_entry_exit_matrix,
-        "inverted_interval_audit": Q.q_inverted_interval_audit,
-        "value_priority_matrix": Q.q_value_priority_matrix,
-        "region_quarter_matrix": Q.q_region_quarter_matrix,
-        "supplier_return_rate": Q.q_supplier_return_rate,
-        "dup_rate_by_length": Q.q_dup_rate_by_length,
-        "balance_spend_correlation": Q.q_balance_spend_correlation,
-        "unit_price_inflation": Q.q_unit_price_inflation,
-        "jaccard_band_histogram": Q.q_jaccard_band_histogram,
-        "brand_type_matrix": Q.q_brand_type_matrix,
-        "name_key_consistency": Q.q_name_key_consistency,
-        "weekday_latency_profile": Q.q_weekday_latency_profile,
-        "source_signature_bigram": Q.q_source_signature_bigram,
-        "source_opening_diversity": Q.q_source_opening_diversity,
-        "label_radius_profile": Q.q_label_radius_profile,
-        "basket_size_trend": Q.q_basket_size_trend,
-        "spend_latency_bias": Q.q_spend_latency_bias,
-        "order_weekend_premium": Q.q_order_weekend_premium,
-        "dau_anomaly_days": Q.q_dau_anomaly_days,
-        "event_type_user_overlap": Q.q_event_type_user_overlap,
-        "annual_customer_retention": Q.q_annual_customer_retention,
-        "sku_price_drift_mix": Q.q_sku_price_drift_mix,
-        "embedding_exact_dups": Q.q_embedding_exact_dups,
-        "repeated_part_lines_audit": Q.q_repeated_part_lines_audit,
-        "hourly_value_profile": Q.q_hourly_value_profile,
-        "priority_value_profile": Q.q_priority_value_profile,
-        # last green: r14
-        "brand_demand_acf": Q.q_brand_demand_acf,
-        "customer_entry_brand_loyalty": Q.q_customer_entry_brand_loyalty,
-        "minhash_pairs": Q.q_minhash_pairs,
-        "weighted_sample": Q.q_weighted_sample,
-        "stratified_sample": Q.q_stratified_sample,
-        "ann_topk": Q.q_ann_topk,
-        "mmr_diverse_topk": Q.q_mmr_diverse_topk,
-        "ivf_topk": Q.q_ivf_topk,
-        "embed_neardup_lsh": Q.q_embed_neardup_lsh,
-        "copurchase_kcore": Q.q_copurchase_kcore,
-        "copurchase_communities": Q.q_copurchase_communities,
-        "alert_throttle": Q.q_alert_throttle,
-        "ann_recall": Q.q_ann_recall,
-        "image_phash_neardup": Q.q_image_phash_neardup,
-        "bpe_merges": Q.q_bpe_merges,
-        "bpe_compression_by_source": Q.q_bpe_compression_by_source,
-        "dim_products": Q.q_dim_products,
-        "market_share": Q.q_market_share,
-        "nation_profit": Q.q_nation_profit,
-        "image_dims": Q.q_image_dims,
-        "order_priority_check": Q.q_order_priority_check,
-        "disjunctive_revenue": Q.q_disjunctive_revenue,
-        "supplier_variety": Q.q_supplier_variety,
-        "contamination_check": Q.q_contamination_check,
-        "doc_repetition": Q.q_doc_repetition,
-        "priority_class_lines": Q.q_priority_class_lines,
-        "weekly_retention": Q.q_weekly_retention,
-        "segment_top_percentile": Q.q_segment_top_percentile,
-        "table_profile": Q.q_table_profile,
-        "sku_sale_gaps": Q.q_sku_sale_gaps,
-        "decontaminated_split": Q.q_decontaminated_split,
-        "parts_above_brand_avg": Q.q_parts_above_brand_avg,
-        "sales_grouping_sets": Q.q_sales_grouping_sets,
-        "shipping_priority": Q.q_shipping_priority,
-        "customer_spend_quartiles": Q.q_customer_spend_quartiles,
-        "events_hourly": Q.q_events_hourly,
-        "events_sessionize": Q.q_events_sessionize,
-        "events_json": Q.q_events_json,
-        "daily_active_users": Q.q_daily_active_users,
-        "events_daily_from_hourly": Q.q_events_daily_from_hourly,
-        "events_sessionize_native": Q.q_events_sessionize_native,
-        "event_value_percentiles": Q.q_event_value_percentiles,
-        "signup_purchase_funnel": Q.q_signup_purchase_funnel,
-        "sku_sales_salted": Q.q_sku_sales_salted,
-        "stock_asof": Q.q_stock_asof,
-        "orders_in_promos": Q.q_orders_in_promos,
-        "top_part_per_brand": Q.q_top_part_per_brand,
-        "text_stats": Q.q_text_stats,
-        "lang_rollup": Q.q_lang_rollup,
-        "langid": Q.q_langid,
-        # last green: r15
-        "dedup_exact": Q.q_dedup_exact,
-        "doc_chunks": Q.q_doc_chunks,
-        "simhash": Q.q_simhash,
-        "simhash_neardup": Q.q_simhash_neardup,
-        "jaccard_pairs": Q.q_jaccard_pairs,
-        "dedup_groups": Q.q_dedup_groups,
-        "multimodal_features": Q.q_multimodal_features,
-        "lm_score": Q.q_lm_score,
-        "top_tokens": Q.q_top_tokens,
-        "corpus_filter": Q.q_corpus_filter,
-        "doclen_histogram": Q.q_doclen_histogram,
-        "sim_topk": Q.q_sim_topk,
-        "label_centroid_sim": Q.q_label_centroid_sim,
-        "embed_neardup": Q.q_embed_neardup,
-        "rolling_fingerprint": Q.q_rolling_fingerprint,
-        "sku_moving_avg": Q.q_sku_moving_avg,
-        "token_budget": Q.q_token_budget,
-        "copurchase_pairs": Q.q_copurchase_pairs,
-        "name_match_candidates": Q.q_name_match_candidates,
-        "stock_twa": Q.q_stock_twa,
-        "brand_trend": Q.q_brand_trend,
-        "winsorized_stats": Q.q_winsorized_stats,
-        "dau_bitmap_merge": Q.q_dau_bitmap_merge,
-        "repeated_spans": Q.q_repeated_spans,
-        "token_dist_drift": Q.q_token_dist_drift,
-        "tfidf_keywords": Q.q_tfidf_keywords,
-        "epoch_shuffle": Q.q_epoch_shuffle,
-        "k_anonymity": Q.q_k_anonymity,
-        "curation_summary": Q.q_curation_summary,
-        "events_sliding": Q.q_events_sliding,
-        "funnel_latency": Q.q_funnel_latency,
-        "events_variant": Q.q_events_variant,
-        "audio_meta": Q.q_audio_meta,
-        "frame_meta": Q.q_frame_meta,
-        "join_view_merge": Q.q_join_view_merge,
-        "dedup_incremental": Q.q_dedup_incremental,
-        "table_time_travel": Q.q_table_time_travel,
-        "table_cdf": Q.q_table_cdf,
-        "table_history": Q.q_table_history,
-        "abc_classification": Q.q_abc_classification,
-        "reorder_points": Q.q_reorder_points,
-        "user_state_history": Q.q_user_state_history,
-        "abc_xyz_matrix": Q.q_abc_xyz_matrix,
-        "zorder_curve": Q.q_zorder_curve,
-        "part_hierarchy_rollup": Q.q_part_hierarchy_rollup,
-        "stock_gap_fill": Q.q_stock_gap_fill,
-        "table_after_dml": Q.q_table_after_dml,
-        "key_skew_profile": Q.q_key_skew_profile,
-        "incremental_hourly_merge": Q.q_incremental_hourly_merge,
-        "embed_contamination": Q.q_embed_contamination,
-        # --- rows-only entries (driver evidence already on file;
-        # value-level parity pinned by tests/test_oracle_parity.py,
-        # bit-exact by tools/strict_parity.py) ---------------------
-        "semantic_dedup": Q.q_semantic_dedup,
-        "dau_sketch_merge": Q.q_dau_sketch_merge,
-        "pq_index_topk": Q.q_pq_index_topk,
-        "pq_index_append_topk": Q.q_pq_index_append_topk,
-        "minhash_ml_pairs": Q.q_minhash_ml_pairs,
-        "daily_active_users_approx": Q.q_daily_active_users_approx,
-        "value_quantile_sketch": Q.q_value_quantile_sketch,
-        "customer_spend_quartiles_approx": Q.q_customer_spend_quartiles_approx,
-    }
+    return dict(_attestation_order())
 
 
 # --- DuckDB oracle SQL --------------------------------------------------

@@ -4,20 +4,15 @@ import os
 import re
 from pathlib import Path
 
-import duckdb
 import pytest
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.session import (
     build_session,
 )
+from tools.strict_parity import _rows, compare, duckdb_views
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 ORACLE_SF = os.environ.get("SPARK_GRAFT_ORACLE_SF", TESTDATA)
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -44,11 +39,7 @@ def on_both_routes(run):
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{ORACLE_SF}/{t}.parquet"
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    con = duckdb_views(ORACLE_SF)
     yield con
     con.close()
 
@@ -68,35 +59,13 @@ def _norm_cell(v):
 
 
 def normalized_rows(cols, rows):
-    """Order-insensitive, column-name-sorted row multiset (mirrors the
-    driver's compare: sort columns by name, hash values)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda t: tuple(repr(x) for x in t))
+    """The driver-compare row multiset under the rounded cell rule."""
+    return _rows(cols, rows, _norm_cell)
 
 
 def compare_query(spark, duck, qfn, sql, sf_dir):
-    # several plans persist() intermediates by design, and a returned
-    # DataFrame cannot unpersist what its own construction cached;
-    # without this, the full parametrized parity sweep accumulates
-    # every such frame in ONE session (correct under MEMORY_AND_DISK
-    # eviction, but disk spill grows across ~425 queries -- the r11
-    # ADVICE item). clearCache per compare is the harness-side
-    # contract the plan docstrings rely on; bench.py and
-    # tools/strict_parity.py apply the same isolation.
-    spark.catalog.clearCache()
-    sdf = qfn(spark, sf_dir)
-    srows = sdf.collect()
-    scols = sdf.columns
-    rel = duck.sql(sql)
-    dcols = rel.columns
-    drows = rel.fetchall()
-    assert sorted(scols) == sorted(dcols), f"columns differ: {scols} vs {dcols}"
-    assert len(srows) == len(drows), f"row count differs: {len(srows)} vs {len(drows)}"
-    sn = normalized_rows(scols, [[r[c] for c in scols] for r in srows])
-    dn = normalized_rows(dcols, drows)
-    mismatches = [(a, b) for a, b in zip(sn, dn) if a != b]
-    assert not mismatches, f"{len(mismatches)} row mismatches; first: {mismatches[:3]}"
+    """``tools/strict_parity.compare`` under the rounded cell rule."""
+    compare(spark, duck, qfn, sql, sf_dir, _norm_cell)
 
 
 # ---------------------------------------------------------------------------
@@ -106,13 +75,15 @@ def compare_query(spark, duck, qfn, sql, sf_dir):
 # window killed it at ~83% in r14, so `tests_ok` could never go green.
 # A plain `pytest tests/` now runs the FAST tier (~20 min idle): every
 # oracle-parity entry, the full 448-plan antipattern sweep (minus the
-# two index-building params below), every plan-shape guard, and every
+# two index-building params), every plan-shape guard, and every
 # round/correctness test under ~8s. The SLOW tier -- individually
 # >=8s-on-idle model-equivalence probes, PQ index-persistence e2e,
 # versioned-table DML replays, and the spark.sql-vs-DataFrame
 # 3-way sweep (kept: ten shape representatives; the DataFrame==DuckDB
 # half of that triangle is already proven per-query by
-# test_oracle_parity) -- still gates every release: run it with
+# test_oracle_parity) -- is declared at each test by
+# `@pytest.mark.slow` (or `pytest.param(..., marks=pytest.mark.slow)`)
+# and still gates every release: run it with
 #   SPARK_GRAFT_FULL_SUITE=1 python -m pytest tests/        (everything)
 #   python -m pytest tests/ -m slow                          (slow tier only)
 # and a slow test named by node id (tests/f.py::test_x) always runs.
@@ -120,62 +91,6 @@ def compare_query(spark, duck, qfn, sql, sf_dir):
 # --durations); the >=8s bar cuts the default run from ~2355s to
 # ~1185s measured.
 # ---------------------------------------------------------------------------
-
-SLOW_TESTS = {
-    "test_asof.py::test_asof_join_tolerance_nulls_stale_matches",
-    "test_asof.py::test_backward_asof",
-    "test_bpe.py::test_bpe_classic_worked_example",
-    "test_bpe.py::test_bpe_matches_python_model",
-    "test_bpe.py::test_bpe_merges_query_contract",
-    "test_bpe.py::test_bpe_oracle_replace_equals_greedy_on_runs",
-    "test_graph.py::test_label_propagation_deterministic_replay",
-    "test_graph.py::test_label_propagation_matches_python_model_random_graphs",
-    "test_layout.py::test_delete_where_rewrites_only_touched_files",
-    "test_plan_sweep.py::test_no_silent_antipatterns[pq_index_append_topk]",
-    "test_plan_sweep.py::test_no_silent_antipatterns[pq_index_topk]",
-    "test_properties.py::test_asof_join_matches_pandas_merge_asof",
-    "test_properties.py::test_banded_cumsum_equals_global_window_with_nulls",
-    "test_properties.py::test_class_lm_predictions_match_exact_python_model",
-    "test_properties.py::test_connected_components_matches_union_find",
-    "test_properties.py::test_prefix_jaccard_equals_full_join_on_random_corpora",
-    "test_properties.py::test_skyline_algebra_matches_dominance_definition",
-    "test_round10_queries.py::test_pq_append_encodes_under_existing_codebook",
-    "test_round10_queries.py::test_pq_append_is_associative_and_idempotent_to_read",
-    "test_rows_only_queries.py::test_semantic_dedup_contract_and_planted_duplicates",
-    "test_rows_only_queries.py::test_weighted_sample_deterministic_pps_and_zero_weight_excluded",
-    "test_scale_ops.py::test_persisted_pq_index_serves_identical_results_and_prunes",
-    "test_scale_ops.py::test_read_parquet_evolving_merges_schema_versions",
-    "test_versioned_fixture.py::test_dml_fixture_matches_real_dml_replay",
-    "test_versioned_fixture.py::test_fixture_commit_metadata_matches_real_writer",
-    "test_versioned_fixture.py::test_fixture_matches_real_writer_snapshots",
-}
-
-#: spark.sql-vs-DataFrame representatives kept in the FAST tier -- one
-#: per SQL shape family (agg+join spine, grouping sets, ntile, window
-#: top-1, rollup-from-hourly, histogram, retention self-join, scalar
-#: subquery gate, date bucketing, multimodal dims)
-SQL_FRONTEND_FAST = {
-    "market_share",
-    "region_revenue",
-    "weekly_retention",
-    "image_dims",
-    "pricing_summary",
-    "sales_grouping_sets",
-    "customer_spend_quartiles",
-    "top_part_per_brand",
-    "events_daily_from_hourly",
-    "doclen_histogram",
-}
-
-
-def _is_slow(nodeid: str) -> bool:
-    short = nodeid.split("tests/")[-1]
-    if short in SLOW_TESTS:
-        return True
-    if "::test_sql_string_matches_dataframe_api[" in short:
-        param = short.split("[", 1)[1].rstrip("]")
-        return param not in SQL_FRONTEND_FAST
-    return False
 
 
 def pytest_configure(config):
@@ -208,12 +123,10 @@ def pytest_collection_modifyitems(config, items):
     # the full suite on request, or an explicit -m expression naming the
     # `slow` mark: the caller is steering tiers themselves -- don't skip
     steered = full not in ("", "0", "false") or re.search(r"\bslow\b", markexpr)
+    if steered:
+        return
     for item in items:
-        if _is_slow(item.nodeid):
-            item.add_marker(pytest.mark.slow)
-            if not steered and not _named_on_command_line(config, item):
-                item.add_marker(
-                    pytest.mark.skip(
-                        reason="slow tier: SPARK_GRAFT_FULL_SUITE=1 or -m slow"
-                    )
-                )
+        if item.get_closest_marker("slow") and not _named_on_command_line(config, item):
+            item.add_marker(
+                pytest.mark.skip(reason="slow tier: SPARK_GRAFT_FULL_SUITE=1 or -m slow")
+            )

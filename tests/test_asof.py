@@ -32,6 +32,7 @@ def _frames(spark):
     return left, right
 
 
+@pytest.mark.slow
 def test_backward_asof(spark):
     left, right = _frames(spark)
     got = {
@@ -89,6 +90,7 @@ def test_asof_rejects_column_collision(spark):
         asof_join(left, right.withColumnRenamed("s", "v"), "k", "t", "rt")
 
 
+@pytest.mark.slow
 def test_asof_join_tolerance_nulls_stale_matches(spark):
     """merge_asof(tolerance=) parity: a backward match farther than the
     tolerance is nulled (left row kept); within-tolerance matches are

@@ -57,6 +57,7 @@ def py_apply(word: str, merges: list[tuple[str, str]]):
     return syms
 
 
+@pytest.mark.slow
 def test_bpe_classic_worked_example(spark):
     """The Sennrich paper's example corpus must learn es -> est ->
     est</w> -> lo -> low first (the published order under a
@@ -81,6 +82,7 @@ def test_bpe_classic_worked_example(spark):
     ]
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None)
 @given(
     st.dictionaries(
@@ -139,6 +141,7 @@ def test_bpe_apply_matches_python_and_is_greedy(spark):
     assert direct == direct_local == {("aa", "a", EOW)}
 
 
+@pytest.mark.slow
 def test_bpe_merges_query_contract(spark):
     """The driver entry (oracle-paired since r14): 16 rows,
     rank-ordered, deterministic across runs, monotone non-increasing
@@ -155,6 +158,7 @@ def test_bpe_merges_query_contract(spark):
     assert rows == q(spark, "/root/testdata/sf0.001").collect()
 
 
+@pytest.mark.slow
 def test_bpe_oracle_replace_equals_greedy_on_runs(spark):
     """The r14 oracle's load-bearing trick: over a DOUBLE-separator
     symbol string, one replace('|a||b|' -> '|ab|') IS the greedy

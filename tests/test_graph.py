@@ -242,6 +242,7 @@ def test_label_propagation_recovers_planted_communities(spark):
     assert groups == [list(range(6)), list(range(10, 16))]
 
 
+@pytest.mark.slow
 def test_label_propagation_deterministic_replay(spark):
     """Two runs over the same edges produce identical labelings (the
     total-order tiebreak removes LPA's classic randomness)."""
@@ -289,6 +290,7 @@ def test_copurchase_communities_conserves_parts(spark):
     assert total == len(in_graph)
 
 
+@pytest.mark.slow
 def test_label_propagation_matches_python_model_random_graphs(spark):
     """Hypothesis: on random small graphs, the Spark LPA labeling is
     identical to a synchronous python model with the same

@@ -4,6 +4,7 @@ the versioned table's copy-on-write DML measured against a
 range-clustered layout: a selective predicate rewrites only the files
 it touches."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.layout import (
@@ -73,6 +74,7 @@ def test_zorder_curve_query_is_topk(spark):
     )
 
 
+@pytest.mark.slow
 def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     """Copy-on-write DELETE over a range-clustered layout: a selective
     predicate touches only the files whose key range intersects it,

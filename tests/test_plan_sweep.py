@@ -123,7 +123,12 @@ PYTHON_OK = {
     "heavy_hitter_tokens",  # sanctioned mapInPandas Misra-Gries candidate summaries
 }
 
-QUERIES = sorted(entry.queries())
+#: index-building entries whose sweep belongs to the slow tier
+SLOW = {"pq_index_topk", "pq_index_append_topk"}
+QUERIES = [
+    pytest.param(n, marks=pytest.mark.slow) if n in SLOW else n
+    for n in sorted(entry.queries())
+]
 
 
 @pytest.mark.parametrize("name", QUERIES)

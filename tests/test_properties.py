@@ -3,6 +3,7 @@ independently-computed Python ground truth."""
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -47,6 +48,7 @@ def _union_find_truth(edges):
     return out
 
 
+@pytest.mark.slow
 @SLOW
 @given(
     edges=st.lists(
@@ -171,6 +173,7 @@ def test_integer_type7_quantile_matches_numpy(xs, k):
     assert abs(t20 / 20 - expected) <= 1e-9 * max(1.0, abs(expected))
 
 
+@pytest.mark.slow
 @given(
     st.lists(
         st.tuples(st.integers(0, 3), st.integers(0, 50)), min_size=1, max_size=25
@@ -239,6 +242,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, left_rows, right_rows):
         assert got == exp, direction
 
 
+@pytest.mark.slow
 @SLOW
 @given(
     rows=st.lists(
@@ -327,6 +331,7 @@ def test_triangle_participation_matches_bruteforce(spark, edges):
     assert got == want
 
 
+@pytest.mark.slow
 @SLOW
 @given(
     texts=st.lists(
@@ -360,6 +365,7 @@ def test_prefix_jaccard_equals_full_join_on_random_corpora(spark, texts):
     assert pref == full
 
 
+@pytest.mark.slow
 @SLOW
 @given(
     docs=st.lists(
@@ -519,6 +525,7 @@ def test_hamming_neardup_pairs_match_bruteforce(spark, sigs):
     assert got == want
 
 
+@pytest.mark.slow
 @SLOW
 @given(
     pts=st.sets(

@@ -9,7 +9,8 @@ when the module is imported). From a reached node the walk follows every
 every identifier-shaped string constant (``getattr`` lookups and name
 registries), matching definitions by bare name across the package. The
 roots are ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
-``perfbench/``; ``tests/`` is not a root.
+``perfbench/``, plus every ``queries.py:q_*`` definition, which
+``queries()`` registers by its prefix; ``tests/`` is not a root.
 """
 
 import ast
@@ -123,12 +124,13 @@ def package_graph():
     return defs, modules
 
 
-def closure(paths, defs, modules):
-    """The definitions and modules reached from the files at ``paths``."""
+def closure(paths, defs, modules, names=()):
+    """The definitions and modules reached from the files at ``paths``
+    and from the definitions called ``names``."""
     by_name = {}
     for key in defs:
         by_name.setdefault(key.rsplit(":", 1)[1], []).append(key)
-    names, mods = set(), set()
+    names, mods = set(names), set()
     for path in paths:
         n, m = _refs([_parse(path)], "")
         names |= n
@@ -169,7 +171,8 @@ def unshipped():
     """``(definitions, modules)`` of the package that production code
     does not reach: what only tests reach, plus what nothing reaches."""
     defs, modules = package_graph()
-    prod_defs, prod_mods = closure(_production_files(), defs, modules)
+    registered = [k.split(":")[1] for k in defs if k.startswith("queries.py:q_")]
+    prod_defs, prod_mods = closure(_production_files(), defs, modules, registered)
     return sorted(set(defs) - prod_defs), sorted(set(modules) - prod_mods)
 
 

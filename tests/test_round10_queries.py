@@ -115,6 +115,7 @@ def _codes_set(spark, idx):
     }
 
 
+@pytest.mark.slow
 def test_pq_append_encodes_under_existing_codebook(spark, tmp_path):
     """append(build(A), B) must produce EXACTLY the codes that a
     one-shot encode of A+B under A's codebook would: the codebook and
@@ -170,6 +171,7 @@ def test_pq_append_encodes_under_existing_codebook(spark, tmp_path):
     assert _codes_set(spark, grown) == before | want_new and want_new
 
 
+@pytest.mark.slow
 def test_pq_append_is_associative_and_idempotent_to_read(spark, tmp_path):
     """Two half-appends == one full append (codes-set equality), and a
     crash-retried DOUBLE append changes nothing the serve path can

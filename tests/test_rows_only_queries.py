@@ -1,6 +1,8 @@
 """Smoke for queries with no SQL oracle (seeded hash families): they
 must run, return stable schemas, and be deterministic across invocations."""
 
+import pytest
+
 import __spark_entry__ as entry
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark import (
@@ -198,6 +200,7 @@ def test_pagerank_query_deterministic_and_ranked(spark):
     assert all(r > 0 for r in ranks)
 
 
+@pytest.mark.slow
 def test_weighted_sample_deterministic_pps_and_zero_weight_excluded(spark):
     """Sequential-Poisson contract (oracle-paired since r13; this test
     keeps the SAMPLING-QUALITY properties the hash-check can't
@@ -270,6 +273,7 @@ def test_pq_index_survives_tiny_corpus(spark, tmp_path):
     assert len(rows) == 5 and rows[0].vec_id == 0
 
 
+@pytest.mark.slow
 def test_semantic_dedup_contract_and_planted_duplicates(spark):
     """sf data: every vector dispositioned exactly once, deterministic
     rerun (the random corpus has no cosine>0.95 pairs, so all keep --

@@ -6,6 +6,7 @@ isolation."""
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.operators.skew import (
@@ -291,6 +292,7 @@ def test_dynamic_partition_pruning_prunes_fact_partitions(spark, tmp_path):
     assert joined.collect()[0].n == 2000
 
 
+@pytest.mark.slow
 def test_read_parquet_evolving_merges_schema_versions(spark, tmp_path):
     """Schema evolution contract: a staging zone whose later files
     carry an added column reads as the UNION schema, old files
@@ -613,6 +615,7 @@ def test_runtime_bloom_filter_fires_at_scale(spark):
         )
 
 
+@pytest.mark.slow
 def test_persisted_pq_index_serves_identical_results_and_prunes(
     spark, tmp_path
 ):

@@ -665,7 +665,31 @@ NONPORTABLE = {
 }
 
 
-@pytest.mark.parametrize("name", PORTABLE)
+#: spark.sql-vs-DataFrame representatives kept in the fast tier -- one
+#: per SQL shape family (agg+join spine, grouping sets, ntile, window
+#: top-1, rollup-from-hourly, histogram, retention self-join, scalar
+#: subquery gate, date bucketing, multimodal dims); the rest are slow
+SQL_FRONTEND_FAST = {
+    "market_share",
+    "region_revenue",
+    "weekly_retention",
+    "image_dims",
+    "pricing_summary",
+    "sales_grouping_sets",
+    "customer_spend_quartiles",
+    "top_part_per_brand",
+    "events_daily_from_hourly",
+    "doclen_histogram",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        n if n in SQL_FRONTEND_FAST else pytest.param(n, marks=pytest.mark.slow)
+        for n in PORTABLE
+    ],
+)
 def test_sql_string_matches_dataframe_api(spark, name):
     register_views(spark, TESTDATA)
     sql_df = spark.sql(entry.oracle_sql()[name])

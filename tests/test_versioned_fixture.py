@@ -10,6 +10,7 @@ snapshot is row-identical, and that the commit metadata (parent, mode,
 file count) matches.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.plans.fixtures import (
@@ -39,6 +40,7 @@ def _replay(spark, path):
     return path
 
 
+@pytest.mark.slow
 def test_fixture_matches_real_writer_snapshots(spark, tmp_path):
     fix = ensure_versioned_fixture()
     real = _replay(spark, str(tmp_path / "replayed"))
@@ -48,6 +50,7 @@ def test_fixture_matches_real_writer_snapshots(spark, tmp_path):
         ), f"fixture snapshot v{v} drifted from write_versioned output"
 
 
+@pytest.mark.slow
 def test_fixture_commit_metadata_matches_real_writer(spark, tmp_path):
     fix = ensure_versioned_fixture()
     real = _replay(spark, str(tmp_path / "replayed"))
@@ -74,6 +77,7 @@ def test_fixture_cdf_is_full_replacement(spark):
     ]
 
 
+@pytest.mark.slow
 def test_dml_fixture_matches_real_dml_replay(spark, tmp_path):
     """The hand-built DML fixture must be row-identical, per VERSION,
     to what the real delete_where / update_where / merge_into produce

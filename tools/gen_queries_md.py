@@ -1,7 +1,8 @@
-"""Generate QUERIES.md: one line per queries() entry -- name, oracle
-kind, and the first sentence of its docstring -- the index a reviewer
-reads before the code. Deterministic output; rerun after adding
-entries:
+"""Generate QUERIES.md: one line per queries() entry, in ``queries.py``
+definition order -- name, oracle kind, and the first sentence of its
+docstring -- the index a reviewer reads before the code. Deterministic
+output (a new CORRECTNESS artifact reorders ``queries()`` but not this
+index); rerun after adding entries:
 
     python tools/gen_queries_md.py          # writes QUERIES.md in place
 
@@ -36,16 +37,15 @@ def first_sentence(doc: str | None) -> str:
 
 
 def render() -> str:
-    qs = entry.queries()
+    qs = entry._defined()
     oracles = entry.oracle_sql()
     lines = [
         "# QUERIES — the full `queries()` surface",
         "",
         f"{len(qs)} entries: {len(oracles)} oracle-paired "
         "(value-attested vs DuckDB), the rest rows-only by design "
-        "(seeded-hash / sketch / iterative families with pytest twins). "
-        "Ordering = the driver attestation window contract "
-        "(least-recently-attested first). Generated by "
+        "(seeded-hash / sketch / iterative families with pytest twins), "
+        "in `queries.py` definition order. Generated by "
         "`tools/gen_queries_md.py`.",
         "",
         "| # | entry | oracle | what it computes |",

@@ -1,11 +1,12 @@
-"""Attestation-window rotation validator.
+"""Attestation-window rotation: the order rules and their validator.
 
 The driver records correctness for only the FIRST 50 ``queries()``
 entries each round, so the dict's ordering is a contract: the window
-must hold the least-recently-attested oracle-paired entries. Manual
-rotation has been the per-round failure mode this guards against --
-this tool recomputes, from the ``CORRECTNESS_r*.json`` artifacts
-actually on disk, when each entry was last green, and checks:
+must hold the least-recently-attested oracle-paired entries.
+``order`` derives that ordering from the ``CORRECTNESS_r*.json``
+artifacts actually on disk (``__spark_entry__.queries()`` is built by
+it), and ``check`` recomputes, from the same artifacts, when each entry
+was last green and checks:
 
 1. every oracle-paired entry with NO green row anywhere sits inside
    the window (never-attested first -- the whole point of rotating);
@@ -49,7 +50,8 @@ def last_attested(repo: str = REPO) -> tuple[dict[str, int], dict[str, int]]:
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         rnd = int(os.path.basename(path)[13:-5])
         try:
-            d = json.load(open(path))
+            with open(path) as f:
+                d = json.load(f)
         except Exception:  # noqa: BLE001 -- tolerate a malformed artifact
             continue
         for q, row in d.items():
@@ -60,6 +62,27 @@ def last_attested(repo: str = REPO) -> tuple[dict[str, int], dict[str, int]]:
             )
             (green if ok else red)[q] = max((green if ok else red).get(q, -1), rnd)
     return green, red
+
+
+def order(names: list[str], paired: set[str], repo: str = REPO) -> list[str]:
+    """``names`` stably sorted into the attestation order ``check``
+    accepts: never-attested entries (paired ones with no green row,
+    rows-only ones with no driver row at all), then paired entries whose
+    last driver verdict was red, then the other paired entries by their
+    last green round, oldest first, then rows-only entries that already
+    have driver evidence."""
+    green, red = last_attested(repo)
+
+    def rank(q: str) -> tuple[int, int]:
+        if q not in green and (q in paired or q not in red):
+            return (0, 0)
+        if q not in paired:
+            return (3, 0)
+        if red.get(q, -1) >= green[q]:
+            return (1, 0)
+        return (2, green[q])
+
+    return sorted(names, key=rank)
 
 
 def last_green(repo: str = REPO) -> dict[str, int]:

@@ -1,7 +1,10 @@
-"""Strict (bit-exact) Spark-vs-DuckDB parity checker.
+"""Strict (bit-exact) Spark-vs-DuckDB parity checker, and the compare
+path the pytest parity mirror shares.
 
-The pytest mirror (`tests/conftest.py::_norm_cell`) rounds floats to
-6dp, which once masked a driver-side `hash_match=false` (`lm_score`,
+``compare`` runs one entry on both engines and compares column names,
+row counts and rows of canonical cells; the caller picks the cell
+rule. The pytest mirror (`tests/conftest.py::_norm_cell`) rounds floats
+to 6dp, which once masked a driver-side `hash_match=false` (`lm_score`,
 round 4).  This tool is the paranoid twin: NO float rounding -- cells
 must agree on exact ``repr`` (floats compared by bit pattern via
 ``struct.pack``), Decimals compared as exact strings.  Run it at the
@@ -30,11 +33,9 @@ import __spark_entry__ as entry  # noqa: E402
 from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.session import (  # noqa: E402
     build_session,
 )
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from retail_inventory_reconciliation_batch_etl_pipeline_on_aws__spark.sql import (  # noqa: E402
+    TABLES,
+)
 
 
 def _strict_cell(v):
@@ -59,10 +60,51 @@ def _strict_cell(v):
     return v
 
 
-def _rows(cols, rows):
+def _rows(cols, rows, cell=_strict_cell):
+    """Order-insensitive, column-name-sorted row multiset of ``cell``
+    values (mirrors the driver's compare: sort columns by name, hash
+    values)."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_strict_cell(r[i]) for i in order) for r in rows]
+    out = [tuple(cell(r[i]) for i in order) for r in rows]
     return sorted(out, key=lambda t: tuple(repr(x) for x in t))
+
+
+def duckdb_views(sf_dir):
+    """A DuckDB connection with each testdata table under ``sf_dir`` as a
+    view named after itself."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare(spark, con, qfn, sql, sf_dir, cell=_strict_cell):
+    """Raises AssertionError unless ``qfn`` over ``sf_dir`` and ``sql``
+    on ``con`` give the same column names and the same rows of ``cell``
+    values; returns the row count."""
+    # several plans persist() intermediates by design and a returned
+    # DataFrame cannot unpersist them itself; without this, a full
+    # 448-entry sweep accumulates every cached frame in one session
+    # (MEMORY_AND_DISK eviction keeps results correct but disk spill
+    # grows unboundedly -- the r11 ADVICE item). Same isolation
+    # bench.py applies.
+    spark.catalog.clearCache()
+    sdf = qfn(spark, sf_dir)
+    scols = sdf.columns
+    srows = [[r[c] for c in scols] for r in sdf.collect()]
+    rel = con.sql(sql)
+    dcols, drows = rel.columns, rel.fetchall()
+    if sorted(scols) != sorted(dcols):
+        raise AssertionError(f"columns differ: {sorted(scols)} vs {sorted(dcols)}")
+    if len(srows) != len(drows):
+        raise AssertionError(f"row count differs: {len(srows)} vs {len(drows)}")
+    sn, dn = _rows(scols, srows, cell), _rows(dcols, drows, cell)
+    bad = [(a, b) for a, b in zip(sn, dn) if a != b]
+    if bad:
+        raise AssertionError(f"{len(bad)} cell mismatches; first: {bad[:3]}")
+    return len(srows)
 
 
 def main() -> int:
@@ -73,11 +115,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = build_session(app_name="strict-parity", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{args.sf}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duckdb_views(args.sf)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -89,29 +127,8 @@ def main() -> int:
             print(f"{name:28s} rows-only (no oracle) -- skipped")
             continue
         try:
-            # several plans persist() intermediates by design and a
-            # returned DataFrame cannot unpersist them itself; without
-            # this, a full 447-entry sweep accumulates every cached
-            # frame in one session (MEMORY_AND_DISK eviction keeps
-            # results correct but disk spill grows unboundedly -- the
-            # r11 ADVICE item). Same isolation bench.py applies.
-            spark.catalog.clearCache()
-            sdf = qs[name](spark, args.sf)
-            scols = sdf.columns
-            srows = [[r[c] for c in scols] for r in sdf.collect()]
-            rel = con.sql(oracles[name])
-            dcols, drows = rel.columns, rel.fetchall()
-            if sorted(scols) != sorted(dcols):
-                raise AssertionError(f"columns {sorted(scols)} vs {sorted(dcols)}")
-            if len(srows) != len(drows):
-                raise AssertionError(f"rowcount {len(srows)} vs {len(drows)}")
-            sn, dn = _rows(scols, srows), _rows(dcols, drows)
-            bad = [(a, b) for a, b in zip(sn, dn) if a != b]
-            if bad:
-                raise AssertionError(
-                    f"{len(bad)} strict cell mismatches; first: {bad[0]}"
-                )
-            print(f"{name:28s} OK ({len(srows)} rows)")
+            n = compare(spark, con, qs[name], oracles[name], args.sf)
+            print(f"{name:28s} OK ({n} rows)")
         except Exception as e:  # noqa: BLE001 -- report-and-continue tool
             failed.append(name)
             print(f"{name:28s} FAIL: {str(e)[:300]}")
